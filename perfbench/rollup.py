@@ -5,8 +5,9 @@ The benchmark process records, for each traced pass, spans
 report (jobs, stages, tasks, SQL operator metrics, streaming progress,
 JVM memory). Each event carries the tag `pass/query/phase` that was current
 when it was processed; jobs also carry the job group the benchmark set.
-See perfbench/layers.json for what each metric means and which end-to-end
-metric it should move.
+BENCHMARK.json names the metrics with their units and directions;
+perfbench/layers.json says what each one means and which end-to-end metric
+it should move.
 """
 import statistics
 
@@ -151,8 +152,7 @@ def per_query(trace):
     result = {}
     for p, queries in out.items():
         for q, d in queries.items():
-            m = {k: 0 for k in COUNTED}
-            m.update(d["counts"])
+            m = dict(d["counts"])
             m["operators.build_s"] = d["build_s"]
             m["operators.build_self_s"] = sum(self_time(iv, d["job_iv"]["build"]) for iv in d["build_iv"]) / 1000
             m["catalyst.plan_s"] = d["plan_s"]
@@ -161,19 +161,6 @@ def per_query(trace):
             m["_execute_s"] = d["execute_s"]
             result.setdefault(p, {})[q] = m
     return result
-
-
-COUNTED = [
-    "operators.build_jobs", "operators.build_result_mb",
-    "scheduler.jobs", "scheduler.stages", "scheduler.tasks", "scheduler.single_task_stages",
-    "executor.run_s", "executor.cpu_s", "executor.gc_s",
-    "shuffle.write_mb", "shuffle.read_mb", "shuffle.fetch_wait_s", "shuffle.spill_mb",
-    "sources.scan_rows", "sources.scan_mb", "sources.scan_s",
-    "sql.agg_s", "sql.sort_s", "sql.codegen_s",
-    "streaming.batches", "streaming.trigger_s", "streaming.planning_s", "streaming.add_batch_s",
-    "streaming.commit_s", "streaming.state_commit_s",
-    "driver.result_mb",
-]
 
 
 def pass_totals(queries, jvm_row, cores):
@@ -192,16 +179,19 @@ def pass_totals(queries, jvm_row, cores):
     return tot
 
 
-def rollup(trace, cores):
-    """(metrics, per-query metrics), each the median over traced passes."""
+def rollup(trace, cores, names):
+    """(metrics, per-query metrics), each the median over traced passes of
+    the metrics in `names`; a metric no event reported is 0. Per query
+    there are only the metrics some query has (not the pass-level ones)."""
     pq = per_query(trace)
     jvm = {r["pass"]: r for r in _rows(trace, "jvm")}
     passes = sorted(p for p in jvm)
     totals = [pass_totals(pq.get(p, {}), jvm[p], cores) for p in passes]
-    metrics = {k: statistics.median(t[k] for t in totals) for k in totals[0]} if totals else {}
-    names = sorted({q for p in passes for q in pq.get(p, {})})
+    metrics = {k: statistics.median(t.get(k, 0) for t in totals) for k in names} if totals else {}
+    rows = [(q, m) for p in passes for q, m in pq.get(p, {}).items()]
+    per_q = [k for k in names if any(k in m for _, m in rows)]
     queries = {}
-    for q in names:
-        rows = [pq[p][q] for p in passes if q in pq.get(p, {})]
-        queries[q] = {k: statistics.median(r[k] for r in rows) for k in rows[0] if not k.startswith("_")}
+    for q in sorted({q for q, _ in rows}):
+        mine = [m for name, m in rows if name == q]
+        queries[q] = {k: statistics.median(m.get(k, 0) for m in mine) for k in per_q}
     return metrics, queries

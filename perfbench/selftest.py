@@ -3,7 +3,9 @@
     python3 perfbench/selftest.py          # arithmetic checks, then one short benchmark run
     python3 perfbench/selftest.py --quick  # arithmetic checks only
 
-1. Span self-time arithmetic and the trace rollup on a synthetic trace.
+1. Span self-time arithmetic and the trace rollup on a synthetic trace, and
+   that perfbench/layers.json describes exactly BENCHMARK.json's per-layer
+   metrics.
 2. A corrupted recorded hash is counted as a failed execution: first through
    the comparison function, then through a real run of the benchmark whose
    expected-output file has one hash flipped.
@@ -70,7 +72,9 @@ def synthetic_trace():
 
 
 def check_rollup():
-    metrics, queries = rollup.rollup(synthetic_trace(), cores=2)
+    names = [m["name"] for m in run.bench_config()["per_layer"]]
+    assert set(run.load_json(os.path.join(run.HERE, "layers.json"))["per_layer"]) == set(names)
+    metrics, queries = rollup.rollup(synthetic_trace(), 2, names)
     expect = {
         "operators.build_s": 0.110,
         # a: 100 - (30 + 20) covered by its two build-phase jobs; b: 10.
@@ -92,10 +96,10 @@ def check_rollup():
         "streaming.add_batch_s": 0.010, "streaming.commit_s": 0.003, "streaming.state_commit_s": 0.002,
         "driver.result_mb": 4.0, "driver.gc_s": 0.009, "driver.heap_peak_mb": 500.0,
     }
+    # trace.overhead_s compares traced with untraced passes; run.py sets it.
+    assert set(names) - set(expect) == {"trace.overhead_s"}, set(names) - set(expect)
     for k, v in expect.items():
         assert abs(metrics[k] - v) < 1e-9, f"{k}: got {metrics[k]}, expected {v}"
-    missing = set(run.load_json(os.path.join(run.HERE, "layers.json"))["per_layer"]) - set(metrics)
-    assert missing == {"trace.overhead_s"}, missing
     assert queries["b"]["operators.build_s"] == 0.010 and queries["b"]["scheduler.jobs"] == 0
 
 

@@ -14,17 +14,18 @@ import org.apache.spark.sql.types.StructType
   * Modes (first argument):
   *  - `bench`: one output-check pass (collect and hash, which is also
   *    the cold pass), warm-up passes until the pass-to-pass change in
-  *    pass wall time is within `--plateau`, then timed passes for
-  *    `--seconds`, each preceded by a host-speed calibration. With
-  *    `--trace 1` the timed passes alternate untraced and traced, so
-  *    the trace overhead is measured in the same process.
+  *    pass wall time is within `--plateau` (at most `MaxWarm` passes),
+  *    then timed passes for `--seconds`, each followed by a host-speed
+  *    probe that is only recorded. With `--trace 1` the timed passes
+  *    alternate untraced and traced, so the trace overhead is measured
+  *    in the same process.
   *  - `record`: run each query once and write its row count, content
   *    hash and DuckDB oracle SQL, plus its rows as parquet for the
   *    oracle comparison.
   *
   * Arguments: `--queries a,b,c` (in pass order), `--data <dir>`,
   * `--out <result json>`, `--cpus <n>`, and for `bench` `--seconds`,
-  * `--trace`, `--plateau`, `--min-warm`, `--max-warm`; for `record`
+  * `--trace`, `--plateau`; for `record`
   * `--dump <dir>`. Everything the caller needs comes back in the
   * result file; stdout carries nothing. */
 object Main {
@@ -43,8 +44,7 @@ object Main {
     val run = new Runner(spark, queries.map(q => q -> registry(q)), opt("data"))
     val body =
       try mode match {
-        case "bench" => run.bench(opt("seconds").toDouble, opt("trace") == "1", opt("plateau").toDouble,
-          opt("min-warm").toInt, opt("max-warm").toInt)
+        case "bench" => run.bench(opt("seconds").toDouble, opt("trace") == "1", opt("plateau").toDouble)
         case "record" => run.record(opt("dump"))
         case other => sys.error(s"unknown mode '$other'")
       } finally spark.stop()
@@ -58,6 +58,10 @@ object Main {
 
 final class Runner(spark: SparkSession, queries: Seq[(String, (SparkSession, String) => DataFrame)], data: String) {
   private val sc = spark.sparkContext
+  /** Warm-up passes stop here even without a plateau, so a run on an
+    * unsteady host still ends in time; the result says whether the
+    * plateau was reached. */
+  private val MaxWarm = 5
 
   private def errText(e: Throwable): String =
     (e.getClass.getName + ": " + Option(e.getMessage).getOrElse("")).linesIterator.take(1).mkString.take(300)
@@ -117,16 +121,13 @@ final class Runner(spark: SparkSession, queries: Seq[(String, (SparkSession, Str
   }
 
   /** Seconds for a fixed Spark job that runs no engine code: a hash and
-    * sum over generated rows on every core, the median of five rounds.
-    * Taken around the timed passes, it reads how fast the host is while
-    * they run; the caller scales the pass times by it. */
-  private def calibrate(): Double = {
-    val times = (1 to 5).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(0L, 60000000L, 1L, sc.defaultParallelism).selectExpr("sum(hash(id))").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    times.sorted.apply(2)
+    * sum over generated rows on every core. Taken after each timed pass,
+    * outside its window, it shows in the result whether the host slowed
+    * down during the run; no metric is derived from it. */
+  private def probeHost(): Double = {
+    val t0 = System.nanoTime()
+    spark.range(0L, 60000000L, 1L, sc.defaultParallelism).selectExpr("sum(hash(id))").collect()
+    (System.nanoTime() - t0) / 1e9
   }
 
   private def passJson(kind: String, wall: Double, rs: Seq[(String, Double, Option[String])]): String =
@@ -151,41 +152,39 @@ final class Runner(spark: SparkSession, queries: Seq[(String, (SparkSession, Str
       case (n, Left(e)) => n -> Json.obj(Seq("error" -> Json.str(e)))
     })
 
-  def bench(seconds: Double, trace: Boolean, plateau: Double, minWarm: Int, maxWarm: Int): Seq[(String, String)] = {
+  def bench(seconds: Double, trace: Boolean, plateau: Double): Seq[(String, String)] = {
     val check = outputJson(queries.map { case (n, b) => n -> output(b) })
     cleanUp()
     val passes = ArrayBuffer.empty[String]
     var index = 0
     val warm = ArrayBuffer.empty[Double]
     def settled = warm.size >= 2 && math.abs(warm.last - warm(warm.size - 2)) <= plateau * warm(warm.size - 2)
-    while (warm.size < minWarm || (warm.size < maxWarm && !settled)) {
+    while (!settled && warm.size < MaxWarm) {
       val (wall, rs) = pass(index, None)
       passes += passJson("warm", wall, rs)
       warm += wall
       index += 1
       cleanUp()
     }
-    calibrate() // its own first runs compile and warm the job
     val firstTimedMs = System.currentTimeMillis()
     val tracer = if (trace) Some(new Tracer(spark)) else None
     val deadline = System.nanoTime() + (seconds * 1e9).toLong
     var traced = 0
     var untraced = 0
-    val calibrations = ArrayBuffer.empty[Double]
+    val hostProbes = ArrayBuffer.empty[Double]
     while (System.nanoTime() < deadline || (trace && (traced == 0 || untraced == 0))) {
       val on = trace && untraced > traced
-      calibrations += calibrate()
       if (on) tracer.get.install()
       val (wall, rs) = pass(index, if (on) tracer else None)
       if (on) { tracer.get.uninstall(); traced += 1 } else untraced += 1
       passes += passJson(if (on) "traced" else "timed", wall, rs)
       index += 1
+      hostProbes += probeHost()
       cleanUp()
     }
-    calibrations += calibrate()
     Seq(
       "first_timed_ms" -> firstTimedMs.toString,
-      "calibration_s" -> calibrations.map(Json.num).mkString("[", ",", "]"),
+      "host_probe_s" -> hostProbes.map(Json.num).mkString("[", ",", "]"),
       "plateau_reached" -> settled.toString,
       "check" -> check,
       "passes" -> passes.mkString("[", ",", "]")) ++
