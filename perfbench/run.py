@@ -7,11 +7,11 @@ to one GraftSession at local[nproc], each after the previous one finished;
 the seed fixes their order within a pass. The data are the fixed tables in
 perfbench/data. The benchmark process first checks every query's output
 against perfbench/expected (row count and order-insensitive hash), runs
-warm-up passes until the pass wall time settles, and then times passes for
-`--seconds`. After each timed pass it times a fixed Spark job that runs no
-engine code; that series goes into the run stamp beside the CPU steal and
-load average, so a run taken while the host was busy shows it, but no metric
-is derived from it.
+warm-up passes until the pass wall time settles, and then times as many
+passes as fit in `--seconds`. After each timed pass it times a fixed Spark
+job that runs no engine code; that series goes into the run stamp beside the
+CPU steal and load average, so a run taken while the host was busy shows it,
+but no metric is derived from it.
 
 With `--trace 0` the last stdout line carries the end-to-end metrics; with
 `--trace 1` the timed passes alternate untraced and traced, and it carries the
@@ -44,11 +44,6 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 DATA = os.path.join(HERE, "data", "sf0.01")
 EXPECTED = os.path.join(HERE, "expected", "sf0.01.json")
 HEAP = "3g"
-# Warm-up ends when a pass's wall time is within this share of wall_s's bound
-# of the previous pass's. The bound itself is too loose for that: after a
-# 25% step the next passes still get faster by 5-10% each, and how far a run
-# is along that curve differs from run to run.
-PLATEAU_SHARE_OF_BOUND = 1 / 3
 # A run must end within 180 s; the benchmark process gets what is left of it.
 RUN_LIMIT_S = 170
 JDK17_OPENS = [
@@ -171,7 +166,12 @@ def record(workloads, runs_dir, expected_path):
 def bench(workload, queries, args, runs_dir, deadline):
     """One benchmark run of one workload; prints its lines, the result last."""
     config = bench_config()
-    plateau = PLATEAU_SHARE_OF_BOUND * next(m["bound"] for m in config["end_to_end"] if m["name"] == "wall_s")
+    # Warm-up ends when a pass's wall time is within wall_s's bound of the
+    # previous pass's. That happens after the second warm-up pass in nearly
+    # every run, so the timed passes start at the same point of the JIT
+    # warm-up curve; they still get a little faster over the first few, and
+    # the median over the timed window absorbs that.
+    plateau = next(m["bound"] for m in config["end_to_end"] if m["name"] == "wall_s")
     queries = list(queries)
     random.Random(args.seed).shuffle(queries)
     expected = load_json(args.expected)

@@ -15,8 +15,9 @@ import org.apache.spark.sql.types.StructType
   *  - `bench`: one output-check pass (collect and hash, which is also
   *    the cold pass), warm-up passes until the pass-to-pass change in
   *    pass wall time is within `--plateau` (at most `MaxWarm` passes),
-  *    then timed passes for `--seconds`, each followed by a host-speed
-  *    probe that is only recorded. With `--trace 1` the timed passes
+  *    then timed passes while the next one is expected to end within
+  *    `--seconds` (at least one), each followed by a host-speed probe
+  *    that is only recorded. With `--trace 1` the timed passes
   *    alternate untraced and traced, so the trace overhead is measured
   *    in the same process.
   *  - `record`: run each query once and write its row count, content
@@ -169,10 +170,13 @@ final class Runner(spark: SparkSession, queries: Seq[(String, (SparkSession, Str
     val firstTimedMs = System.currentTimeMillis()
     val tracer = if (trace) Some(new Tracer(spark)) else None
     val deadline = System.nanoTime() + (seconds * 1e9).toLong
+    var lastCycle = 0L
+    def fits = System.nanoTime() + lastCycle <= deadline
     var traced = 0
     var untraced = 0
     val hostProbes = ArrayBuffer.empty[Double]
-    while (System.nanoTime() < deadline || (trace && (traced == 0 || untraced == 0))) {
+    while (fits || (trace && (traced == 0 || untraced == 0))) {
+      val c0 = System.nanoTime()
       val on = trace && untraced > traced
       if (on) tracer.get.install()
       val (wall, rs) = pass(index, if (on) tracer else None)
@@ -181,6 +185,7 @@ final class Runner(spark: SparkSession, queries: Seq[(String, (SparkSession, Str
       index += 1
       hostProbes += probeHost()
       cleanUp()
+      lastCycle = System.nanoTime() - c0
     }
     Seq(
       "first_timed_ms" -> firstTimedMs.toString,
