@@ -1,5 +1,5 @@
 package graft
-/** Dev tool: dump formatted physical plans of headline queries.
+/** Dumps the physical operator tree of each headline query.
   * PlanFreshnessSpec diffs the committed PLANS.md against these
   * queries' live plan skeletons — a plan-affecting change without a
   * PLANS.md re-run fails the suite instead of silently drifting. */
@@ -83,20 +83,17 @@ object PlanDump {
     val sf = "/root/testdata/sf0.001"
     val names = PlanDump.headlineNames
     val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of headline queries\n\n")
+    sb.append("# PLANS — physical operator trees of headline queries\n\n")
     sb.append("Generated by `graft.PlanDump` from the registered queries; re-run\n")
     sb.append("`sbt \"runMain graft.PlanDump PLANS.md\"` after plan-affecting changes.\n")
+    sb.append("Per-node detail: `df.explain(\"formatted\")` on the query's DataFrame.\n")
     for (n <- names) {
       val df = SparkEntry.queries(n)(spark, sf)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      // Keep the operator tree COMPLETE (the freshness spec pins it;
-      // a mid-tree cut made the committed skeleton lie about the
-      // plan) and truncate only the per-node detail section.
-      val (tree, details) = plan.linesIterator.toSeq.span(_.trim.nonEmpty)
-      val detailText = details.mkString("\n").take(6000)
+      val tree = plan.linesIterator.takeWhile(_.trim.nonEmpty)
       sb.append(s"\n## $n\n\n```\n")
-        .append(tree.mkString("\n")).append(detailText).append("\n```\n")
+        .append(tree.mkString("\n")).append("\n```\n")
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
     println(s"wrote $out")

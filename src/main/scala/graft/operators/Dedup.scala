@@ -540,8 +540,8 @@ object Dedup {
   }
 
   /** [[deltaIngest]]'s shared prep frames and near-tier candidate
-    * stage (pure code motion) — the sweep counts `candidates` with
-    * the production plan. */
+    * stage (pure code motion) — CandidateLinearitySpec counts
+    * `candidates` with the production plan. */
   private[graft] final case class DeltaParts(smallDelta: Boolean, dPrep: DataFrame,
                                              cPrep: DataFrame, candidates: DataFrame)
 
@@ -777,7 +777,7 @@ object Dedup {
   }
 
   /** [[containmentJoin]]'s tokenized/materialized input frame —
-    * split out (pure code motion) for the scale sweep. */
+    * split out (pure code motion) for CandidateLinearitySpec. */
   private[graft] def containmentPrep(docs: DataFrame,
                                      idCol: String, textCol: String): DataFrame = {
     val toksOf = array_sort(array_distinct(TextFunctions.tokens(col(textCol))))
@@ -793,8 +793,8 @@ object Dedup {
   }
 
   /** [[containmentJoin]]'s candidate-pair stage, pre-verification —
-    * split out (pure code motion) for the scale sweep's candidate
-    * counts. */
+    * split out (pure code motion) for CandidateLinearitySpec's
+    * candidate counts. */
   private[graft] def containmentCandidates(prep: DataFrame, threshold: Double): DataFrame = {
     val need = ceil(lit(threshold) * col("na") - lit(1e-9))
     val aPre = prep.select(col("id").as("a_id"), col("n").as("na"),
@@ -1061,9 +1061,8 @@ object Dedup {
 
   /** Collapsed-rep token explosion + global token frequencies — the
     * two inputs the prefix filter ranks against. Exposed to
-    * [[graft.PrefixJoinSweep]] so candidate counts are measured on
-    * the operator's OWN frames, not a re-derivation that could
-    * drift. */
+    * CandidateLinearitySpec so candidate counts are measured on the
+    * operator's OWN frames, not a re-derivation that could drift. */
   private[graft] def tokFreqOf(reps: DataFrame): (DataFrame, DataFrame) = {
     val tok = reps.select(col("fp"), col("n_toks"), explode(col("toks")).as("tok"))
     // Global token order: rarest first, ties broken lexicographically.
@@ -1080,8 +1079,8 @@ object Dedup {
   /** The prefix path's candidate-pair stage, pre-verification —
     * `(fp_a, fp_b)` distinct pairs surviving the prefix, length and
     * positional filters. Split out of [[prefixFilteredPairs]] (pure
-    * code motion) so the scale sweep can count candidates with the
-    * exact production plan. */
+    * code motion) so CandidateLinearitySpec can count candidates
+    * with the exact production plan. */
   private[graft] def prefixJaccardCandidates(tok: DataFrame, freq: DataFrame,
                                              threshold: Double): DataFrame = {
     // Prefix = the `n - ceil(t*n) + 1` globally-rarest tokens per set.

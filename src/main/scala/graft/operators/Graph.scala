@@ -114,7 +114,7 @@ object Graph {
     // (r16 probe: 35 exchanges, ~5 recomputations). Checkpointing ue
     // and deg as well was measured SLOWER — their recomputation is
     // two cheap scans, less than two extra materialization jobs
-    // (Q105Probe variants: o-only 1.35 s vs all-three 1.85 s min).
+    // (o-only 1.35 s vs all-three 1.85 s min).
     val deg = ue.select(col("u").as("node")).union(ue.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     // Attach both endpoint degrees, then orient by (deg, node).
@@ -615,6 +615,7 @@ object Graph {
   def kHopReachAuto(edges: DataFrame, srcCol: String, dstCol: String,
                     k: Int, p: Int = 6,
                     maxExactEdges: Long = 1L << 20): DataFrame = {
+    require(p >= 4 && p <= 16, "p must be in [4, 16]")
     // Canonicalize ONCE: both branches start from the same distinct
     // (u, v) set and materialize it anyway, so probing the raw input
     // lineage separately just re-ran the upstream synthesis (the r12
@@ -680,6 +681,7 @@ object Graph {
                 k: Int, p: Int = 6,
                 maxKernelEdges: Int = HyperBallKernelBound): DataFrame = {
     require(k >= 1, "k must be >= 1")
+    require(p >= 4 && p <= 16, "p must be in [4, 16]")
     // Size-routed (r19, the q105/q118 convention): up to
     // `maxKernelEdges` RAW canonical pairs the register evolution
     // runs as one driver-fold kernel over a dense byte matrix —
@@ -730,6 +732,7 @@ object Graph {
   private[graft] def hyperBallCanonical(ue: DataFrame, k: Int, p: Int = 6,
                                         maxKernelEdges: Int = HyperBallKernelBound): DataFrame = {
     require(k >= 1, "k must be >= 1")
+    require(p >= 4 && p <= 16, "p must be in [4, 16]")
     if (maxKernelEdges > 0) {
       val probed = ue.limit(maxKernelEdges + 1).collect()
       if (probed.length <= maxKernelEdges && hyperBallKernelFits(probed.length, p))

@@ -191,7 +191,7 @@ object TextQueries {
   /** The q46/q90 synthetic Zipf-vocabulary word list for order key
     * `kCol` — 8 + k%8 words, token id md5-hash-driven through an
     * integer log-skew map (small ids common, tail ids rare). Shared
-    * by the two queries and by [[graft.PrefixJoinSweep]]. */
+    * by the two queries. */
   private[graft] def zipfWordsOf(kCol: Column): Column = {
     val hs = transform(
       sequence(lit(0), (lit(7) + pmod(kCol, lit(8))).cast("int")),
@@ -206,7 +206,7 @@ object TextQueries {
 
   /** q43's shingle-set corpus over any `(doc_id, text)` frame: word
     * 3-gram shingles as compact 15-hex md5 tokens (code motion from
-    * the q43 body, shared with the scale sweep). */
+    * the q43 body, shared with CandidateLinearitySpec). */
   private[graft] def q43Corpus(docs: DataFrame): DataFrame =
     docs
       .filter(size(split(col("text"), " ")) >= 3)
@@ -217,7 +217,7 @@ object TextQueries {
 
   /** q46's corpus: every third order emits a base doc; every ninth
     * also a drop-last-token twin (pure code motion from the q46
-    * body so the scale sweep replays the identical workload). */
+    * body so CandidateLinearitySpec replays the identical workload). */
   private[graft] def q46Corpus(s: SparkSession, d: String): DataFrame = {
     val words = zipfWordsOf(col("k"))
     val withToks = graft.Tables.orders(s, d)
@@ -240,7 +240,7 @@ object TextQueries {
 
   /** q90's corpus: every ninth order emits a base doc; even k a
     * drop-last twin; k%3==0 a half-length excerpt (code motion from
-    * the q90 body, shared with the scale sweep). */
+    * the q90 body, shared with CandidateLinearitySpec). */
   private[graft] def q90Corpus(s: SparkSession, d: String): DataFrame = {
     val words = zipfWordsOf(col("k"))
     graft.Tables.orders(s, d)

@@ -377,6 +377,31 @@ class PlanSpec extends SparkSuite {
     assert(scans === 1, s"expected one embeddings scan, got $scans")
   }
 
+  test("q238 emits in doc_id order: no Exchange above its global Sort") {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    // q238 sorts below its decode chain and has no terminal orderBy:
+    // its output order holds only while nothing above the Sort
+    // repartitions. Run it so the check sees AQE's final plan.
+    val df = q("q238_wav_audit")
+    df.collect()
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    // Operators from the root down to the first global Sort, looking
+    // through AQE's query stages to the plans they wrap.
+    def pathToSort(p: SparkPlan): Option[Seq[SparkPlan]] = p match {
+      case s: SortExec if s.global => Some(Nil)
+      case s: QueryStageExec => pathToSort(s.plan)
+      case _ => p.children.iterator.flatMap(pathToSort).nextOption().map(p +: _)
+    }
+    val above = pathToSort(plan).getOrElse(fail(s"q238 lost its global Sort:\n$plan"))
+    assert(!above.exists(_.isInstanceOf[Exchange]),
+      s"an Exchange sits above q238's global Sort:\n$plan")
+  }
+
   test("q133 snapshot diff: fingerprints in-scan, one full-outer equi-join, no cartesian") {
     val p = physical("q133_snapshot_diff")
     assert(p.contains("FullOuter"), s"diff lost its full-outer join:\n${p.take(1500)}")

@@ -2,11 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.{PrefixJoinSweep, SparkSuite}
+import graft.SparkSuite
 import graft.queries.TextQueries
 
-/** Pins the prefix-filter join family's LINEAR candidate growth — the
-  * permanent, sf0.001-sized twin of [[graft.PrefixJoinSweep]].
+/** Pins the prefix-filter join family's LINEAR candidate growth at
+  * spec scale.
   *
   * Scaling model: m disjoint replicas (tokens of copy c prefixed
   * `c{c}·`, ids offset) keep every replica's internal duplicate
@@ -24,6 +24,17 @@ class CandidateLinearitySpec extends SparkSuite {
 
   private val M = 3
 
+  /** m disjoint replicas of a `(doc_id, text)` corpus — tokens of
+    * copy c>0 prefixed `c{c}·`, ids offset. */
+  private def replicate(corpus: DataFrame, m: Int): DataFrame =
+    (0 until m).map { c =>
+      if (c == 0) corpus
+      else corpus.select(
+        (col("doc_id") + lit(c.toLong * 100000000L)).as("doc_id"),
+        concat_ws(" ", transform(split(col("text"), " "),
+          t => concat(lit(s"c${c}·"), t))).as("text"))
+    }.reduce(_ unionByName _)
+
   private def jacCandidates(corpus: DataFrame): Long = {
     val reps = Dedup.collapseIdentical(corpus, "doc_id", "text")
     val (tok, freq) = Dedup.tokFreqOf(reps)
@@ -34,7 +45,7 @@ class CandidateLinearitySpec extends SparkSuite {
                     opCount: DataFrame => Long): Unit = {
     val c1 = candCount(base)
     val p1 = opCount(base)
-    val scaled = PrefixJoinSweep.replicate(base, M)
+    val scaled = replicate(base, M)
     val cM = candCount(scaled)
     val pM = opCount(scaled)
     assert(c1 > 0, s"$name: base workload produced no candidates — vacuous gate")
@@ -82,7 +93,7 @@ class CandidateLinearitySpec extends SparkSuite {
         .candidates.count()
     }
     val c1 = cand(docs)
-    val scaled = PrefixJoinSweep.replicate(docs, M)
+    val scaled = replicate(docs, M)
     val cM = cand(scaled)
     assert(c1 > 0, "q81: base workload produced no candidates — vacuous gate")
     assert(cM >= M.toLong * c1 / 2 && cM <= 2L * M * c1,

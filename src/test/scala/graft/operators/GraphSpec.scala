@@ -345,6 +345,32 @@ class GraphSpec extends SparkSuite {
       assert(v === math.floor(est(n) - 0.5).toLong, s"routed estimate diverged at node $n")
   }
 
+  test("HyperBall routes reject p outside [4, 16] before any probe") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    // Three edges behind a column that fails when evaluated: a probe or
+    // materialization ahead of the check surfaces as a job failure, not
+    // the IllegalArgumentException.
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("src", "dst")
+      .select(when(col("src") >= 0, raise_error(lit("edges evaluated before p was checked")))
+        .otherwise(col("src")).as("src"), col("dst"))
+    val ue = edges.select(col("src").as("u"), col("dst").as("v"))
+    for (p <- Seq(3, 17)) {
+      val routes = Seq[(String, () => DataFrame)](
+        "hyperBall" -> (() => Graph.hyperBall(edges, "src", "dst", 2, p)),
+        "hyperBall declarative" -> (() => Graph.hyperBall(edges, "src", "dst", 2, p, maxKernelEdges = 0)),
+        "hyperBallCanonical" -> (() => Graph.hyperBallCanonical(ue, 2, p)),
+        "hyperBallCanonical declarative" -> (() => Graph.hyperBallCanonical(ue, 2, p, maxKernelEdges = 0)),
+        "kHopReachAuto" -> (() => Graph.kHopReachAuto(edges, "src", "dst", 2, p)),
+        "kHopReachAuto routed" -> (() => Graph.kHopReachAuto(edges, "src", "dst", 2, p, maxExactEdges = 0L)))
+      for ((route, build) <- routes) {
+        val err = intercept[IllegalArgumentException](build())
+        assert(err.getMessage.contains("p must be in [4, 16]"), s"$route p=$p: ${err.getMessage}")
+      }
+    }
+  }
+
   test("hits ≡ sequential integer recurrence on random digraphs; star fixture") {
     import spark.implicits._
     def reference(edges: Seq[(Long, Long)], rounds: Int): Map[Long, (Long, Long)] = {
