@@ -1,8 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -17,8 +20,48 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** Leaf files' (path, length, modification time) and parquet confs. */
+  private type Fingerprint = (Seq[(String, Long, Long)], Seq[(String, String)])
+
+  /** Qualified path → (fingerprint, schema) of the last inference. */
+  private val schemas = new ConcurrentHashMap[String, (Fingerprint, StructType)]()
+
+  /** The schema `spark.read.parquet(path)` infers, inferred once per
+    * file state instead of on every read: each inference runs a Spark
+    * job, and a read given the schema runs none.
+    * The cached schema is reused only while the fingerprint matches —
+    * every leaf file's (path, length, modification time) plus the
+    * session's `*parquet*` confs (e.g. `nanosAsLong`,
+    * `inferTimestampNTZ`) — so a rewritten file or a changed conf is
+    * never served a stale schema. One entry per path; `path` is a
+    * plain file or directory, not a glob. */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(p)
+    // A missing path fails exactly as an uncached read does.
+    if (!fs.exists(qualified)) return spark.read.parquet(path).schema
+    val leaves = Seq.newBuilder[(String, Long, Long)]
+    val it = fs.listFiles(qualified, true)
+    while (it.hasNext) {
+      val f = it.next()
+      leaves += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    val confs = spark.conf.getAll.filter(_._1.toLowerCase.contains("parquet")).toSeq.sorted
+    val fingerprint: Fingerprint = (leaves.result().sorted, confs)
+    schemas.get(qualified.toString) match {
+      case (f, schema) if f == fingerprint => schema
+      case _ =>
+        val schema = spark.read.parquet(path).schema
+        schemas.put(qualified.toString, (fingerprint, schema))
+        schema
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Iterative graph analytics on DataFrames. Companion to the
   * connected-components resolution in [[Dedup.connectedComponents]]:
@@ -206,6 +207,34 @@ object Graph {
       while (i < m) { eu(i) = (enc(i) >>> 32).toInt; ev(i) = enc(i).toInt; i += 1 }
     }
     (nodes, eu, ev)
+  }
+
+  /** Ascending symmetric CSR over [[densePairs]]' deduped canonical
+    * pairs: `(deg, ptr, adj)` with node x's neighbours in
+    * `adj(ptr(x) until ptr(x + 1))`. No per-list sort is needed:
+    * densePairs emits the pairs sorted by (u, v) with u < v, so x
+    * first receives its smaller neighbours (pairs (u, x), ascending
+    * in u) and then its larger ones (pairs (x, v), ascending in v).
+    * Shared by the k-hop, label-propagation and wedge-census kernels. */
+  private def symmetricCsr(n: Int, eu: Array[Int], ev: Array[Int])
+      : (Array[Int], Array[Int], Array[Int]) = {
+    val m = eu.length
+    val deg = new Array[Int](n)
+    locally {
+      var i = 0
+      while (i < m) { deg(eu(i)) += 1; deg(ev(i)) += 1; i += 1 }
+    }
+    val ptr = new Array[Int](n + 1)
+    locally { var i = 0; while (i < n) { ptr(i + 1) = ptr(i) + deg(i); i += 1 } }
+    val adj = new Array[Int](2 * m)
+    val fill = java.util.Arrays.copyOf(ptr, n)
+    var i = 0
+    while (i < m) {
+      adj(fill(eu(i))) = ev(i); fill(eu(i)) += 1
+      adj(fill(ev(i))) = eu(i); fill(ev(i)) += 1
+      i += 1
+    }
+    (deg, ptr, adj)
   }
 
   /** Broadcast-CSR triangle kernel (r18): the collected canonical
@@ -481,24 +510,7 @@ object Graph {
     import spark.implicits._
     val (nodes, eu, ev) = densePairs(rows)
     val n = nodes.length
-    val m = eu.length
-    val deg = new Array[Int](n)
-    locally {
-      var i = 0
-      while (i < m) { deg(eu(i)) += 1; deg(ev(i)) += 1; i += 1 }
-    }
-    val ptr = new Array[Int](n + 1)
-    locally { var i = 0; while (i < n) { ptr(i + 1) = ptr(i) + deg(i); i += 1 } }
-    val adj = new Array[Int](2 * m)
-    locally {
-      val fill = java.util.Arrays.copyOf(ptr, n)
-      var i = 0
-      while (i < m) {
-        adj(fill(eu(i))) = ev(i); fill(eu(i)) += 1
-        adj(fill(ev(i))) = eu(i); fill(ev(i)) += 1
-        i += 1
-      }
-    }
+    val (_, ptr, adj) = symmetricCsr(n, eu, ev)
     val bc = spark.sparkContext.broadcast((nodes, ptr, adj))
     val kk = k
     spark.range(0, n.toLong).as[Long].mapPartitions { it =>
@@ -965,24 +977,7 @@ object Graph {
     import spark.implicits._
     val (nodes, eu, ev) = densePairs(rows)
     val n = nodes.length
-    val m = eu.length
-    val deg = new Array[Int](n)
-    locally {
-      var i = 0
-      while (i < m) { deg(eu(i)) += 1; deg(ev(i)) += 1; i += 1 }
-    }
-    val ptr = new Array[Int](n + 1)
-    locally { var i = 0; while (i < n) { ptr(i + 1) = ptr(i) + deg(i); i += 1 } }
-    val adj = new Array[Int](2 * m)
-    locally {
-      val fill = java.util.Arrays.copyOf(ptr, n)
-      var i = 0
-      while (i < m) {
-        adj(fill(eu(i))) = ev(i); fill(eu(i)) += 1
-        adj(fill(ev(i))) = eu(i); fill(ev(i)) += 1
-        i += 1
-      }
-    }
+    val (_, ptr, adj) = symmetricCsr(n, eu, ev)
     // lab holds DENSE label indices (labels are always node ids).
     var lab = Array.tabulate(n)(identity)
     val cnt = new Array[Int](n)
@@ -1032,51 +1027,25 @@ object Graph {
     * Adamic-Adar is deliberately absent: its ln(deg) term is the one
     * transcendental that would break cross-engine exactness, and on
     * the pair set emitted here it is a monotone re-weighting
-    * consumers can apply downstream.
+    * consumers can apply downstream ([[adamicAdar]] is its exact
+    * fixed-point form).
     *
-    * Scale shape: candidate pairs come from the WEDGE census — one
-    * self-join of the symmetric adjacency on the midpoint with an
-    * `a < b` orientation cut, then a map-side-combinable (a, b)
-    * count; existing edges leave via a left-anti join and degrees
-    * attach by two equi-joins on keys-sized censuses. The wedge set
-    * is Σ deg(m)² — the q105 triangle bound — and a hub node
-    * explodes it, so `maxDegree` drops midpoints above a cap
-    * (fail-soft, the standard web-graph mitigation; default keeps
-    * everything and is exact). Jaccard is ONE correctly-rounded
-    * division of exactly-converted longs, so the frame hash-gates. */
+    * Scale shape: candidate pairs come from the WEDGE census
+    * ([[wedgeCensus]]) with an `a < b` orientation cut; existing
+    * edges leave via a left-anti join and degrees attach by two
+    * equi-joins on keys-sized censuses. The wedge set is Σ deg(m)² —
+    * the q105 triangle bound — and a hub node explodes it, so
+    * `maxDegree` drops midpoints above a cap (fail-soft, the
+    * standard web-graph mitigation; default keeps everything and is
+    * exact). Jaccard is ONE correctly-rounded division of
+    * exactly-converted longs, so the frame hash-gates. Up to
+    * `maxKernelEdges` raw canonical pairs the census runs as the
+    * broadcast-CSR [[wedgeCensusKernel]] (pass 0 to force the
+    * declarative plan). */
   def linkPrediction(edges: DataFrame, srcCol: String, dstCol: String,
-                     maxDegree: Long = Long.MaxValue): DataFrame = {
-    require(maxDegree > 0, "maxDegree must be positive")
-    val ue = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
-    val adj = ue.select(col("u").as("node"), col("v").as("nbr"))
-      .union(ue.select(col("v").as("node"), col("u").as("nbr")))
-    val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val mids =
-      if (maxDegree == Long.MaxValue) adj
-      else adj.join(deg.filter(col("deg") <= maxDegree).select("node"), "node")
-    // Pre-spread the streamed wedge side (the q129/kHopReach lesson):
-    // a broadcast wedge join otherwise runs the deg²-expanded pair
-    // stream and its census partials on the checkpoint's few
-    // AQE-coalesced partitions.
-    val width = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val cn = mids.select(col("node"), col("nbr").as("a"))
-      .repartition(width, col("node"))
-      .join(mids.select(col("node"), col("nbr").as("b")), "node")
-      .filter(col("a") < col("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("cn"))
-    cn.join(ue, cn("a") === ue("u") && cn("b") === ue("v"), "left_anti")
-      .join(deg.select(col("node").as("a"), col("deg").as("__da")), "a")
-      .join(deg.select(col("node").as("b"), col("deg").as("__db")), "b")
-      .select(col("a").as("u"), col("b").as("v"), col("cn"),
-        (col("cn").cast("double") /
-          (col("__da").cast("double") + col("__db").cast("double")
-            - col("cn").cast("double"))).as("jaccard"))
-  }
+                     maxDegree: Long = Long.MaxValue,
+                     maxKernelEdges: Int = 4000000): DataFrame =
+    wedgeCensus(edges, srcCol, dstCol, maxDegree, maxKernelEdges, weighted = false)
 
   /** ADAMIC-ADAR link prediction — [[linkPrediction]]'s
     * common-neighbor count with the weighting that made the metric
@@ -1089,42 +1058,220 @@ object Graph {
     * and the pair score is an exact long sum, so the frame
     * hash-gates where a float 1/ln could not.
     *
-    * Same scale shape as [[linkPrediction]]: wedge enumeration
-    * through mid-nodes with the optional degree cap (a hub's wedge
-    * set is quadratic in its degree — the cap is the guard), one
-    * census aggregate, anti-join against existing edges. */
+    * Same scale shape and routing as [[linkPrediction]]: wedge
+    * enumeration through mid-nodes with the optional degree cap (a
+    * hub's wedge set is quadratic in its degree — the cap is the
+    * guard), one census aggregate, anti-join against existing
+    * edges. */
   def adamicAdar(edges: DataFrame, srcCol: String, dstCol: String,
-                 maxDegree: Long = Long.MaxValue): DataFrame = {
+                 maxDegree: Long = Long.MaxValue,
+                 maxKernelEdges: Int = 4000000): DataFrame =
+    wedgeCensus(edges, srcCol, dstCol, maxDegree, maxKernelEdges, weighted = true)
+
+  /** The wedge census behind [[linkPrediction]] (`weighted = false`:
+    * `u, v, cn, jaccard`) and [[adamicAdar]] (`weighted = true`:
+    * `u, v, cn, aa_fp`). `maxDegree` is validated before any probe,
+    * so both routes reject the same arguments. Size-routed like
+    * [[triangleCount]]: the canonical projection, one bounded
+    * `limit(n+1).collect()` probe, and up to `maxKernelEdges` raw
+    * pairs the broadcast-CSR [[wedgeCensusKernel]]; above the bound
+    * the declarative plan ([[wedgeCensusViaJoins]]) runs unchanged. */
+  private def wedgeCensus(edges: DataFrame, srcCol: String, dstCol: String,
+                          maxDegree: Long, maxKernelEdges: Int,
+                          weighted: Boolean): DataFrame = {
     require(maxDegree > 0, "maxDegree must be positive")
-    val ue = edges
+    val pairs = edges
       .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
+    if (maxKernelEdges > 0) {
+      val probed = pairs.limit(maxKernelEdges + 1).collect()
+      if (probed.length <= maxKernelEdges) {
+        // The declarative frame's schema: endpoints carry the
+        // canonical projection's nullability (through distinct, the
+        // adjacency union and the joins), `cn` is a non-null count,
+        // and `aa_fp` (a sum) and `jaccard` (a division) are nullable.
+        val endpoint = pairs.schema("u").nullable || pairs.schema("v").nullable
+        val schema = StructType(Seq(
+          StructField("u", LongType, endpoint), StructField("v", LongType, endpoint),
+          StructField("cn", LongType, nullable = false),
+          if (weighted) StructField("aa_fp", LongType) else StructField("jaccard", DoubleType)))
+        return wedgeCensusKernel(edges.sparkSession, probed, maxDegree, weighted, schema)
+      }
+    }
+    wedgeCensusViaJoins(pairs.distinct().localCheckpoint(true), maxDegree, weighted)
+  }
+
+  /** The declarative wedge census over canonical undirected edges `ue`
+    * — the [[wedgeCensus]] branch that survives any scale. The
+    * streamed side is the midpoint adjacency (capped midpoints
+    * dropped, Adamic-Adar weight attached), pre-spread on the
+    * midpoint (the q129/kHopReach lesson: a broadcast wedge join
+    * otherwise runs the deg²-expanded pair stream and its census
+    * partials on the checkpoint's few AQE-coalesced partitions). The
+    * build side reads the plain adjacency: a capped midpoint already
+    * left through the streamed side, so the inner join drops its
+    * wedges without a second degree join. */
+  private def wedgeCensusViaJoins(ue: DataFrame, maxDegree: Long,
+                                  weighted: Boolean): DataFrame = {
     val adj = ue.select(col("u").as("node"), col("v").as("nbr"))
       .union(ue.select(col("v").as("node"), col("u").as("nbr")))
     val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("deg"))
+    val kept = if (maxDegree == Long.MaxValue) deg else deg.filter(col("deg") <= maxDegree)
     val mids =
-      (if (maxDegree == Long.MaxValue) adj.join(deg, "node")
-       else adj.join(deg.filter(col("deg") <= maxDegree), "node"))
-        // Degree-1 leaves never form a wedge (no pair of distinct
-        // neighbors), but the projection is evaluated eagerly on
-        // every adjacency row — flog2q(1) = 0 would divide by zero,
-        // so the guard zeroes the never-used weight.
-        .withColumn("__w", expr(
-          s"CAST(CASE WHEN deg >= 2 THEN 16777216 DIV ${
-            graft.operators.Curation.flog2qSql("deg")} ELSE 0 END AS BIGINT)"))
-    // Pre-spread the streamed wedge side (the q129/kHopReach lesson).
-    val width = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val aa = mids.select(col("node"), col("nbr").as("a"), col("__w"))
-      .repartition(width, col("node"))
-      .join(mids.select(col("node"), col("nbr").as("b")), "node")
+      if (weighted)
+        adj.join(kept, "node")
+          // Degree-1 leaves never form a wedge (no pair of distinct
+          // neighbors), but the projection is evaluated eagerly on
+          // every adjacency row — flog2q(1) = 0 would divide by zero,
+          // so the guard zeroes the never-used weight.
+          .select(col("node"), col("nbr").as("a"), expr(
+            s"CAST(CASE WHEN deg >= 2 THEN 16777216 DIV ${
+              graft.operators.Curation.flog2qSql("deg")} ELSE 0 END AS BIGINT)").as("__w"))
+      else if (maxDegree == Long.MaxValue) adj.select(col("node"), col("nbr").as("a"))
+      else adj.join(kept.select("node"), "node").select(col("node"), col("nbr").as("a"))
+    val width = ue.sparkSession.sessionState.conf.numShufflePartitions
+    val wedges = mids.repartition(width, col("node"))
+      .join(adj.select(col("node"), col("nbr").as("b")), "node")
       .filter(col("a") < col("b"))
       .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("cn"), sum("__w").as("aa_fp"))
-    aa.join(ue, aa("a") === ue("u") && aa("b") === ue("v"), "left_anti")
-      .select(col("a").as("u"), col("b").as("v"), col("cn"), col("aa_fp"))
+    val census =
+      if (weighted) wedges.agg(count(lit(1)).as("cn"), sum("__w").as("aa_fp"))
+      else wedges.agg(count(lit(1)).as("cn"))
+    val open = census.join(ue, census("a") === ue("u") && census("b") === ue("v"), "left_anti")
+    if (weighted)
+      open.select(col("a").as("u"), col("b").as("v"), col("cn"), col("aa_fp"))
+    else
+      open
+        .join(deg.select(col("node").as("a"), col("deg").as("__da")), "a")
+        .join(deg.select(col("node").as("b"), col("deg").as("__db")), "b")
+        .select(col("a").as("u"), col("b").as("v"), col("cn"),
+          (col("cn").cast("double") /
+            (col("__da").cast("double") + col("__db").cast("double")
+              - col("cn").cast("double"))).as("jaccard"))
+  }
+
+  /** Broadcast-CSR wedge-census kernel: [[wedgeCensusViaJoins]]'s
+    * census with none of its aggregate/anti-join/exchange machinery
+    * (the [[triangleCountKernel]] move). The driver builds, from the
+    * guard-admitted raw pairs ([[densePairs]] dedups exactly), the
+    * ascending symmetric CSR, the degree array and each midpoint's
+    * weight — `2²⁴ DIV flog2q(deg)` bit-for-bit with the SQL (1 for
+    * the unweighted census), 0 when `deg < 2` or `deg > maxDegree`,
+    * exactly the declarative `mids` filter — and broadcasts them once.
+    *
+    * Executor tasks own contiguous node-index ranges balanced by wedge
+    * work `Σ_{m ∈ N(a)} deg(m)`, not node count. Per node `a` the
+    * census is Gustavson-style: for each live midpoint `m ∈ N(a)` and
+    * each `b ∈ N(m)` with `b > a` (a binary search into the sorted
+    * list skips the rest), `cn[b] += 1` and `aa[b] += w[m]`; the
+    * touched `b`s then emit in ascending order, minus `a`'s own
+    * neighbours (an adjacency stamp replaces the left-anti join). The
+    * pair set is never built on the driver, and emission is lazy per
+    * node. Per-task scratch is node-width: an int count, a long
+    * weight (Adamic-Adar only), a touched list and a stamp — ~20 B per
+    * node, guard-bounded like the triangle kernel's long[]. Output
+    * identical to the declarative plan row-for-row, schema included
+    * (spec-pinned differentially). */
+  private def wedgeCensusKernel(spark: org.apache.spark.sql.SparkSession,
+                                rows: Array[org.apache.spark.sql.Row], maxDegree: Long,
+                                weighted: Boolean, schema: StructType): DataFrame = {
+    val (nodes, eu, ev) = densePairs(rows)
+    val n = nodes.length
+    val (deg, ptr, adj) = symmetricCsr(n, eu, ev)
+    val w = Array.tabulate(n) { m =>
+      if (deg(m) < 2 || deg(m) > maxDegree) 0L
+      else if (weighted) (1L << 24) / graft.functions.HashOps.flog2q(deg(m).toLong)
+      else 1L
+    }
+    // Task bounds: bounds(p) is the first node whose wedge-work prefix
+    // reaches p/parts of the total.
+    val parts = spark.sparkContext.defaultParallelism.max(1)
+    val bounds = new Array[Int](parts + 1)
+    locally {
+      val work = new Array[Long](n + 1)
+      var a = 0
+      while (a < n) {
+        var s = 0L; var e = ptr(a)
+        while (e < ptr(a + 1)) { if (w(adj(e)) > 0) s += deg(adj(e)); e += 1 }
+        work(a + 1) = work(a) + s
+        a += 1
+      }
+      a = 0
+      var p = 1
+      while (p < parts) {
+        val target = work(n) * p / parts
+        while (a < n && work(a) < target) a += 1
+        bounds(p) = a
+        p += 1
+      }
+      bounds(parts) = n
+    }
+    val bc = spark.sparkContext.broadcast((nodes, deg, ptr, adj, w))
+    spark.range(0L, parts.toLong, 1L, parts).mapPartitions { ps =>
+      val (bNodes, bDeg, bPtr, bAdj, bW) = bc.value
+      val nn = bNodes.length
+      val cn = new Array[Int](nn)
+      val aa = if (weighted) new Array[Long](nn) else null
+      val touched = new Array[Int](nn)
+      // nbrStamp(x) == a + 1 marks x as a neighbour of the current a.
+      val nbrStamp = new Array[Int](nn)
+      // Accumulates a's census; returns how many non-adjacent touched
+      // b's it left, ascending, in touched(0 until k).
+      def census(a: Int): Int = {
+        var k = 0
+        var e = bPtr(a)
+        while (e < bPtr(a + 1)) {
+          val m = bAdj(e)
+          nbrStamp(m) = a + 1
+          val wm = bW(m)
+          if (wm > 0) {
+            val mEnd = bPtr(m + 1)
+            var f = java.util.Arrays.binarySearch(bAdj, bPtr(m), mEnd, a) + 1
+            while (f < mEnd) {
+              val b = bAdj(f)
+              if (cn(b) == 0) { touched(k) = b; k += 1 }
+              cn(b) += 1
+              if (weighted) aa(b) += wm
+              f += 1
+            }
+          }
+          e += 1
+        }
+        java.util.Arrays.sort(touched, 0, k)
+        var kept = 0; var i = 0
+        while (i < k) {
+          val b = touched(i)
+          if (nbrStamp(b) == a + 1) { cn(b) = 0; if (weighted) aa(b) = 0L }
+          else { touched(kept) = b; kept += 1 }
+          i += 1
+        }
+        kept
+      }
+      ps.flatMap { p =>
+        val end = bounds(p.toInt + 1)
+        new Iterator[org.apache.spark.sql.Row] {
+          private var a = bounds(p.toInt) - 1
+          private var k = 0
+          private var j = 0
+          def hasNext: Boolean = {
+            while (j == k && a + 1 < end) { a += 1; k = census(a); j = 0 }
+            j < k
+          }
+          def next(): org.apache.spark.sql.Row = {
+            if (!hasNext) throw new NoSuchElementException
+            val b = touched(j); j += 1
+            val c = cn(b); cn(b) = 0
+            if (weighted) {
+              val s = aa(b); aa(b) = 0L
+              org.apache.spark.sql.Row(bNodes(a), bNodes(b), c.toLong, s)
+            } else
+              org.apache.spark.sql.Row(bNodes(a), bNodes(b), c.toLong,
+                c.toDouble / (bDeg(a).toDouble + bDeg(b).toDouble - c.toDouble))
+          }
+        }
+      }
+    }(org.apache.spark.sql.Encoders.row(schema))
   }
 
   /** HITS hubs & authorities (Kleinberg) — the DIRECTED prestige
@@ -1397,21 +1544,23 @@ object Graph {
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
     // Size-routed like [[pageRank]] (r19): bounded limit-collect of
-    // BOTH the raw edge rows and the distinct seed set (each under
-    // the same bound), null endpoints/seed rows decline to the
-    // declarative plan (a null seed matches no node there — the
-    // kernel drops them for the same effect). The seed-exists guard
-    // is enforced identically on both routes.
+    // BOTH the raw edge rows and the raw non-null seed rows (each
+    // under the same bound); null endpoints decline to the
+    // declarative plan. A null seed matches no node there, so the
+    // seed probe drops nulls in the scan, and duplicates are removed
+    // on the driver by the kernel's seed flags — no distinct exchange
+    // before the guard, and raw ≥ distinct keeps the bound
+    // conservative. The seed-exists guard is enforced identically on
+    // both routes.
     if (maxKernelEdges > 0) {
       val probed = e.limit(maxKernelEdges + 1).collect()
       if (probed.length <= maxKernelEdges &&
           !probed.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
         val seedRows = seeds.select(col(seedCol).cast("long").as("node"))
-          .distinct().limit(maxKernelEdges + 1).collect()
+          .filter(col("node").isNotNull).limit(maxKernelEdges + 1).collect()
         if (seedRows.length <= maxKernelEdges)
           return personalizedPageRankKernel(edges.sparkSession, probed,
-            seedRows.filter(!_.isNullAt(0)).map(_.getLong(0)),
-            iters, dampNum, dampDen, scale)
+            seedRows.map(_.getLong(0)), iters, dampNum, dampDen, scale)
       }
     }
     val nodes = e.select(col("src").as("node"))

@@ -88,8 +88,8 @@ object PipelineQueries {
     * scheduled job, and the 100 TB path never collects the modulus
     * to the driver. `dropSelfLoops` = false keeps the kCore shape
     * (its oracle counts self-loops in the degree census). */
-  private def syntheticEdges(s: org.apache.spark.sql.SparkSession, d: String,
-                             dropSelfLoops: Boolean = true)
+  private[graft] def syntheticEdges(s: org.apache.spark.sql.SparkSession, d: String,
+                                    dropSelfLoops: Boolean = true)
       : org.apache.spark.sql.DataFrame = {
     val orders = Tables.orders(s, d)
     val m = orders.agg(expr("count(1) div 8").as("__m"))
@@ -380,7 +380,7 @@ object PipelineQueries {
       val ev = graft.streaming.StreamLane.events(s, d)
         .filter(col("ts").isNotNull && col("user_id").isNotNull)
         .withColumn("value", col("value").cast("decimal(28,2)"))
-      val dim = s.read.parquet(s"$d/customer.parquet")
+      val dim = Tables.customer(s, d)
       val counts = graft.streaming.EventStreams.enrichedHourlyCounts(
         ev, dim, keyCol = "user_id", dimKeyCol = "c_custkey",
         attrCol = "c_mktsegment")

@@ -54,7 +54,7 @@ object StreamLane {
     * single-batch arrival is what makes the lanes' emitted sets
     * deterministic). */
   def events(s: SparkSession, d: String): DataFrame = {
-    val batchSchema = s.read.parquet(s"$d/events.parquet").schema
+    val batchSchema = graft.Tables.schemaOf(s, s"$d/events.parquet")
     val raw = s.readStream.schema(batchSchema)
       .option("maxFilesPerTrigger", 1 << 20)
       .option("pathGlobFilter", "events.parquet")
@@ -74,7 +74,7 @@ object StreamLane {
     * directory+glob discipline, same single-micro-batch arrival.
     * Documents carry no event-time column, so no ts normalization. */
   def documents(s: SparkSession, d: String): DataFrame = {
-    val batchSchema = s.read.parquet(s"$d/documents.parquet").schema
+    val batchSchema = graft.Tables.schemaOf(s, s"$d/documents.parquet")
     s.readStream.schema(batchSchema)
       .option("maxFilesPerTrigger", 1 << 20)
       .option("pathGlobFilter", "documents.parquet")
@@ -86,7 +86,7 @@ object StreamLane {
     * same directory+glob discipline, same single-micro-batch
     * arrival. No event-time column, no normalization. */
   def embeddings(s: SparkSession, d: String): DataFrame = {
-    val batchSchema = s.read.parquet(s"$d/embeddings.parquet").schema
+    val batchSchema = graft.Tables.schemaOf(s, s"$d/embeddings.parquet")
     s.readStream.schema(batchSchema)
       .option("maxFilesPerTrigger", 1 << 20)
       .option("pathGlobFilter", "embeddings.parquet")

@@ -446,35 +446,41 @@ class GraphSpec extends SparkSuite {
 
   test("linkPrediction ≡ brute force; adjacent pairs excluded; degree cap drops hub wedges") {
     import spark.implicits._
-    for (edges <- PropSampling.sample(edgeGen, n = 6) if edges.nonEmpty) {
-      val ue = edges.map { case (s, t) => (math.min(s, t), math.max(s, t)) }.distinct
-      val nbrs = (ue.map(e => e._1 -> e._2) ++ ue.map(e => e._2 -> e._1))
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      val nodes = nbrs.keySet.toSeq.sorted
-      val expected = (for {
-        a <- nodes; b <- nodes if a < b && !nbrs(a).contains(b)
-        cn = (nbrs(a) & nbrs(b)).size.toLong if cn > 0
-      } yield (a, b, cn,
-        cn.toDouble / (nbrs(a).size.toDouble + nbrs(b).size.toDouble - cn.toDouble))).toSet
-      val got = Graph.linkPrediction(edges.toDF("src", "dst"), "src", "dst")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-      assert(got === expected, s"link prediction diverged on $edges")
+    // Both routes: the default bound takes the wedge-census kernel,
+    // maxKernelEdges = 0 the declarative plan.
+    for (bound <- Seq(4000000, 0)) {
+      for (edges <- PropSampling.sample(edgeGen, n = 6) if edges.nonEmpty) {
+        val ue = edges.map { case (s, t) => (math.min(s, t), math.max(s, t)) }.distinct
+        val nbrs = (ue.map(e => e._1 -> e._2) ++ ue.map(e => e._2 -> e._1))
+          .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+        val nodes = nbrs.keySet.toSeq.sorted
+        val expected = (for {
+          a <- nodes; b <- nodes if a < b && !nbrs(a).contains(b)
+          cn = (nbrs(a) & nbrs(b)).size.toLong if cn > 0
+        } yield (a, b, cn,
+          cn.toDouble / (nbrs(a).size.toDouble + nbrs(b).size.toDouble - cn.toDouble))).toSet
+        val got = Graph.linkPrediction(edges.toDF("src", "dst"), "src", "dst",
+            maxKernelEdges = bound)
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+        assert(got === expected, s"link prediction diverged on $edges (bound $bound)")
+      }
+      // Hub cap: star 0->{1..5} plus 1-2; with maxDegree below the
+      // hub's degree only wedges through low-degree midpoints survive.
+      val star = (1L to 5L).map(l => (0L, l)) :+ (1L, 2L)
+      val capped = Graph.linkPrediction(star.toDF("src", "dst"), "src", "dst",
+          maxDegree = 2L, maxKernelEdges = bound)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      // midpoints 1 and 2 (degree 2) give only the (0,2)/(0,1) wedges —
+      // both adjacent — so nothing is emitted; the uncapped run emits
+      // every leaf pair through the hub.
+      assert(capped.isEmpty, capped.toString)
+      val uncapped = Graph.linkPrediction(star.toDF("src", "dst"), "src", "dst",
+          maxKernelEdges = bound)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(uncapped === (for (a <- 1L to 5L; b <- a + 1 to 5L
+        if !(a == 1L && b == 2L)) yield (a, b)).toSet)
     }
-    // Hub cap: star 0->{1..5} plus 1-2; with maxDegree below the
-    // hub's degree only wedges through low-degree midpoints survive.
-    val star = (1L to 5L).map(l => (0L, l)) :+ (1L, 2L)
-    val capped = Graph.linkPrediction(star.toDF("src", "dst"), "src", "dst",
-        maxDegree = 2L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // midpoints 1 and 2 (degree 2) give only the (0,2)/(0,1) wedges —
-    // both adjacent — so nothing is emitted; the uncapped run emits
-    // every leaf pair through the hub.
-    assert(capped.isEmpty, capped.toString)
-    val uncapped = Graph.linkPrediction(star.toDF("src", "dst"), "src", "dst")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(uncapped === (for (a <- 1L to 5L; b <- a + 1 to 5L
-      if !(a == 1L && b == 2L)) yield (a, b)).toSet)
   }
 
   test("labelPropagation: two disjoint cliques each converge to their minimum id") {
@@ -493,15 +499,88 @@ class GraphSpec extends SparkSuite {
     // a,b (deg 2 → flog2q 16). Pair (a,b) shares BOTH; (c,d) only h.
     val edges = Seq((100L, 1L), (100L, 2L), (100L, 3L), (100L, 4L),
       (200L, 1L), (200L, 2L)).toDF("src", "dst")
-    val got = Graph.adamicAdar(edges, "src", "dst")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
-      .toMap
-    assert(got((1L, 2L)) === ((2L, (1 << 24) / 32 + (1 << 24) / 16)),
-      s"a-b via hub+rare: ${got((1L, 2L))}")
-    assert(got((3L, 4L)) === ((1L, (1 << 24) / 32)), s"c-d via hub only")
-    assert(got((1L, 2L))._2 > 2L * got((3L, 4L))._2,
-      "the rare neighbor must dominate the hub")
-    // Existing edges never predicted.
-    assert(!got.contains((1L, 100L)) && !got.contains((1L, 200L)))
+    for (bound <- Seq(4000000, 0)) {
+      val got = Graph.adamicAdar(edges, "src", "dst", maxKernelEdges = bound)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
+        .toMap
+      assert(got((1L, 2L)) === ((2L, (1 << 24) / 32 + (1 << 24) / 16)),
+        s"a-b via hub+rare: ${got((1L, 2L))} (bound $bound)")
+      assert(got((3L, 4L)) === ((1L, (1 << 24) / 32)), s"c-d via hub only (bound $bound)")
+      assert(got((1L, 2L))._2 > 2L * got((3L, 4L))._2,
+        "the rare neighbor must dominate the hub")
+      // Existing edges never predicted.
+      assert(!got.contains((1L, 100L)) && !got.contains((1L, 200L)))
+    }
+  }
+
+  test("wedgeCensusKernel ≡ declarative census: linkPrediction and adamicAdar, rows and schema") {
+    // maxKernelEdges = 0 forces the declarative wedge join; the
+    // default routes these graphs through the broadcast-CSR kernel.
+    // Rows must match as multisets and the schemas must be equal,
+    // nullability included.
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    def same(name: String, edges: DataFrame, maxDegree: Long = Long.MaxValue): Unit = {
+      val routes = Seq(
+        "linkPrediction" -> ((b: Int) => Graph.linkPrediction(edges, "src", "dst", maxDegree, b)),
+        "adamicAdar" -> ((b: Int) => Graph.adamicAdar(edges, "src", "dst", maxDegree, b)))
+      for ((op, build) <- routes) {
+        val viaKernel = build(4000000)
+        val viaJoins = build(0)
+        assert(viaKernel.queryExecution.analyzed.toString.contains("MapPartitions"),
+          s"$op on $name did not take the kernel route")
+        assert(!viaJoins.queryExecution.analyzed.toString.contains("MapPartitions"),
+          s"$op on $name did not take the declarative route")
+        assert(viaKernel.schema === viaJoins.schema, s"$op schema diverged on $name")
+        def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString(","))
+        assert(rows(viaKernel).toSeq === rows(viaJoins).toSeq, s"$op rows diverged on $name")
+      }
+    }
+    // The q181/q136 graph at sf0.001.
+    same("q181 sf0.001", graft.queries.PipelineQueries.syntheticEdges(spark, sfDir))
+    // Random graphs, each with a hub joined to every node.
+    for ((edges, i) <- PropSampling.sample(edgeGen, n = 4).zipWithIndex) {
+      val hub = edges.flatMap { case (s, t) => Seq(s, t) }.distinct.map(x => (100L, x))
+      same(s"random+hub #$i $edges", (edges ++ hub).toDF("src", "dst"))
+      same(s"random+hub #$i maxDegree 3", (edges ++ hub).toDF("src", "dst"), maxDegree = 3L)
+    }
+    // Duplicate, reversed and self-loop edges canonicalize away.
+    val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L), (4L, 5L), (5L, 6L))
+    same("duplicates/reversed/self-loops",
+      (k4 ++ k4.map(_.swap) ++ k4 ++ Seq((3L, 3L), (6L, 6L))).toDF("src", "dst"))
+    // Null endpoints never survive the canonical projection.
+    same("null endpoints", Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(3L)), (None, Some(4L)), (Some(3L), None),
+      (None, None), (Some(3L), Some(4L))).toDF("src", "dst"))
+    // Empty graphs: no rows at all, and only self-loops.
+    same("empty", Seq.empty[(Long, Long)].toDF("src", "dst"))
+    same("self-loops only", Seq((1L, 1L), (2L, 2L)).toDF("src", "dst"))
+    // (1,3), (2,3) and (2,4) are both 2-hop and adjacent: never
+    // emitted; only (1,4) is.
+    same("2-hop and adjacent",
+      Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (2L, 4L)).toDF("src", "dst"))
+  }
+
+  test("wedge census routes reject maxDegree <= 0 before any probe") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    // Edges behind a column that fails when evaluated: a probe ahead
+    // of the check surfaces as a job failure, not the
+    // IllegalArgumentException.
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("src", "dst")
+      .select(when(col("src") >= 0, raise_error(lit("edges evaluated before maxDegree was checked")))
+        .otherwise(col("src")).as("src"), col("dst"))
+    val routes = Seq[(String, () => DataFrame)](
+      "linkPrediction" -> (() => Graph.linkPrediction(edges, "src", "dst", maxDegree = 0L)),
+      "linkPrediction declarative" ->
+        (() => Graph.linkPrediction(edges, "src", "dst", maxDegree = 0L, maxKernelEdges = 0)),
+      "adamicAdar" -> (() => Graph.adamicAdar(edges, "src", "dst", maxDegree = 0L)),
+      "adamicAdar declarative" ->
+        (() => Graph.adamicAdar(edges, "src", "dst", maxDegree = 0L, maxKernelEdges = 0)))
+    for ((route, build) <- routes) {
+      val err = intercept[IllegalArgumentException](build())
+      assert(err.getMessage.contains("maxDegree must be positive"), s"$route: ${err.getMessage}")
+    }
   }
 }
