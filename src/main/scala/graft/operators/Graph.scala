@@ -74,10 +74,7 @@ object Graph {
     */
   def triangleCount(edges: DataFrame, srcCol: String, dstCol: String,
                     maxKernelEdges: Int = 4000000): DataFrame = {
-    val pairs = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
+    val pairs = canonicalPairs(edges, srcCol, dstCol)
     // Size-routed strategy (r18, the q31/q217 convention): up to
     // `maxKernelEdges` RAW canonical pairs the census runs as ONE
     // broadcast-CSR kernel; above the bound, the declarative
@@ -371,10 +368,7 @@ object Graph {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
             k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 0, "k >= 1 and rounds >= 0")
-    var cur = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
+    var cur = canonicalPairs(edges, srcCol, dstCol)
       .distinct()
       .localCheckpoint(true)
     def degrees(e: DataFrame): DataFrame =
@@ -399,10 +393,7 @@ object Graph {
     * differentially on random graphs). */
   def kCoreFixpoint(edges: DataFrame, srcCol: String, dstCol: String,
                     k: Int, maxRounds: Int = 1000): DataFrame = {
-    var cur = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
+    var cur = canonicalPairs(edges, srcCol, dstCol)
       .distinct()
       .localCheckpoint(true)
     def degrees(e: DataFrame): DataFrame =
@@ -461,12 +452,19 @@ object Graph {
     * branch's own re-canonicalization. */
   private[graft] def canonicalUndirected(edges: DataFrame, srcCol: String,
                                          dstCol: String): DataFrame =
+    canonicalPairs(edges, srcCol, dstCol)
+      .distinct()
+      .localCheckpoint(true)
+
+  /** The canonical projection `(u, v) = (least, greatest)` as longs,
+    * self-loops (and null endpoints) dropped, NOT deduped — what the
+    * size-routed kernels' bounded probes collect and what every
+    * canonical edge set here is built from. */
+  private def canonicalPairs(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
     edges
       .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
 
   def kHopReach(edges: DataFrame, srcCol: String, dstCol: String,
                 k: Int, maxKernelEdges: Int = 4000000): DataFrame = {
@@ -484,11 +482,7 @@ object Graph {
     // bound the declarative semi-naive frontier plan (the 100 TB
     // shape) runs unchanged.
     if (maxKernelEdges > 0) {
-      val pairs = edges
-        .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-          greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-        .filter(col("u") =!= col("v"))
-      val probed = pairs.limit(maxKernelEdges + 1).collect()
+      val probed = canonicalPairs(edges, srcCol, dstCol).limit(maxKernelEdges + 1).collect()
       if (probed.length <= maxKernelEdges)
         return kHopReachKernel(edges.sparkSession, probed, k)
     }
@@ -704,11 +698,7 @@ object Graph {
     // packed-register plan (the 100 TB shape) runs unchanged —
     // routed conservatively, since raw ≥ distinct.
     if (maxKernelEdges > 0) {
-      val pairs = edges
-        .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-          greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-        .filter(col("u") =!= col("v"))
-      val probed = pairs.limit(maxKernelEdges + 1).collect()
+      val probed = canonicalPairs(edges, srcCol, dstCol).limit(maxKernelEdges + 1).collect()
       if (probed.length <= maxKernelEdges && hyperBallKernelFits(probed.length, p))
         return hyperBallKernel(edges.sparkSession, probed, k, p)
     }
@@ -926,10 +916,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int, maxKernelEdges: Int = 4000000): DataFrame = {
     require(rounds >= 0, "rounds must be nonnegative")
-    val pairs = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
+    val pairs = canonicalPairs(edges, srcCol, dstCol)
     // Size-routed strategy (r18, the q105 kernel convention): up to
     // `maxKernelEdges` canonical edges the synchronous rounds run as
     // one broadcast-CSR kernel — each declarative round is a
@@ -1080,10 +1067,7 @@ object Graph {
                           maxDegree: Long, maxKernelEdges: Int,
                           weighted: Boolean): DataFrame = {
     require(maxDegree > 0, "maxDegree must be positive")
-    val pairs = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
+    val pairs = canonicalPairs(edges, srcCol, dstCol)
     if (maxKernelEdges > 0) {
       val probed = pairs.limit(maxKernelEdges + 1).collect()
       if (probed.length <= maxKernelEdges) {
