@@ -1251,27 +1251,22 @@ object Dedup {
     // expensive) pair-generation lineage — measured 3-4 re-runs of a
     // full MinHash pipeline on the first version of this operator.
     val half = cut(pairs.select(col(aCol).as("src"), col(bCol).as("dst")))
-    // Size-routed strategy (r19, the q105/q118 broadcast-kernel
-    // convention): up to `maxKernelEdges` pair rows the resolution
-    // runs as ONE driver union-find over the ALREADY-MATERIALIZED
-    // pair frame — the bounded `limit(n+1).collect()` reads the
-    // checkpoint back (never re-executes the caller's pair-generation
-    // lineage, at any scale), at most n+1 rows reach the driver, and
-    // the min-root union-find reproduces the min-label fixpoint
-    // exactly (spec-pinned differentially). Long ids only — the
-    // iterative plan is ordering-generic, the kernel is not — and
-    // never in reliable-checkpoint mode (that caller is asking for
-    // executor-loss durability, which a driver fold cannot give).
-    // Above the bound, the O(log diameter) pointer-jump rounds below
-    // run unchanged — they are the 100 TB shape.
-    if (maxKernelEdges > 0 && reliableCheckpointDir.isEmpty &&
-        half.schema.fields.forall(_.dataType ==
-          org.apache.spark.sql.types.LongType)) {
-      val probed = half.limit(maxKernelEdges + 1).collect()
-      if (probed.length <= maxKernelEdges &&
-          !probed.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return connectedComponentsKernel(pairs.sparkSession, probed)
-    }
+    // Size-routed ([[KernelRoute]]): up to `maxKernelEdges` pair rows
+    // the resolution runs as ONE driver union-find over the
+    // ALREADY-MATERIALIZED pair frame — the bounded collect reads the
+    // checkpoint back, never re-executing the caller's pair-generation
+    // lineage. Long ids only — the iterative plan is ordering-generic,
+    // the kernel is not — and never in reliable-checkpoint mode (that
+    // caller is asking for executor-loss durability, which a driver
+    // fold cannot give). Above the bound, the O(log diameter)
+    // pointer-jump rounds below run unchanged — they are the 100 TB
+    // shape.
+    val kernel =
+      if (reliableCheckpointDir.isEmpty &&
+          half.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType))
+        KernelRoute.edges(half, maxKernelEdges)
+      else None
+    if (kernel.isDefined) return connectedComponentsKernel(pairs.sparkSession, kernel.get)
     // Both directions PLUS a self-loop per node: the self-loop is
     // what carries a node's own label through the neighbour join, so
     // each round is exactly one join + one aggregate — no per-round
@@ -1333,24 +1328,18 @@ object Dedup {
 
   /** Driver union-find kernel for [[connectedComponents]]: the
     * min-label fixpoint computed directly — union by MIN ROOT over
-    * dense ids (node ids sort ascending into the dense index, so the
-    * smallest dense index in a set IS the component's minimum id)
-    * with path-halving finds; duplicates and self-pairs are harmless
-    * no-op unions, so no dedup pass is needed. O(m α(n))-ish; emit
+    * dense ids (dense order is id order, so the smallest dense index
+    * in a set IS the component's minimum id) with path-halving finds;
+    * duplicates and self-pairs are harmless no-op unions, so no dedup
+    * pass is needed. O(m α(n))-ish; emit
     * via broadcast + range map, never a driver-built frame. Output
     * identical to the iterative plan's converged labels row for row
     * (spec-pinned differentially). */
   private def connectedComponentsKernel(spark: org.apache.spark.sql.SparkSession,
-                                        rows: Array[org.apache.spark.sql.Row]): DataFrame = {
+                                        g: DenseEdges): DataFrame = {
     import spark.implicits._
-    val nodeSet = new java.util.TreeSet[java.lang.Long]()
-    rows.foreach { r => nodeSet.add(r.getLong(0)); nodeSet.add(r.getLong(1)) }
-    val nodes = new Array[Long](nodeSet.size())
-    locally {
-      var i = 0; val it = nodeSet.iterator()
-      while (it.hasNext) { nodes(i) = it.next(); i += 1 }
-    }
-    val n = nodes.length
+    val nodes = g.nodes
+    val n = g.n
     val parent = Array.tabulate(n)(identity)
     def find(x0: Int): Int = {
       var x = x0
@@ -1359,9 +1348,9 @@ object Dedup {
     }
     locally {
       var i = 0
-      while (i < rows.length) {
-        val ra = find(java.util.Arrays.binarySearch(nodes, rows(i).getLong(0)))
-        val rb = find(java.util.Arrays.binarySearch(nodes, rows(i).getLong(1)))
+      while (i < g.m) {
+        val ra = find(g.src(i))
+        val rb = find(g.dst(i))
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
         i += 1
       }

@@ -12,35 +12,6 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   */
 object Graph {
 
-  /** Fixed-point PageRank over an edge list, in scaled INTEGER
-    * arithmetic: ranks are maintained as `rank * scale` longs and
-    * every per-edge contribution is the floor division
-    * `(dampNum * r(u)) div (dampDen * outdeg(u))`, so each
-    * iteration is exact integer arithmetic end-to-end — sums are
-    * order-independent, results are identical on any engine that
-    * replays the recurrence (q60's DuckDB oracle unrolls it in
-    * SQL), and no float summation ever enters the loop. The
-    * float-rank formulation would tie the result to Spark's
-    * nondeterministic aggregation order; the classic
-    * fixed-point-arithmetic trade accepts ~1/scale rounding per
-    * edge for bit-reproducibility.
-    *
-    * Semantics: nodes = distinct endpoints; initial rank
-    * `scale div N`; per iteration
-    * `r'(v) = base + sum over in-edges of contrib(u, v)` with
-    * `base = ((dampDen - dampNum) * scale) div (dampDen * N)`.
-    * Dangling nodes (no out-edges) leak their damped mass — the
-    * simple-variant convention, documented rather than
-    * redistributed; ranks are relative ordering scores, not a
-    * probability simplex.
-    *
-    * Scale shape: the out-degree join is precomputed once onto the
-    * edge list (static across iterations); each iteration is one
-    * equi-join of the rank table onto that edge list (shuffle on
-    * src) plus one map-side-combinable aggregation (shuffle on dst)
-    * — the canonical distributed PageRank step. Rank state is
-    * localCheckpoint'd per round: without the cut the logical plan
-    * doubles every iteration (the q47 lesson). */
   /** Exact triangle census with local clustering coefficients — the
     * third member of the graph tier (q60 ranks, q47 resolves
     * components, this measures cohesion: community density of a link
@@ -75,28 +46,9 @@ object Graph {
   def triangleCount(edges: DataFrame, srcCol: String, dstCol: String,
                     maxKernelEdges: Int = 4000000): DataFrame = {
     val pairs = canonicalPairs(edges, srcCol, dstCol)
-    // Size-routed strategy (r18, the q31/q217 convention): up to
-    // `maxKernelEdges` RAW canonical pairs the census runs as ONE
-    // broadcast-CSR kernel; above the bound, the declarative
-    // edge-intersection plan (the 100 TB shape) runs unchanged.
-    // Probe and collect are ONE bounded execution (r19, r18 advisor):
-    // `limit(n+1).collect()` short-circuits the scan once n+1 rows are
-    // gathered, so at most maxKernelEdges+1 rows ever reach the driver
-    // — the guard holds even for a non-deterministic source whose
-    // separate probe count would disagree with a second collect run,
-    // and the over-bound route no longer pays a full extra pass. The
-    // exact dedup happens in dense-id space on the guard-admitted
-    // driver array ([[densePairs]], one primitive sort). raw ≥
-    // distinct, so the bound still caps what reaches the driver; a
-    // duplicate-heavy graph routes conservatively to the declarative
-    // plan, whose own distinct handles it at any scale (its distinct
-    // exchanges dedup via ReusedExchange inside the one oriented-list
-    // checkpoint job — the r16 probe measured checkpointing ue as
-    // well SLOWER, o-only 1.35 s vs all-three 1.85 s).
-    val probed = pairs.limit(maxKernelEdges + 1).collect()
-    if (probed.length <= maxKernelEdges)
-      triangleCountKernel(edges.sparkSession, probed)
-    else triangleCountViaJoins(pairs.distinct())
+    KernelRoute.edges(pairs, maxKernelEdges)
+      .map(g => triangleCountKernel(edges.sparkSession, g.distinct))
+      .getOrElse(triangleCountViaJoins(pairs.distinct()))
   }
 
   /** The declarative edge-intersection census over canonical
@@ -162,60 +114,15 @@ object Graph {
             (col("deg") * (col("deg") - 1L)).cast("double")))
   }
 
-  /** Dense-id mapping + exact dedup of RAW canonical (u,v) pairs,
-    * driver-side (r18 opt pass): the node universe sorts into a dense
-    * index, each pair encodes as one long `(denseU << 32) | denseV`
-    * (dense ids are < 2³¹ by the routing guard), and one primitive
-    * `Arrays.sort` + unique-scan removes duplicates — no boxing, no
-    * per-pair allocation, O(m log m). Shared by both broadcast-CSR
-    * kernels so the routing probe can count RAW rows (exchange-free
-    * scan) instead of paying a distinct shuffle before the guard. */
-  private def densePairs(rows: Array[org.apache.spark.sql.Row])
-      : (Array[Long], Array[Int], Array[Int]) = {
-    val nodeSet = new java.util.TreeSet[java.lang.Long]()
-    rows.foreach { r => nodeSet.add(r.getLong(0)); nodeSet.add(r.getLong(1)) }
-    val nodes = new Array[Long](nodeSet.size())
-    locally {
-      var i = 0; val it = nodeSet.iterator()
-      while (it.hasNext) { nodes(i) = it.next(); i += 1 }
-    }
-    def dense(x: Long): Int = java.util.Arrays.binarySearch(nodes, x)
-    val enc = new Array[Long](rows.length)
-    locally {
-      var i = 0
-      while (i < rows.length) {
-        enc(i) = (dense(rows(i).getLong(0)).toLong << 32) |
-          (dense(rows(i).getLong(1)).toLong & 0xffffffffL)
-        i += 1
-      }
-    }
-    java.util.Arrays.sort(enc)
-    var m = 0
-    locally {
-      var i = 0
-      while (i < enc.length) {
-        if (i == 0 || enc(i) != enc(i - 1)) { enc(m) = enc(i); m += 1 }
-        i += 1
-      }
-    }
-    val eu = new Array[Int](m); val ev = new Array[Int](m)
-    locally {
-      var i = 0
-      while (i < m) { eu(i) = (enc(i) >>> 32).toInt; ev(i) = enc(i).toInt; i += 1 }
-    }
-    (nodes, eu, ev)
-  }
-
-  /** Ascending symmetric CSR over [[densePairs]]' deduped canonical
-    * pairs: `(deg, ptr, adj)` with node x's neighbours in
+  /** Ascending symmetric CSR over deduped canonical pairs:
+    * `(deg, ptr, adj)` with node x's neighbours in
     * `adj(ptr(x) until ptr(x + 1))`. No per-list sort is needed:
-    * densePairs emits the pairs sorted by (u, v) with u < v, so x
+    * [[DenseEdges.distinct]] sorts the pairs by (u, v) with u < v, so x
     * first receives its smaller neighbours (pairs (u, x), ascending
     * in u) and then its larger ones (pairs (x, v), ascending in v).
     * Shared by the k-hop, label-propagation and wedge-census kernels. */
-  private def symmetricCsr(n: Int, eu: Array[Int], ev: Array[Int])
-      : (Array[Int], Array[Int], Array[Int]) = {
-    val m = eu.length
+  private def symmetricCsr(g: DenseEdges): (Array[Int], Array[Int], Array[Int]) = {
+    val (n, m, eu, ev) = (g.n, g.m, g.src, g.dst)
     val deg = new Array[Int](n)
     locally {
       var i = 0
@@ -235,7 +142,7 @@ object Graph {
   }
 
   /** Broadcast-CSR triangle kernel (r18): the collected canonical
-    * pair list (raw; [[densePairs]] dedups exactly) becomes a
+    * pair list (deduped by [[DenseEdges.distinct]]) becomes a
     * degree-oriented compressed adjacency on the driver (dense ids,
     * per-list sort — the same Chiba–Nishizeki orientation as the join
     * plan), broadcast once, and the edge-by-edge sorted-merge
@@ -247,11 +154,11 @@ object Graph {
     * identical to the join plan row-for-row (spec-pinned
     * differentially). */
   private def triangleCountKernel(spark: org.apache.spark.sql.SparkSession,
-                                  rows: Array[org.apache.spark.sql.Row]): DataFrame = {
+                                  g: DenseEdges): DataFrame = {
     import spark.implicits._
-    val (nodes, eu, ev) = densePairs(rows)
-    val n = nodes.length
-    val m = eu.length
+    val (nodes, eu, ev) = (g.nodes, g.src, g.dst)
+    val n = g.n
+    val m = g.m
     val degArr = new Array[Int](n)
     locally {
       var i = 0
@@ -368,21 +275,9 @@ object Graph {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
             k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 0, "k >= 1 and rounds >= 0")
-    var cur = canonicalPairs(edges, srcCol, dstCol)
-      .distinct()
-      .localCheckpoint(true)
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("u").as("node")).union(e.select(col("v").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    for (_ <- 1 to rounds) {
-      val keep = degrees(cur).filter(col("deg") >= k)
-      cur = cur
-        .join(keep.select(col("node").as("u")), "u")
-        .join(keep.select(col("node").as("v")), "v")
-        .select(col("u"), col("v"))
-        .localCheckpoint(true)
-    }
-    degrees(cur).filter(col("deg") >= k)
+    var cur = canonicalUndirected(edges, srcCol, dstCol)
+    for (_ <- 1 to rounds) cur = peel(cur, k)
+    coreDegrees(cur, k)
   }
 
   /** [[kCore]] iterated to the true fixed point: peel until a round
@@ -393,28 +288,59 @@ object Graph {
     * differentially on random graphs). */
   def kCoreFixpoint(edges: DataFrame, srcCol: String, dstCol: String,
                     k: Int, maxRounds: Int = 1000): DataFrame = {
-    var cur = canonicalPairs(edges, srcCol, dstCol)
-      .distinct()
-      .localCheckpoint(true)
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("u").as("node")).union(e.select(col("v").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+    require(k >= 1 && maxRounds >= 0, "k >= 1 and maxRounds >= 0")
+    var cur = canonicalUndirected(edges, srcCol, dstCol)
     var prev = -1L
     var n = cur.count()
     var r = 0
     while (n != prev && r < maxRounds) {
-      val keep = degrees(cur).filter(col("deg") >= k)
-      cur = cur
-        .join(keep.select(col("node").as("u")), "u")
-        .join(keep.select(col("node").as("v")), "v")
-        .select(col("u"), col("v"))
-        .localCheckpoint(true)
+      cur = peel(cur, k)
       prev = n
       n = cur.count()
       r += 1
     }
-    degrees(cur).filter(col("deg") >= k)
+    coreDegrees(cur, k)
   }
+
+  /** The nodes of degree ≥ k in the canonical edge set `e`, with that
+    * degree. */
+  private def coreDegrees(e: DataFrame, k: Int): DataFrame =
+    e.select(col("u").as("node")).union(e.select(col("v").as("node")))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+      .filter(col("deg") >= k)
+
+  /** One k-core peel round: the edges of `e` whose endpoints both have
+    * degree ≥ k, materialized. */
+  private def peel(e: DataFrame, k: Int): DataFrame = {
+    val keep = coreDegrees(e, k)
+    e.join(keep.select(col("node").as("u")), "u")
+      .join(keep.select(col("node").as("v")), "v")
+      .select(col("u"), col("v"))
+      .localCheckpoint(true)
+  }
+
+  /** Canonical undirected edge set `(u < v)`, deduped and
+    * MATERIALIZED (localCheckpoint): the one frame every graph
+    * operator here starts from. Factored out so [[kHopReachAuto]]
+    * can canonicalize ONCE and hand the same materialized frame to
+    * the probe and whichever branch it routes to — the r12 q183
+    * artifact paid this synthesis twice (probe + branch) plus the
+    * branch's own re-canonicalization. */
+  private[graft] def canonicalUndirected(edges: DataFrame, srcCol: String,
+                                         dstCol: String): DataFrame =
+    canonicalPairs(edges, srcCol, dstCol)
+      .distinct()
+      .localCheckpoint(true)
+
+  /** The canonical projection `(u, v) = (least, greatest)` as longs,
+    * self-loops (and null endpoints) dropped, NOT deduped — what the
+    * size-routed kernels' bounded probes collect and what every
+    * canonical edge set here is built from. */
+  private def canonicalPairs(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges
+      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
+        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
+      .filter(col("u") =!= col("v"))
 
   /** K-HOP REACHABILITY census — the BFS primitive the rest of the
     * graph tier lacks: for every node, how many distinct nodes lie
@@ -443,50 +369,12 @@ object Graph {
     * hop so the plan stays flat (the accumulated set is a union of
     * already-materialized checkpoints and needs no re-materialize).
     * Self-pairs are excluded throughout. */
-  /** Canonical undirected edge set `(u < v)`, deduped and
-    * MATERIALIZED (localCheckpoint): the one frame every graph
-    * operator here starts from. Factored out so [[kHopReachAuto]]
-    * can canonicalize ONCE and hand the same materialized frame to
-    * the probe and whichever branch it routes to — the r12 q183
-    * artifact paid this synthesis twice (probe + branch) plus the
-    * branch's own re-canonicalization. */
-  private[graft] def canonicalUndirected(edges: DataFrame, srcCol: String,
-                                         dstCol: String): DataFrame =
-    canonicalPairs(edges, srcCol, dstCol)
-      .distinct()
-      .localCheckpoint(true)
-
-  /** The canonical projection `(u, v) = (least, greatest)` as longs,
-    * self-loops (and null endpoints) dropped, NOT deduped — what the
-    * size-routed kernels' bounded probes collect and what every
-    * canonical edge set here is built from. */
-  private def canonicalPairs(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("u"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-
   def kHopReach(edges: DataFrame, srcCol: String, dstCol: String,
                 k: Int, maxKernelEdges: Int = 4000000): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    // Size-routed strategy (r19, the q105/q118 convention): up to
-    // `maxKernelEdges` RAW canonical pairs the census runs as ONE
-    // broadcast-CSR kernel — per-node depth-bounded BFS in executor
-    // tasks, with none of the per-hop join/distinct/anti-join
-    // machinery around it (at toy SF those per-hop jobs ARE the
-    // cost). Probe and collect are one bounded `limit(n+1).collect()`
-    // execution (the r18-advisor discipline): at most n+1 rows ever
-    // reach the driver, and the scan short-circuits over the bound.
-    // densePairs dedups exactly in dense-id space, so the kernel
-    // skips the canonical distinct+checkpoint entirely. Above the
-    // bound the declarative semi-naive frontier plan (the 100 TB
-    // shape) runs unchanged.
-    if (maxKernelEdges > 0) {
-      val probed = canonicalPairs(edges, srcCol, dstCol).limit(maxKernelEdges + 1).collect()
-      if (probed.length <= maxKernelEdges)
-        return kHopReachKernel(edges.sparkSession, probed, k)
-    }
-    kHopReachCanonical(canonicalUndirected(edges, srcCol, dstCol), k)
+    KernelRoute.edges(canonicalPairs(edges, srcCol, dstCol), maxKernelEdges)
+      .map(g => kHopReachKernel(edges.sparkSession, g.distinct, k))
+      .getOrElse(kHopReachCanonical(canonicalUndirected(edges, srcCol, dstCol), k))
   }
 
   /** Broadcast-CSR k-hop reach kernel: EXACTLY the declarative
@@ -499,12 +387,11 @@ object Graph {
     * guard-bounded like the triangle kernel's long[]); the stamp
     * trick avoids clearing them between BFS runs. */
   private def kHopReachKernel(spark: org.apache.spark.sql.SparkSession,
-                              rows: Array[org.apache.spark.sql.Row],
-                              k: Int): DataFrame = {
+                              g: DenseEdges, k: Int): DataFrame = {
     import spark.implicits._
-    val (nodes, eu, ev) = densePairs(rows)
-    val n = nodes.length
-    val (_, ptr, adj) = symmetricCsr(n, eu, ev)
+    val nodes = g.nodes
+    val n = g.n
+    val (_, ptr, adj) = symmetricCsr(g)
     val bc = spark.sparkContext.broadcast((nodes, ptr, adj))
     val kk = k
     spark.range(0, n.toLong).as[Long].mapPartitions { it =>
@@ -632,29 +519,24 @@ object Graph {
     // self-loops no longer count toward it), which is the quantity
     // the exact path's pair-set cost actually scales with.
     val ue = canonicalUndirected(edges, srcCol, dstCol)
-    val probe = math.min(maxExactEdges + 1, Int.MaxValue.toLong).toInt
-    // Bounded limit-collect (r19): when the admitted exact frame also
-    // fits the broadcast-CSR kernel bound, the probe IS the collect —
-    // one execution, ≤ probe rows on the driver (ue is materialized,
-    // so the rows are the complete canonical set whenever fewer than
-    // `probe` come back). Above the kernel bound the exact branch
-    // stays declarative, probed by the bounded count as before.
     if (maxExactEdges <= 4000000L) {
-      // Collect up to the LARGER of the exact bound and the HyperBall
-      // kernel bound, so one bounded execution decides (and feeds)
-      // whichever kernel the size admits — the r18-advisor discipline
-      // with no second probe job on the routed branch.
-      val lim = math.max(probe.toLong, HyperBallKernelBound.toLong + 1L).toInt
-      val probed = ue.limit(lim).collect()
-      if (probed.length <= maxExactEdges)
-        return kHopReachKernel(edges.sparkSession, probed, k)
-      val est =
-        if (probed.length <= HyperBallKernelBound && hyperBallKernelFits(probed.length, p))
-          hyperBallKernel(edges.sparkSession, probed, k, p)
-        else hyperBallCanonical(ue, k, p, maxKernelEdges = 0)
+      // One bounded collect up to the LARGER of the exact bound and the
+      // HyperBall kernel bound decides (and feeds) whichever kernel the
+      // size admits, with no second probe job on the routed branch; ue
+      // is materialized, so reading it back re-runs nothing.
+      val probed = KernelRoute.edges(ue, math.max(maxExactEdges, HyperBallKernelBound.toLong).toInt)
+      if (probed.exists(_.m <= maxExactEdges))
+        return kHopReachKernel(edges.sparkSession, probed.get.distinct, k)
+      val est = probed
+        .filter(g => g.m <= HyperBallKernelBound && hyperBallKernelFits(g.m, p))
+        .map(g => hyperBallKernel(edges.sparkSession, g.distinct, k, p))
+        .getOrElse(hyperBallCanonical(ue, k, p, maxKernelEdges = 0))
       est.select(col("node"),
         floor(col("ball_estimate") - lit(0.5)).cast("long").as("n_reach"))
     } else {
+      // Above the kernel bound the exact branch stays declarative,
+      // probed by a bounded count.
+      val probe = math.min(maxExactEdges + 1, Int.MaxValue.toLong).toInt
       val small = ue.limit(probe).count() <= maxExactEdges
       if (small) kHopReachCanonical(ue, k)
       else hyperBallCanonical(ue, k, p)
@@ -688,22 +570,11 @@ object Graph {
                 maxKernelEdges: Int = HyperBallKernelBound): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(p >= 4 && p <= 16, "p must be in [4, 16]")
-    // Size-routed (r19, the q105/q118 convention): up to
-    // `maxKernelEdges` RAW canonical pairs the register evolution
-    // runs as one driver-fold kernel over a dense byte matrix —
-    // probe and collect are one bounded `limit(n+1).collect()`
-    // execution, densePairs dedups exactly, and the kernel skips the
-    // canonical distinct+checkpoint plus the k (join + udaf-agg +
-    // checkpoint) rounds entirely. Above the bound the declarative
-    // packed-register plan (the 100 TB shape) runs unchanged —
-    // routed conservatively, since raw ≥ distinct.
-    if (maxKernelEdges > 0) {
-      val probed = canonicalPairs(edges, srcCol, dstCol).limit(maxKernelEdges + 1).collect()
-      if (probed.length <= maxKernelEdges && hyperBallKernelFits(probed.length, p))
-        return hyperBallKernel(edges.sparkSession, probed, k, p)
-    }
-    hyperBallCanonical(canonicalUndirected(edges, srcCol, dstCol), k, p,
-      maxKernelEdges = 0)
+    KernelRoute.edges(canonicalPairs(edges, srcCol, dstCol), maxKernelEdges)
+      .filter(g => hyperBallKernelFits(g.m, p))
+      .map(g => hyperBallKernel(edges.sparkSession, g.distinct, k, p))
+      .getOrElse(hyperBallCanonical(canonicalUndirected(edges, srcCol, dstCol), k, p,
+        maxKernelEdges = 0))
   }
 
   /** Kernel bound for [[hyperBall]]: tighter than the triangle/LPA
@@ -729,17 +600,14 @@ object Graph {
     * `(u, v)` edge frame (see [[canonicalUndirected]]) — the entry
     * point [[kHopReachAuto]] routes to. Routes to the register
     * kernel below `maxKernelEdges` (pass 0 to force the declarative
-    * evolution; the frame is materialized, so the bounded
-    * limit-collect reads it back deterministically). */
+    * evolution; the frame is materialized, so the bounded collect
+    * reads it back deterministically). */
   private[graft] def hyperBallCanonical(ue: DataFrame, k: Int, p: Int = 6,
                                         maxKernelEdges: Int = HyperBallKernelBound): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(p >= 4 && p <= 16, "p must be in [4, 16]")
-    if (maxKernelEdges > 0) {
-      val probed = ue.limit(maxKernelEdges + 1).collect()
-      if (probed.length <= maxKernelEdges && hyperBallKernelFits(probed.length, p))
-        return hyperBallKernel(ue.sparkSession, probed, k, p)
-    }
+    val kernel = KernelRoute.edges(ue, maxKernelEdges).filter(g => hyperBallKernelFits(g.m, p))
+    if (kernel.isDefined) return hyperBallKernel(ue.sparkSession, kernel.get.distinct, k, p)
     val m = 1 << p
     val adj = ue.select(col("u").as("node"), col("v").as("nbr"))
       .union(ue.select(col("v").as("node"), col("u").as("nbr")))
@@ -836,14 +704,13 @@ object Graph {
     * broadcast + range flatMap convention, never a driver-built
     * frame. */
   private def hyperBallKernel(spark: org.apache.spark.sql.SparkSession,
-                              rows: Array[org.apache.spark.sql.Row],
-                              k: Int, p: Int): DataFrame = {
+                              g: DenseEdges, k: Int, p: Int): DataFrame = {
     import spark.implicits._
     val m = 1 << p
     val low = 60 - p
-    val (nodes, eu, ev) = densePairs(rows)
-    val n = nodes.length
-    val mm = eu.length
+    val (nodes, eu, ev) = (g.nodes, g.src, g.dst)
+    val n = g.n
+    val mm = g.m
     var cur = new Array[Byte](n * m)
     locally {
       var u = 0
@@ -917,20 +784,8 @@ object Graph {
                        rounds: Int, maxKernelEdges: Int = 4000000): DataFrame = {
     require(rounds >= 0, "rounds must be nonnegative")
     val pairs = canonicalPairs(edges, srcCol, dstCol)
-    // Size-routed strategy (r18, the q105 kernel convention): up to
-    // `maxKernelEdges` canonical edges the synchronous rounds run as
-    // one broadcast-CSR kernel — each declarative round is a
-    // join + two aggregates + a checkpoint, and at sub-second scale
-    // those per-round jobs ARE the cost. Above the bound, the
-    // declarative rounds below run unchanged at any scale. Probe and
-    // collect are ONE bounded `limit(n+1).collect()` execution (r19,
-    // r18 advisor — see [[triangleCount]]): at most maxKernelEdges+1
-    // rows ever reach the driver regardless of source determinism,
-    // and the scan short-circuits once the bound is exceeded; the
-    // kernel dedups exactly in dense-id space ([[densePairs]]).
-    val probed = pairs.limit(maxKernelEdges + 1).collect()
-    if (probed.length <= maxKernelEdges)
-      return labelPropKernel(edges.sparkSession, probed, rounds)
+    val kernel = KernelRoute.edges(pairs, maxKernelEdges)
+    if (kernel.isDefined) return labelPropKernel(edges.sparkSession, kernel.get.distinct, rounds)
     val ue = pairs.distinct().localCheckpoint(true)
     val adj = ue.select(col("u").as("node"), col("v").as("nbr"))
       .union(ue.select(col("v").as("node"), col("u").as("nbr")))
@@ -959,12 +814,11 @@ object Graph {
     * fitCorpusTriage driver-fold convention); the result emits
     * distributed via broadcast, never as a driver-built frame. */
   private def labelPropKernel(spark: org.apache.spark.sql.SparkSession,
-                              rows: Array[org.apache.spark.sql.Row],
-                              rounds: Int): DataFrame = {
+                              g: DenseEdges, rounds: Int): DataFrame = {
     import spark.implicits._
-    val (nodes, eu, ev) = densePairs(rows)
-    val n = nodes.length
-    val (_, ptr, adj) = symmetricCsr(n, eu, ev)
+    val nodes = g.nodes
+    val n = g.n
+    val (_, ptr, adj) = symmetricCsr(g)
     // lab holds DENSE label indices (labels are always node ids).
     var lab = Array.tabulate(n)(identity)
     val cnt = new Array[Int](n)
@@ -1059,29 +913,26 @@ object Graph {
     * `u, v, cn, jaccard`) and [[adamicAdar]] (`weighted = true`:
     * `u, v, cn, aa_fp`). `maxDegree` is validated before any probe,
     * so both routes reject the same arguments. Size-routed like
-    * [[triangleCount]]: the canonical projection, one bounded
-    * `limit(n+1).collect()` probe, and up to `maxKernelEdges` raw
-    * pairs the broadcast-CSR [[wedgeCensusKernel]]; above the bound
-    * the declarative plan ([[wedgeCensusViaJoins]]) runs unchanged. */
+    * [[triangleCount]]: up to `maxKernelEdges` raw canonical pairs the
+    * broadcast-CSR [[wedgeCensusKernel]]; above the bound the
+    * declarative plan ([[wedgeCensusViaJoins]]) runs unchanged. */
   private def wedgeCensus(edges: DataFrame, srcCol: String, dstCol: String,
                           maxDegree: Long, maxKernelEdges: Int,
                           weighted: Boolean): DataFrame = {
     require(maxDegree > 0, "maxDegree must be positive")
     val pairs = canonicalPairs(edges, srcCol, dstCol)
-    if (maxKernelEdges > 0) {
-      val probed = pairs.limit(maxKernelEdges + 1).collect()
-      if (probed.length <= maxKernelEdges) {
-        // The declarative frame's schema: endpoints carry the
-        // canonical projection's nullability (through distinct, the
-        // adjacency union and the joins), `cn` is a non-null count,
-        // and `aa_fp` (a sum) and `jaccard` (a division) are nullable.
-        val endpoint = pairs.schema("u").nullable || pairs.schema("v").nullable
-        val schema = StructType(Seq(
-          StructField("u", LongType, endpoint), StructField("v", LongType, endpoint),
-          StructField("cn", LongType, nullable = false),
-          if (weighted) StructField("aa_fp", LongType) else StructField("jaccard", DoubleType)))
-        return wedgeCensusKernel(edges.sparkSession, probed, maxDegree, weighted, schema)
-      }
+    val kernel = KernelRoute.edges(pairs, maxKernelEdges)
+    if (kernel.isDefined) {
+      // The declarative frame's schema: endpoints carry the
+      // canonical projection's nullability (through distinct, the
+      // adjacency union and the joins), `cn` is a non-null count,
+      // and `aa_fp` (a sum) and `jaccard` (a division) are nullable.
+      val endpoint = pairs.schema("u").nullable || pairs.schema("v").nullable
+      val schema = StructType(Seq(
+        StructField("u", LongType, endpoint), StructField("v", LongType, endpoint),
+        StructField("cn", LongType, nullable = false),
+        if (weighted) StructField("aa_fp", LongType) else StructField("jaccard", DoubleType)))
+      return wedgeCensusKernel(edges.sparkSession, kernel.get.distinct, maxDegree, weighted, schema)
     }
     wedgeCensusViaJoins(pairs.distinct().localCheckpoint(true), maxDegree, weighted)
   }
@@ -1138,7 +989,7 @@ object Graph {
   /** Broadcast-CSR wedge-census kernel: [[wedgeCensusViaJoins]]'s
     * census with none of its aggregate/anti-join/exchange machinery
     * (the [[triangleCountKernel]] move). The driver builds, from the
-    * guard-admitted raw pairs ([[densePairs]] dedups exactly), the
+    * guard-admitted pairs (deduped by [[DenseEdges.distinct]]), the
     * ascending symmetric CSR, the degree array and each midpoint's
     * weight — `2²⁴ DIV flog2q(deg)` bit-for-bit with the SQL (1 for
     * the unweighted census), 0 when `deg < 2` or `deg > maxDegree`,
@@ -1158,11 +1009,11 @@ object Graph {
     * identical to the declarative plan row-for-row, schema included
     * (spec-pinned differentially). */
   private def wedgeCensusKernel(spark: org.apache.spark.sql.SparkSession,
-                                rows: Array[org.apache.spark.sql.Row], maxDegree: Long,
+                                g: DenseEdges, maxDegree: Long,
                                 weighted: Boolean, schema: StructType): DataFrame = {
-    val (nodes, eu, ev) = densePairs(rows)
-    val n = nodes.length
-    val (deg, ptr, adj) = symmetricCsr(n, eu, ev)
+    val nodes = g.nodes
+    val n = g.n
+    val (deg, ptr, adj) = symmetricCsr(g)
     val w = Array.tabulate(n) { m =>
       if (deg(m) < 2 || deg(m) > maxDegree) 0L
       else if (weighted) (1L << 24) / graft.functions.HashOps.flog2q(deg(m).toLong)
@@ -1285,28 +1136,14 @@ object Graph {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            rounds: Int, maxKernelEdges: Int = 4000000): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    // Size-routed (r19, the q105/q118 convention): up to
-    // `maxKernelEdges` RAW directed pairs the integer recurrence
-    // runs as one driver-fold kernel (two long arrays, O(m) per
-    // round — exact, since unnormalized HITS is pure long addition).
-    // Probe and collect are one bounded `limit(n+1).collect()`
-    // execution; [[densePairs]] dedups the directed pairs exactly
-    // (it encodes (col0, col1) as given — canonicalization is the
-    // CALLER's projection, absent here). Above the bound the
-    // declarative per-round join/agg plan runs unchanged.
-    if (maxKernelEdges > 0) {
-      val rawPairs = edges
-        .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-        .filter(col("src") =!= col("dst"))
-      val probed = rawPairs.limit(maxKernelEdges + 1).collect()
-      if (probed.length <= maxKernelEdges)
-        return hitsKernel(edges.sparkSession, probed, rounds)
-    }
-    val e = edges
+    // Directed pairs: the kernel dedups them as given, with no
+    // canonical projection.
+    val pairs = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true)
+    val kernel = KernelRoute.edges(pairs, maxKernelEdges)
+    if (kernel.isDefined) return hitsKernel(edges.sparkSession, kernel.get.distinct, rounds)
+    val e = pairs.distinct().localCheckpoint(true)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .localCheckpoint(true)
@@ -1337,12 +1174,11 @@ object Graph {
     * cannot change the result). O(m) per round on two long arrays;
     * emit via broadcast + range map, never a driver-built frame. */
   private def hitsKernel(spark: org.apache.spark.sql.SparkSession,
-                         rows: Array[org.apache.spark.sql.Row],
-                         rounds: Int): DataFrame = {
+                         g: DenseEdges, rounds: Int): DataFrame = {
     import spark.implicits._
-    val (nodes, eu, ev) = densePairs(rows)
-    val n = nodes.length
-    val m = eu.length
+    val (nodes, eu, ev) = (g.nodes, g.src, g.dst)
+    val n = g.n
+    val m = g.m
     var hub = Array.fill(n)(1L)
     var auth = new Array[Long](n)
     var r = 0
@@ -1366,138 +1202,42 @@ object Graph {
     }.toDF("node", "hub", "auth")
   }
 
+  /** Fixed-point PageRank over an edge list, in scaled INTEGER
+    * arithmetic: ranks are maintained as `rank * scale` longs and
+    * every per-edge contribution is the floor division
+    * `(dampNum * r(u)) div (dampDen * outdeg(u))`, so each
+    * iteration is exact integer arithmetic end-to-end — sums are
+    * order-independent, results are identical on any engine that
+    * replays the recurrence (q60's DuckDB oracle unrolls it in
+    * SQL), and no float summation ever enters the loop. The
+    * float-rank formulation would tie the result to Spark's
+    * nondeterministic aggregation order; the classic
+    * fixed-point-arithmetic trade accepts ~1/scale rounding per
+    * edge for bit-reproducibility.
+    *
+    * Semantics: nodes = distinct endpoints; initial rank
+    * `scale div N`; per iteration
+    * `r'(v) = base + sum over in-edges of contrib(u, v)` with
+    * `base = ((dampDen - dampNum) * scale) div (dampDen * N)`.
+    * Dangling nodes (no out-edges) leak their damped mass — the
+    * simple-variant convention, documented rather than
+    * redistributed; ranks are relative ordering scores, not a
+    * probability simplex.
+    *
+    * Scale shape: the out-degree join is precomputed once onto the
+    * edge list (static across iterations); each iteration is one
+    * equi-join of the rank table onto that edge list (shuffle on
+    * src) plus one map-side-combinable aggregation (shuffle on dst)
+    * — the canonical distributed PageRank step. Rank state is
+    * localCheckpoint'd every other round and before returning:
+    * without the cut the logical plan doubles every iteration (the
+    * q47 lesson). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int, dampNum: Long = 85L, dampDen: Long = 100L,
                scale: Long = 1000000000000L,
-               maxKernelEdges: Int = 4000000): DataFrame = {
-    require(iters >= 0, "iters must be nonnegative")
-    require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen, "damping must be in [0, 1]")
-    require(scale > 0, "scale must be positive")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-    // Size-routed (r19, the q105/q118 convention): up to
-    // `maxKernelEdges` RAW edge rows the scaled-integer recurrence
-    // runs as one driver-fold kernel — exact, because every step is
-    // long `div`/`+` whose fold order cannot change the result.
-    // Probe and collect are one bounded `limit(n+1).collect()`
-    // execution. The kernel keeps multi-edges and self-loops
-    // ([[denseDirectedKeepDup]]) — out-degree and contribution are
-    // per-ROW in this operator — and declines rows with null
-    // endpoints (no projection filters them here), routing those to
-    // the declarative plan whose join semantics define them.
-    if (maxKernelEdges > 0) {
-      val probed = e.limit(maxKernelEdges + 1).collect()
-      if (probed.length <= maxKernelEdges &&
-          !probed.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return pageRankKernel(edges.sparkSession, probed, iters,
-          dampNum, dampDen, scale)
-    }
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
-    val n = nodes.count()
-    if (n == 0) return nodes.withColumn("rank_scaled", lit(0L))
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // Static across iterations: every edge already carries its
-    // source's out-degree, so the loop never re-joins the degree
-    // table.
-    val edgesDeg = e.join(deg, "src").localCheckpoint(true)
-    val base = ((dampDen - dampNum) * scale) / (dampDen * n)
-    var ranks = nodes.withColumn("rank_scaled", lit(scale / n))
-    for (i <- 1 to iters) {
-      val contribs = edgesDeg
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        // `div`, not `/`: Column./ on longs is DOUBLE division, which
-        // would reintroduce the float rounding this operator exists
-        // to avoid.
-        .select(col("dst"),
-          expr(s"($dampNum * rank_scaled) div ($dampDen * outdeg)").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      ranks = nodes
-        .join(contribs.withColumnRenamed("dst", "node"), Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + coalesce(col("s"), lit(0L))).as("rank_scaled"))
-      // Cut lineage every OTHER round (and always before returning):
-      // the plan doubles per uncut round, so a cadence of 2 caps the
-      // depth at two join/agg layers while halving the eager
-      // materialization barriers — which, not data volume, dominate
-      // wall time between checkpoints.
-      if (i % 2 == 0 || i == iters) ranks = ranks.localCheckpoint(true)
-    }
-    ranks
-  }
-
-  /** Dense-id mapping of RAW directed `(a, b)` rows WITHOUT dedup —
-    * [[densePairs]]' sibling for operators whose semantics count
-    * multi-edges and self-loops ([[pageRank]]'s out-degree and
-    * per-edge contribution are per-ROW). Callers must have screened
-    * null endpoints. */
-  private def denseDirectedKeepDup(rows: Array[org.apache.spark.sql.Row])
-      : (Array[Long], Array[Int], Array[Int]) = {
-    val nodeSet = new java.util.TreeSet[java.lang.Long]()
-    rows.foreach { r => nodeSet.add(r.getLong(0)); nodeSet.add(r.getLong(1)) }
-    val nodes = new Array[Long](nodeSet.size())
-    locally {
-      var i = 0; val it = nodeSet.iterator()
-      while (it.hasNext) { nodes(i) = it.next(); i += 1 }
-    }
-    def dense(x: Long): Int = java.util.Arrays.binarySearch(nodes, x)
-    val eu = new Array[Int](rows.length)
-    val ev = new Array[Int](rows.length)
-    locally {
-      var i = 0
-      while (i < rows.length) {
-        eu(i) = dense(rows(i).getLong(0)); ev(i) = dense(rows(i).getLong(1))
-        i += 1
-      }
-    }
-    (nodes, eu, ev)
-  }
-
-  /** Driver-fold PageRank kernel: EXACTLY the declarative scaled-
-    * integer recurrence — init `scale div n`, per iteration
-    * `r'(v) = base + Σ (dampNum·r(u)) div (dampDen·outdeg(u))` over
-    * RAW edge rows (multi-edges and self-loops counted, dangling
-    * nodes leak mass — the declarative semantics verbatim; all
-    * operands are nonnegative, so Scala's truncating `/` IS SQL
-    * `div`). O(m) per iteration on long arrays; emit via broadcast +
-    * range map. */
-  private def pageRankKernel(spark: org.apache.spark.sql.SparkSession,
-                             rows: Array[org.apache.spark.sql.Row],
-                             iters: Int, dampNum: Long, dampDen: Long,
-                             scale: Long): DataFrame = {
-    import spark.implicits._
-    if (rows.isEmpty)
-      return spark.emptyDataset[(Long, Long)].toDF("node", "rank_scaled")
-    val (nodes, eu, ev) = denseDirectedKeepDup(rows)
-    val n = nodes.length
-    val m = eu.length
-    val outdeg = new Array[Long](n)
-    locally {
-      var i = 0
-      while (i < m) { outdeg(eu(i)) += 1L; i += 1 }
-    }
-    val base = ((dampDen - dampNum) * scale) / (dampDen * n)
-    var ranks = Array.fill(n)(scale / n)
-    var it = 0
-    while (it < iters) {
-      val s = new Array[Long](n)
-      var i = 0
-      while (i < m) {
-        s(ev(i)) += (dampNum * ranks(eu(i))) / (dampDen * outdeg(eu(i)))
-        i += 1
-      }
-      var v = 0
-      while (v < n) { s(v) += base; v += 1 }
-      ranks = s
-      it += 1
-    }
-    val bc = spark.sparkContext.broadcast((nodes, ranks))
-    spark.range(0, n.toLong).as[Long].map { i =>
-      val (bn, br) = bc.value
-      (bn(i.toInt), br(i.toInt))
-    }.toDF("node", "rank_scaled")
-  }
+               maxKernelEdges: Int = 4000000): DataFrame =
+    seededRank(edges, srcCol, dstCol, None, iters, dampNum, dampDen, scale,
+      maxKernelEdges, "rank_scaled")
 
   /** Personalized PageRank / TrustRank (Gyöngyi et al.): the
     * [[pageRank]] recurrence with teleport restricted to a SEED set —
@@ -1521,115 +1261,146 @@ object Graph {
                            seeds: DataFrame, seedCol: String, iters: Int,
                            dampNum: Long = 85L, dampDen: Long = 100L,
                            scale: Long = 1000000000000L,
-                           maxKernelEdges: Int = 4000000): DataFrame = {
+                           maxKernelEdges: Int = 4000000): DataFrame =
+    seededRank(edges, srcCol, dstCol, Some(seeds.select(col(seedCol).cast("long").as("node"))),
+      iters, dampNum, dampDen, scale, maxKernelEdges, "trust_scaled")
+
+  /** The seeded scaled-integer rank recurrence behind [[pageRank]]
+    * (`seeds` None: every node is a seed) and [[personalizedPageRank]]
+    * (a one-column `node` frame), emitted as `(node, out)`.
+    * Size-routed: up to `maxKernelEdges` raw edge rows — and as many
+    * seed rows — the driver-fold [[rankKernel]], otherwise
+    * [[rankViaJoins]]. A null seed matches no node on either route, so
+    * the seed collect drops nulls in the scan. */
+  private def seededRank(edges: DataFrame, srcCol: String, dstCol: String,
+                         seeds: Option[DataFrame], iters: Int,
+                         dampNum: Long, dampDen: Long, scale: Long,
+                         maxKernelEdges: Int, out: String): DataFrame = {
     require(iters >= 0, "iters must be nonnegative")
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen, "damping must be in [0, 1]")
     require(scale > 0, "scale must be positive")
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    // Size-routed like [[pageRank]] (r19): bounded limit-collect of
-    // BOTH the raw edge rows and the raw non-null seed rows (each
-    // under the same bound); null endpoints decline to the
-    // declarative plan. A null seed matches no node there, so the
-    // seed probe drops nulls in the scan, and duplicates are removed
-    // on the driver by the kernel's seed flags — no distinct exchange
-    // before the guard, and raw ≥ distinct keeps the bound
-    // conservative. The seed-exists guard is enforced identically on
-    // both routes.
-    if (maxKernelEdges > 0) {
-      val probed = e.limit(maxKernelEdges + 1).collect()
-      if (probed.length <= maxKernelEdges &&
-          !probed.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        val seedRows = seeds.select(col(seedCol).cast("long").as("node"))
-          .filter(col("node").isNotNull).limit(maxKernelEdges + 1).collect()
-        if (seedRows.length <= maxKernelEdges)
-          return personalizedPageRankKernel(edges.sparkSession, probed,
-            seedRows.map(_.getLong(0)), iters, dampNum, dampDen, scale)
+    def kernel(g: DenseEdges, seedIds: Option[Array[Long]]): DataFrame =
+      rankKernel(edges.sparkSession, g, seedIds, iters, dampNum, dampDen, scale, out)
+    KernelRoute.edges(e, maxKernelEdges).flatMap { g =>
+      seeds match {
+        case None => Some(kernel(g, None))
+        case Some(s) => KernelRoute.rows(s.filter(col("node").isNotNull), maxKernelEdges)
+          .map(r => kernel(g, Some(r.map(_.getLong(0)))))
       }
-    }
+    }.getOrElse(rankViaJoins(e, seeds, iters, dampNum, dampDen, scale, out))
+  }
+
+  private val NoSeed = "personalizedPageRank: no seed node exists in the graph"
+
+  /** The declarative seeded rank recurrence over `(src, dst)` edge rows
+    * — the route that survives any scale. `seeds` None flags every node
+    * with a literal, not a seed join, so a null endpoint node is a seed
+    * as in plain PageRank and the empty graph yields an empty frame; a
+    * seed frame that flags no node is rejected. */
+  private def rankViaJoins(e: DataFrame, seeds: Option[DataFrame], iters: Int,
+                           dampNum: Long, dampDen: Long, scale: Long,
+                           out: String): DataFrame = {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    val flagged = nodes.join(
-        seeds.select(col(seedCol).cast("long").as("node")).distinct()
-          .withColumn("__s", lit(1L)),
-        Seq("node"), "left")
-      .select(col("node"), coalesce(col("__s"), lit(0L)).as("__s"))
+    val flagged = seeds.fold(nodes.withColumn("__s", lit(1L))) { s =>
+        nodes.join(s.distinct().withColumn("__s", lit(1L)), Seq("node"), "left")
+          .select(col("node"), coalesce(col("__s"), lit(0L)).as("__s"))
+      }
       .localCheckpoint(true)
     val ns = flagged.filter(col("__s") === 1L).count()
-    require(ns > 0, "personalizedPageRank: no seed node exists in the graph")
+    if (ns == 0) {
+      require(seeds.isEmpty, NoSeed)
+      return flagged.select(col("node"), lit(0L).as(out))
+    }
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+    // Static across iterations: every edge already carries its
+    // source's out-degree, so the loop never re-joins the degree
+    // table.
     val edgesDeg = e.join(deg, "src").localCheckpoint(true)
     val base = ((dampDen - dampNum) * scale) / (dampDen * ns)
     def seedTerm(perSeed: Long): Column =
       when(col("__s") === 1L, lit(perSeed)).otherwise(lit(0L))
-    var ranks = flagged.select(col("node"),
-      seedTerm(scale / ns).as("trust_scaled"))
+    var ranks = flagged.select(col("node"), seedTerm(scale / ns).as(out))
     for (i <- 1 to iters) {
       val contribs = edgesDeg
         .join(ranks.withColumnRenamed("node", "src"), "src")
+        // `div`, not `/`: Column./ on longs is DOUBLE division, which
+        // would reintroduce the float rounding this operator exists
+        // to avoid.
         .select(col("dst"),
-          expr(s"($dampNum * trust_scaled) div ($dampDen * outdeg)").as("c"))
+          expr(s"($dampNum * $out) div ($dampDen * outdeg)").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
       ranks = flagged
         .join(contribs.withColumnRenamed("dst", "node"), Seq("node"), "left")
         .select(col("node"),
-          (seedTerm(base) + coalesce(col("s"), lit(0L))).as("trust_scaled"))
+          (seedTerm(base) + coalesce(col("s"), lit(0L))).as(out))
+      // Cut lineage every OTHER round (and always before returning):
+      // the plan doubles per uncut round, so a cadence of 2 caps the
+      // depth at two join/agg layers while halving the eager
+      // materialization barriers — which, not data volume, dominate
+      // wall time between checkpoints.
       if (i % 2 == 0 || i == iters) ranks = ranks.localCheckpoint(true)
     }
     ranks
   }
 
-  /** Driver-fold personalized-PageRank kernel: the [[pageRankKernel]]
-    * recurrence with the seeded base — init `scale div ns` on seed
-    * nodes (0 elsewhere), per iteration `t'(v) = (v seed ? base : 0)
-    * + Σ (dampNum·t(u)) div (dampDen·outdeg(u))` — exactly the
-    * declarative semantics, including the seed-must-exist guard. */
-  private def personalizedPageRankKernel(spark: org.apache.spark.sql.SparkSession,
-                                         rows: Array[org.apache.spark.sql.Row],
-                                         seedIds: Array[Long], iters: Int,
-                                         dampNum: Long, dampDen: Long,
-                                         scale: Long): DataFrame = {
+  /** Driver-fold kernel of the seeded rank recurrence: EXACTLY
+    * [[rankViaJoins]]'s semantics — init `scale div ns` on seeds (0
+    * elsewhere), per iteration `r'(v) = (v seed ? base : 0) +
+    * Σ (dampNum·r(u)) div (dampDen·outdeg(u))` over RAW edge rows
+    * (multi-edges and self-loops counted, since out-degree and
+    * contribution are per ROW; dangling nodes leak mass; all operands
+    * are nonnegative, so Scala's truncating `/` IS SQL `div`),
+    * including the seed-must-exist guard. `seedIds` None seeds every
+    * node. O(m) per iteration on long arrays; emit via broadcast +
+    * range map. */
+  private def rankKernel(spark: org.apache.spark.sql.SparkSession,
+                         g: DenseEdges, seedIds: Option[Array[Long]], iters: Int,
+                         dampNum: Long, dampDen: Long, scale: Long,
+                         out: String): DataFrame = {
     import spark.implicits._
-    val (nodes, eu, ev) =
-      if (rows.isEmpty) (new Array[Long](0), new Array[Int](0), new Array[Int](0))
-      else denseDirectedKeepDup(rows)
-    val n = nodes.length
-    val m = eu.length
-    val isSeed = new Array[Boolean](n)
-    var ns = 0L
-    locally {
-      var i = 0
-      while (i < seedIds.length) {
-        val d = java.util.Arrays.binarySearch(nodes, seedIds(i))
-        if (d >= 0 && !isSeed(d)) { isSeed(d) = true; ns += 1 }
-        i += 1
+    val (nodes, eu, ev) = (g.nodes, g.src, g.dst)
+    val n = g.n
+    val m = g.m
+    val isSeed = seedIds.fold(Array.fill(n)(true)) { ids =>
+      val flags = new Array[Boolean](n)
+      ids.foreach { x =>
+        val d = java.util.Arrays.binarySearch(nodes, x)
+        if (d >= 0) flags(d) = true
       }
+      flags
     }
-    require(ns > 0, "personalizedPageRank: no seed node exists in the graph")
+    val ns = isSeed.count(identity).toLong
+    if (ns == 0) {
+      require(seedIds.isEmpty, NoSeed)
+      return spark.emptyDataset[(Long, Long)].toDF("node", out)
+    }
     val outdeg = new Array[Long](n)
     locally {
       var i = 0
       while (i < m) { outdeg(eu(i)) += 1L; i += 1 }
     }
     val base = ((dampDen - dampNum) * scale) / (dampDen * ns)
-    var trust = Array.tabulate(n)(v => if (isSeed(v)) scale / ns else 0L)
+    var ranks = Array.tabulate(n)(v => if (isSeed(v)) scale / ns else 0L)
     var it = 0
     while (it < iters) {
       val s = new Array[Long](n)
       var i = 0
       while (i < m) {
-        s(ev(i)) += (dampNum * trust(eu(i))) / (dampDen * outdeg(eu(i)))
+        s(ev(i)) += (dampNum * ranks(eu(i))) / (dampDen * outdeg(eu(i)))
         i += 1
       }
       var v = 0
       while (v < n) { if (isSeed(v)) s(v) += base; v += 1 }
-      trust = s
+      ranks = s
       it += 1
     }
-    val bc = spark.sparkContext.broadcast((nodes, trust))
+    val bc = spark.sparkContext.broadcast((nodes, ranks))
     spark.range(0, n.toLong).as[Long].map { i =>
-      val (bn, bt) = bc.value
-      (bn(i.toInt), bt(i.toInt))
-    }.toDF("node", "trust_scaled")
+      val (bn, br) = bc.value
+      (bn(i.toInt), br(i.toInt))
+    }.toDF("node", out)
   }
 }

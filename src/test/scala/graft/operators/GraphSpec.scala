@@ -167,6 +167,81 @@ class GraphSpec extends SparkSuite {
     }
   }
 
+  /** A kernel route emits through `spark.range`; no declarative plan
+    * has a Range node. */
+  private def tookKernel(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.catalyst.plans.logical.Range => r
+    }.isDefined
+
+  /** Every size-routed operator, as a function of its edge frame and
+    * kernel bound. PPR seeds the even source nodes. */
+  private def routers: Seq[(String, (org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame)] = {
+    import org.apache.spark.sql.functions.col
+    Seq(
+      "triangleCount" -> ((df, b) => Graph.triangleCount(df, "src", "dst", b)),
+      "kHopReach" -> ((df, b) => Graph.kHopReach(df, "src", "dst", 2, b)),
+      "hyperBall" -> ((df, b) => Graph.hyperBall(df, "src", "dst", 2, 6, b)),
+      "hyperBallCanonical" ->
+        ((df, b) => Graph.hyperBallCanonical(Graph.canonicalUndirected(df, "src", "dst"), 2, 6, b)),
+      "labelPropagation" -> ((df, b) => Graph.labelPropagation(df, "src", "dst", 2, b)),
+      "linkPrediction" -> ((df, b) => Graph.linkPrediction(df, "src", "dst", maxKernelEdges = b)),
+      "adamicAdar" -> ((df, b) => Graph.adamicAdar(df, "src", "dst", maxKernelEdges = b)),
+      "hits" -> ((df, b) => Graph.hits(df, "src", "dst", 2, b)),
+      "pageRank" -> ((df, b) => Graph.pageRank(df, "src", "dst", 3, maxKernelEdges = b)),
+      "personalizedPageRank" -> ((df, b) => Graph.personalizedPageRank(df, "src", "dst",
+        df.select(col("src").as("node")).filter(col("node") % 2 === 0), "node", 3,
+        maxKernelEdges = b)),
+      "connectedComponents" -> ((df, b) => Dedup.connectedComponents(df, "src", "dst",
+        maxKernelEdges = b)))
+  }
+
+  test("every router at maxKernelEdges = Int.MaxValue takes its kernel, with the default bound's rows") {
+    import spark.implicits._
+    val df = Seq((0L, 1L), (1L, 2L), (2L, 0L)).toDF("src", "dst")
+    for ((name, route) <- routers) {
+      val got = route(df, Int.MaxValue)
+      assert(tookKernel(got), s"$name did not take the kernel route")
+      assert(got.collect().map(_.toSeq).toSet === route(df, 4000000).collect().map(_.toSeq).toSet,
+        s"$name diverged from the default bound")
+    }
+  }
+
+  test("every router at maxKernelEdges = 0 runs its declarative plan, on empty and non-empty input") {
+    import spark.implicits._
+    val graphs = Seq(
+      "empty" -> Seq.empty[(Long, Long)].toDF("src", "dst"),
+      "triangle" -> Seq((0L, 1L), (1L, 2L), (2L, 0L)).toDF("src", "dst"))
+    for ((graph, df) <- graphs; (name, route) <- routers
+         if !(graph == "empty" && name == "personalizedPageRank")) // no seed: rejected
+      assert(!tookKernel(route(df, 0)), s"$name on the $graph graph took the kernel route")
+  }
+
+  test("KernelRoute.edges ≡ sorted distinct endpoints as dense ids, rows kept; distinct dedups; declines") {
+    import spark.implicits._
+    def check(edges: Seq[(Long, Long)]): Unit = {
+      val g = KernelRoute.edges(edges.toDF("a", "b"), 100).get
+      val nodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct.sorted
+      assert(g.nodes.toSeq === nodes, s"node universe on $edges")
+      def pairs(e: DenseEdges) = (0 until e.m).map(i => (e.src(i), e.dst(i)))
+      val dense = edges.map { case (a, b) => (nodes.indexOf(a), nodes.indexOf(b)) }
+      assert(pairs(g).sorted === dense.sorted, s"dense rows on $edges")
+      val d = g.distinct
+      assert(d.nodes.toSeq === nodes)
+      assert(pairs(d) === dense.distinct.sorted, s"distinct on $edges")
+    }
+    // Negative and extreme ids, duplicate and reversed pairs, a self-loop.
+    check(Seq((-7L, 3L), (3L, -7L), (-7L, 3L), (Long.MaxValue, Long.MinValue + 1),
+      (0L, 0L), (-1L, Long.MaxValue), (Long.MinValue, -1L), (Long.MinValue + 1, Long.MaxValue)))
+    check(Seq.empty)
+    val nulls = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)), (Some(2L), None))
+      .toDF("a", "b")
+    assert(KernelRoute.edges(nulls, 100).isEmpty, "a null endpoint must decline")
+    val three = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("a", "b")
+    for ((bound, admits) <- Seq(-1 -> false, 0 -> false, 2 -> false, 3 -> true, Int.MaxValue -> true))
+      assert(KernelRoute.edges(three, bound).isDefined === admits, s"bound $bound")
+  }
+
   /** Sequential peel-to-fixpoint: the textbook k-core. */
   private def coreReference(edges: Seq[(Long, Long)], k: Int): Map[Long, Long] = {
     var ue = edges.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
@@ -203,6 +278,17 @@ class GraphSpec extends SparkSuite {
       assert(r0 >= r1 && r1 >= fix.size.toLong, "peel must shrink monotonically to the core")
       // Textbook property: the core's induced degrees all meet k.
       assert(expect.values.forall(_ >= k))
+    }
+    // Both peels reject the same arguments.
+    val df = Seq((1L, 2L)).toDF("src", "dst")
+    val bad = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "kCore k=0" -> (() => Graph.kCore(df, "src", "dst", 0, rounds = 1)),
+      "kCore rounds=-1" -> (() => Graph.kCore(df, "src", "dst", 2, rounds = -1)),
+      "kCoreFixpoint k=0" -> (() => Graph.kCoreFixpoint(df, "src", "dst", 0)),
+      "kCoreFixpoint maxRounds=-1" -> (() => Graph.kCoreFixpoint(df, "src", "dst", 2, maxRounds = -1)))
+    for ((name, build) <- bad) {
+      val err = intercept[IllegalArgumentException](build())
+      assert(err.getMessage.contains("k >= 1"), s"$name: ${err.getMessage}")
     }
   }
 
