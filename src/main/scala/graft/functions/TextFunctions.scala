@@ -23,12 +23,6 @@ object TextFunctions {
     * on this corpus). */
   def tokens(c: Column): Column = split(c, " ")
 
-  /** Generic whitespace tokenizer for free-form text. */
-  def tokensWs(c: Column): Column = split(trim(c), "\\s+")
-
-  /** Distinct tokens, first-occurrence order (matches DuckDB list_distinct counts). */
-  def distinctTokens(c: Column): Column = array_distinct(tokens(c))
-
   /** Token count (reference word_count, `process_all.py:358`). */
   def tokenCount(c: Column): Column = size(tokens(c))
 
@@ -86,12 +80,6 @@ object TextFunctions {
   /** Fraction of distinct tokens (lexical diversity). */
   def distinctRatio(c: Column): Column =
     size(array_distinct(tokens(c))) / size(tokens(c)).cast("double")
-
-  /** Mean token length. */
-  def meanTokenLen(c: Column): Column = {
-    val toks = tokens(c)
-    (length(c) - size(toks) + lit(1)) / size(toks).cast("double")
-  }
 
   /** Composite document quality score in [0,1]:
     * 0.4 * min(1, tokens/100) + 0.3 * distinct ratio + 0.3 * stopword hit.

@@ -39,10 +39,6 @@ object VectorFunctions {
   def cosinePrenormed(dotCol: Column, normA: Column, normB: Column): Column =
     dotCol / (normA * normB)
 
-  /** Squared euclidean distance. */
-  def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0d), (acc, v) => acc + v)
-
   /** Sign bit (0/1) of the dot product of `v` with a pseudo-random
     * hyperplane derived from `seed` — the building block for
     * random-hyperplane LSH. Plane component j is +1 when bit

@@ -43,15 +43,6 @@ object Audio {
   def resample(samples: Column, origSr: Column, targetSr: Column): Column =
     resampleUdf(samples, origSr, targetSr)
 
-  private val resampleSincUdf =
-    udf((s: Seq[Float], o: Int, t: Int) =>
-      Option(AudioOps.resampleSinc(if (s == null) null else s.toArray, o, t)))
-
-  /** X1 high-fidelity path: anti-aliased windowed-sinc resample
-    * (see [[AudioOps.resampleSinc]]) — same surface, swap-in kernel. */
-  def resampleHq(samples: Column, origSr: Column, targetSr: Int): Column =
-    resampleSincUdf(samples, origSr, lit(targetSr))
-
   /** X2: peak normalize to 0.95. */
   def normalize(samples: Column): Column = normalizeUdf(samples)
 

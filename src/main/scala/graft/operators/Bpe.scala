@@ -172,10 +172,8 @@ object Bpe {
   def learnMergesLocal(
       words: DataFrame, wordCol: String, freqCol: String,
       numMerges: Int, maxDictRows: Int = 1 << 20): (DataFrame, DataFrame) = {
-    val probe = initDict(words, wordCol, freqCol)
-      .select(col("word"), col("freq"))
-      .limit(maxDictRows + 1).collect()
-    require(probe.length <= maxDictRows,
+    val probe = Bounded.collectOrFail(
+      initDict(words, wordCol, freqCol).select(col("word"), col("freq")), maxDictRows)(
       s"learnMergesLocal: dictionary exceeds $maxDictRows rows - use learnMerges (distributed)")
     fitLocal(words.sparkSession, probe, numMerges)
   }
@@ -263,7 +261,7 @@ object Bpe {
   /** Size-guarded trainer: [[learnMergesLocal]] when the dictionary
     * fits the bounded collect, [[learnMerges]] (distributed rounds)
     * above it — the `nearDupPairsAuto` probe-and-route convention.
-    * The probe is a bounded `limit(n+1).count()`, so a web-scale
+    * The probe is one [[Bounded.collect]], so a web-scale
     * vocabulary pays one cheap partial scan and keeps every merge
     * round distributed. */
   def learnMergesAuto(
@@ -271,11 +269,10 @@ object Bpe {
       numMerges: Int, maxLocalDict: Int = 1 << 20): (DataFrame, DataFrame) = {
     // The probe IS the local fit's input when it fits — one scan,
     // never two.
-    val probe = initDict(words, wordCol, freqCol)
-      .select(col("word"), col("freq"))
-      .limit(maxLocalDict + 1).collect()
-    if (probe.length <= maxLocalDict) fitLocal(words.sparkSession, probe, numMerges)
-    else learnMerges(words, wordCol, freqCol, numMerges)
+    Bounded.collect(initDict(words, wordCol, freqCol).select(col("word"), col("freq")),
+        maxLocalDict)
+      .map(fitLocal(words.sparkSession, _, numMerges))
+      .getOrElse(learnMerges(words, wordCol, freqCol, numMerges))
   }
 
   /** Stateless BPE segmentation under a COLLECTED merge table — the

@@ -105,10 +105,8 @@ object CharLm {
   def collectModel(docs: DataFrame, rareFactor: Long = 2000,
                    textCol: String = "text",
                    maxModelRows: Int = 1 << 20): graft.functions.CharLmModel = {
-    val rows = bigramModel(docs, rareFactor, textCol)
-      .select(col("bg"), col("bg_count"))
-      .limit(maxModelRows + 1).collect()
-    require(rows.length <= maxModelRows,
+    val rows = Bounded.collectOrFail(
+      bigramModel(docs, rareFactor, textCol).select(col("bg"), col("bg_count")), maxModelRows)(
       s"bigram model exceeds $maxModelRows rows — not a char-bigram-sized census")
     val counts = rows.map(r => r.getString(0) -> r.getLong(1)).toMap
     graft.functions.CharLmModel(counts, counts.valuesIterator.sum, rareFactor)

@@ -335,9 +335,8 @@ object Clustering {
     // feeds a high-cardinality id column. Bounded limit-probe (the
     // nearDupPairsAuto discipline): distinct-labels scan stops at
     // maxLabels + 1 rows, never a full count.
-    require(embeddings.filter(col(labelCol).isNotNull)
-        .select(col(labelCol)).distinct()
-        .limit(maxLabels + 1).count() <= maxLabels,
+    require(Bounded.fits(embeddings.filter(col(labelCol).isNotNull)
+        .select(col(labelCol)).distinct(), maxLabels),
       s"labelCohesion: more than $maxLabels labels — the centroid pair " +
         "join is quadratic in labels; bucket or sample the labeling upstream")
     val dimSums = base.groupBy(col("__l"), col("__d"))

@@ -652,11 +652,9 @@ object Curation {
     val sized = docs.select(col(idCol).cast("long").as(idCol),
         size(TextFunctions.tokens(col(textCol))).cast("long").as("n_tokens"))
       .withColumn("__blk", expr(s"`$idCol` div $blockSize"))
-    val blockRows = sized.groupBy(col("__blk"))
+    val blockRows = Bounded.collectOrFail(sized.groupBy(col("__blk"))
       .agg(sum(col("n_tokens")).as("__bt"),
-        count(lit(1)).as("__n"), count_distinct(col(idCol)).as("__nd"))
-      .limit(maxBlocks + 1).collect()
-    require(blockRows.length <= maxBlocks,
+        count(lit(1)).as("__n"), count_distinct(col(idCol)).as("__nd")), maxBlocks)(
       s"more than $maxBlocks id blocks at blockSize=$blockSize — raise blockSize")
     // The walk order — and the oracle's RANGE-frame cumulative sum —
     // is only well-defined when ids are unique; a duplicated id would
@@ -1303,8 +1301,7 @@ object Curation {
       .groupBy(col("__d"))
       .agg(count(lit(1)).as("__n"), sum(col("__surp")).as("__s"))
       .select(col("__d"), expr("__s div __n").as("__loss"))
-    val probe = domLoss.limit(maxDomains + 1).collect()
-    require(probe.length <= maxDomains,
+    val probe = Bounded.collectOrFail(domLoss, maxDomains)(
       s"doremiMixWeights: more than $maxDomains domains — coarsen the domain key")
     // Deterministic order so the floored normalizations replay.
     val doms = probe.map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)

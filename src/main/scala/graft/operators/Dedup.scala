@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{GraftFunctions, TextFunctions}
@@ -548,7 +548,7 @@ object Dedup {
   private[graft] def deltaNearParts(corpus: DataFrame, delta: DataFrame, threshold: Double,
                                     idCol: String, textCol: String,
                                     maxBroadcastDelta: Int): DeltaParts = {
-    val smallDelta = delta.limit(maxBroadcastDelta + 1).count() <= maxBroadcastDelta
+    val smallDelta = Bounded.fits(delta, maxBroadcastDelta)
     def b(df: DataFrame): DataFrame = if (smallDelta) broadcast(df) else df
     val toksOf = array_sort(array_distinct(TextFunctions.tokens(col(textCol))))
     val dPrep = delta.select(col(idCol).as("dn_id"), toksOf.as("dtoks"),
@@ -890,8 +890,7 @@ object Dedup {
       // Probe the raw row count, not distinct signatures: rows <=
       // bound implies sigs <= bound and the probe is a plain limited
       // scan instead of a full signature+shuffle recomputation.
-      else if (maxBitmaskReps > 0 &&
-          probe.limit(maxBitmaskReps + 1).count() <= maxBitmaskReps) {
+      else if (Bounded.fits(probe, maxBitmaskReps)) {
         // Bounded rep count: one codegen'd broadcast nested-loop pass
         // over all signature pairs — an xor+popcount per pair beats
         // the banding plan's explode + chunk shuffle + distinct until
@@ -976,8 +975,8 @@ object Dedup {
     * Both paths are exact — no probabilistic recall loss. Both
     * strategy probes run on the RAW input, never derived lineage:
     * a `distinct().orderBy().limit(65)` vocabulary probe (partial
-    * top-k per partition) and a `limit(maxBitmaskReps+1).count()`
-    * doc-count probe (docs ≤ bound implies reps ≤ bound).
+    * top-k per partition) and a [[Bounded.fits]] doc-count probe
+    * (docs ≤ bound implies reps ≤ bound).
     */
   def jaccardSimilarityJoin(docs: DataFrame, threshold: Double,
                             idCol: String = "doc_id", textCol: String = "text",
@@ -1015,19 +1014,14 @@ object Dedup {
     // (identical-set collapse never changes the token universe).
     // Conservative when a huge corpus collapses to few sets — that
     // case falls to the prefix path, which is still correct.
-    val smallCorpus = docs.limit(maxBitmaskReps + 1).count() <= maxBitmaskReps
-    val verified = {
-      val vocabProbe =
-        if (!smallCorpus) Array.empty[String]
-        else docs
-          .select(explode(array_distinct(TextFunctions.tokens(col(textCol)))).as("tok"))
-          .distinct().orderBy("tok")
-          .limit(MaxBitmaskVocab + 1).collect().map(_.getString(0))
-      if (smallCorpus && vocabProbe.length <= MaxBitmaskVocab)
-        bitmaskAllPairs(reps, vocabProbe.sorted, threshold)
-      else
-        prefixFilteredPairs(reps, tok, freq, threshold)
-    }
+    val vocab =
+      if (!Bounded.fits(docs, maxBitmaskReps)) None
+      else Bounded.collect(docs
+        .select(explode(array_distinct(TextFunctions.tokens(col(textCol)))).as("tok"))
+        .distinct().orderBy("tok").as[String](Encoders.STRING), MaxBitmaskVocab)
+    val verified = vocab
+      .map(v => bitmaskAllPairs(reps, v.sorted, threshold))
+      .getOrElse(prefixFilteredPairs(reps, tok, freq, threshold))
 
     if (joinExpand) expandPairsViaJoin(memberRows(docs, idCol, textCol), verified)
     else expandPairs(reps, verified)

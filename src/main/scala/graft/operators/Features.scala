@@ -63,9 +63,8 @@ object Features {
     * upstream) or the dimensionality exceeds `maxDims`. */
   def fitStandardizer(embeddings: DataFrame, vecCol: String = "embedding",
                       scale: Long = 1000000L, maxDims: Int = 4096): StandardizerModel = {
-    val rows = dimensionStats(embeddings, vecCol, scale)
-      .orderBy("dim").limit(maxDims + 1).collect()
-    require(rows.length <= maxDims, s"more than $maxDims dimensions")
+    val rows = Bounded.collectOrFail(dimensionStats(embeddings, vecCol, scale)
+      .orderBy("dim"), maxDims)(s"more than $maxDims dimensions")
     require(rows.nonEmpty, "empty corpus")
     require(rows.forall(!_.isNullAt(3)),
       "degenerate (zero-variance) dimension — drop it before standardizing")
@@ -262,13 +261,12 @@ object Features {
     val quantized = transform(col(vecCol).cast("array<double>"),
       x => floor(x * scale + 0.5d).cast("long"))
     val nonNull = embeddings.filter(col(vecCol).isNotNull)
-    val sums = nonNull
+    val sums = Bounded.collectOrFail(nonNull
       .select(posexplode(quantized).as(Seq("__d", "__v")))
       .groupBy(col("__d"))
       .agg(count(lit(1)).as("__n"), sum(col("__v")).as("__s"))
-      .orderBy("__d").limit(maxDims + 1).collect()
+      .orderBy("__d"), maxDims)(s"more than $maxDims dimensions")
     require(sums.nonEmpty, "empty corpus")
-    require(sums.length <= maxDims, s"more than $maxDims dimensions")
     val n = sums.head.getLong(1)
     val means = sums.map(r => r.getLong(2) / n) // trunc toward zero
     val d = means.length

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
@@ -488,7 +488,7 @@ object Graph {
     * Σ|B_k(u)| pair rows (quadratic-ish on dense graphs). The edge
     * set is canonicalized and MATERIALIZED once up front (both
     * branches need exactly that frame anyway), the probe is a
-    * bounded `limit(n+1).count()` on the materialized frame (no
+    * [[Bounded.fits]] limited count on the materialized frame (no
     * upstream re-execution), and the routed branch consumes the
     * same frame — so the synthesis lineage above the operator runs
     * exactly once regardless of route.
@@ -536,9 +536,7 @@ object Graph {
     } else {
       // Above the kernel bound the exact branch stays declarative,
       // probed by a bounded count.
-      val probe = math.min(maxExactEdges + 1, Int.MaxValue.toLong).toInt
-      val small = ue.limit(probe).count() <= maxExactEdges
-      if (small) kHopReachCanonical(ue, k)
+      if (Bounded.fits(ue, maxExactEdges)) kHopReachCanonical(ue, k)
       else hyperBallCanonical(ue, k, p)
         .select(col("node"),
           floor(col("ball_estimate") - lit(0.5)).cast("long").as("n_reach"))
@@ -1286,8 +1284,8 @@ object Graph {
     KernelRoute.edges(e, maxKernelEdges).flatMap { g =>
       seeds match {
         case None => Some(kernel(g, None))
-        case Some(s) => KernelRoute.rows(s.filter(col("node").isNotNull), maxKernelEdges)
-          .map(r => kernel(g, Some(r.map(_.getLong(0)))))
+        case Some(s) => Bounded.collect(s.filter(col("node").isNotNull).as[Long](Encoders.scalaLong),
+          maxKernelEdges).map(ids => kernel(g, Some(ids)))
       }
     }.getOrElse(rankViaJoins(e, seeds, iters, dampNum, dampDen, scale, out))
   }

@@ -47,37 +47,27 @@ private[operators] final class DenseEdges(val nodes: Array[Long],
   * it stays the reference the differential specs compare each kernel
   * against: a bound ≤ 0 forces it.
   *
-  * Probe and collect are ONE bounded execution: `limit(bound + 1)
-  * .collect()` short-circuits the scan once bound+1 rows are gathered,
-  * so at most bound+1 rows ever reach the driver — the guard holds even
-  * for a non-deterministic source whose separate count would disagree
-  * with a second collect, and the over-bound route pays no extra pass.
-  * The probe counts RAW rows, with no distinct exchange before the
-  * guard; raw ≥ distinct, so the bound still caps what reaches the
-  * driver, and a duplicate-heavy graph routes conservatively to the
-  * declarative plan, whose own distinct handles it at any scale. The
-  * canonical kernels dedup exactly on the driver ([[DenseEdges.distinct]]).
+  * Probe and collect are ONE bounded execution ([[Bounded.collect]]),
+  * so the guard holds even for a non-deterministic source whose
+  * separate count would disagree with a second collect, and the
+  * over-bound route pays no extra pass. The probe counts RAW rows,
+  * with no distinct exchange before the guard; raw ≥ distinct, so the
+  * bound still caps what reaches the driver, and a duplicate-heavy
+  * graph routes conservatively to the declarative plan, whose own
+  * distinct handles it at any scale. The canonical kernels dedup
+  * exactly on the driver ([[DenseEdges.distinct]]).
   *
   * The rows are Row-typed, ~80–100 B each on the driver; this is the
   * one place a typed, smaller collect would go. */
 private[operators] object KernelRoute {
 
-  /** The rows of `df` when there are at most `bound` of them (None when
-    * `bound` ≤ 0 or the input is larger). The limit is computed without
-    * overflow, so `Int.MaxValue` admits every input. */
-  def rows(df: DataFrame, bound: Int): Option[Array[Row]] =
-    if (bound <= 0) None
-    else {
-      val got = df.limit(math.min(bound.toLong + 1L, Int.MaxValue.toLong).toInt).collect()
-      if (got.length <= bound) Some(got) else None
-    }
-
-  /** [[rows]] of a two-long-column edge frame, mapped to dense ids with
-    * duplicates kept. Declines (None) when any endpoint is null: no
-    * projection filtered those, and the declarative plan's join
-    * semantics define what a null node means. */
+  /** The rows of a two-long-column edge frame when there are at most
+    * `bound` of them, mapped to dense ids with duplicates kept. Declines
+    * (None) above the bound, at a bound ≤ 0, and when any endpoint is
+    * null: no projection filtered those, and the declarative plan's
+    * join semantics define what a null node means. */
   def edges(df: DataFrame, bound: Int): Option[DenseEdges] =
-    rows(df, bound)
+    Bounded.collect(df, bound)
       .filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
       .map(dense)
 

@@ -148,14 +148,11 @@ object QualityClassifier {
   def collectModelOpt(docs: DataFrame, isPositive: Column, minCount: Long = 2,
                       textCol: String = "text",
                       maxVocab: Int = 1 << 21): Option[WordLmModel] = {
-    val rows = fit(docs, isPositive, minCount, textCol)
-      .limit(maxVocab + 1).collect()
-    if (rows.length > maxVocab) None
-    else {
+    Bounded.collect(fit(docs, isPositive, minCount, textCol), maxVocab).map { rows =>
       val counts = rows.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      Some(WordLmModel(counts,
+      WordLmModel(counts,
         counts.valuesIterator.map(_._1).sum,
-        counts.valuesIterator.map(_._2).sum))
+        counts.valuesIterator.map(_._2).sum)
     }
   }
 

@@ -448,8 +448,8 @@ object Similarity {
   /** Size-guarded near-duplicate pairs: exact [[nearDupPairs]] for
     * corpora up to `maxExactRows`, [[nearDupPairsLsh]] above it —
     * the q22 `maxClusterIds` routing pattern applied to the one
-    * remaining quadratic plan. The probe is a bounded
-    * `limit(n+1).count()` scan (never a full count), so a 100 TB
+    * remaining quadratic plan. The probe is a [[Bounded.fits]]
+    * limited count (never a full count), so a 100 TB
     * corpus pays one cheap partial scan and routes to the bucketed
     * path; only a corpus that could actually afford the exact
     * self-join runs it. Both branches emit the same
@@ -466,8 +466,7 @@ object Similarity {
                        nPlanes: Int = 6, nTables: Int = 16,
                        maxExactRows: Int = 16384,
                        idCol: String = "vec_id"): DataFrame = {
-    val small = embeddings.limit(maxExactRows + 1).count() <= maxExactRows
-    if (small) nearDupPairs(embeddings, threshold, idCol)
+    if (Bounded.fits(embeddings, maxExactRows)) nearDupPairs(embeddings, threshold, idCol)
     else nearDupPairsLsh(embeddings, threshold, dim, nPlanes, nTables, idCol)
   }
 
@@ -921,7 +920,7 @@ object Similarity {
                         maxFitRows: Int = 262144): DataFrame = {
     require(k >= 1 && nProbe >= 1, "k and nProbe must be positive")
     val indexed = prepared(corpus, idCol).join(index, Seq(idCol))
-    require(indexed.limit(maxFitRows + 1).count() <= maxFitRows,
+    require(Bounded.fits(indexed, maxFitRows),
       s"ivfServeBroadcast: indexed corpus exceeds $maxFitRows rows — serve " +
         "sharded (partition queries × index shards, merge top-k) or use the " +
         "batch ivfAnnWithIndex join")
@@ -1051,10 +1050,8 @@ object Similarity {
                 idCol: String = "vec_id", vecCol: String = "embedding"): Seq[MmrPick] = {
     require(k >= 1, "k must be >= 1")
     require(lambda >= 0.0 && lambda <= 1.0, "lambda must be in [0, 1]")
-    val rows = shortlist
-      .select(col(idCol).cast("long"), asDouble(col(vecCol)))
-      .limit(maxShortlist + 1).collect()
-    require(rows.length <= maxShortlist,
+    val rows = Bounded.collectOrFail(
+      shortlist.select(col(idCol).cast("long"), asDouble(col(vecCol))), maxShortlist)(
       s"mmrSelect shortlist exceeds $maxShortlist rows — diversification is " +
         "O(k·n) driver work by design; shrink the shortlist upstream")
     def dotA(a: Array[Double], b: Array[Double]): Double = {
@@ -1177,8 +1174,7 @@ object Similarity {
                    maxFitRows: Int = 16384): DataFrame = {
     require(m >= 1 && beam >= 1 && hops >= 1 && k >= 1,
       "m, beam, hops, k must be positive")
-    val nOk = corpus.limit(maxFitRows + 1).count() <= maxFitRows
-    require(nOk,
+    require(Bounded.fits(corpus, maxFitRows),
       s"graphAnnBeam: corpus exceeds $maxFitRows rows — build the neighbor " +
         "graph from LSH/IVF candidate pairs upstream and pass it explicitly")
     val c = prepared(corpus, idCol)

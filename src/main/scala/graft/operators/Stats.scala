@@ -21,7 +21,7 @@ object Stats {
     * cardinality and the downstream census window becomes exactly
     * the corpus-in-one-task shape the census move exists to kill.
     *
-    * The `limit(maxRows + 1)` caps what can enter block storage —
+    * The [[Bounded.cap]] limit caps what can enter block storage —
     * on adversarial input the checkpoint holds maxRows + 1 rows,
     * never the oversized census (the r13 ADVICE ordering: the guard
     * must fire BEFORE a full materialization, not after). The
@@ -33,39 +33,12 @@ object Stats {
   private[graft] def boundedCensus(census: DataFrame, maxRows: Long,
                                    what: String): DataFrame = {
     require(maxRows >= 1, "maxRows must be positive")
-    val probe = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
-    val capped = census.limit(probe).localCheckpoint(true)
+    val capped = Bounded.cap(census, maxRows).localCheckpoint(true)
     require(capped.count() <= maxRows,
       s"$what: more than $maxRows distinct census rows — quantize/bucket coarser upstream")
     capped
   }
 
-  /** Per-group simple linear regression (ordinary least squares) of
-    * `yCol` on `xCol`, plus Pearson r²: returns one row per group
-    * with `n`, `slope`, `intercept`, `r2`.
-    *
-    * Exactness contract (the q71 oracle hash-gates it): x and y are
-    * cast to DECIMAL before summing, so the six sufficient sums
-    * (n, Σx, Σy, Σx², Σxy, Σy²) are EXACT and order-independent —
-    * the nondeterministic float-sum trap that makes naive
-    * distributed regression unreproducible never opens. The
-    * closed-form step then runs in doubles through correctly-rounded
-    * IEEE ops only (casts, *, -, /), written in the same expression
-    * shape on both engines, hence bit-identical results. Callers
-    * should pre-center x (e.g. rebase epoch seconds to the corpus
-    * era) so x² stays inside the declared decimal precision, and
-    * note the decimal casts QUANTIZE the inputs: x to `xScale`
-    * places (default 0 — integral predictors) and y to `yScale`
-    * places, half-up. Pass wider scales for fractional inputs.
-    *
-    * Rows with a null x or y — including values that overflow the
-    * declared decimal precision, which cast to null — are excluded
-    * entirely: `n` and every sum cover exactly the observed (x, y)
-    * pairs, the OLS
-    * convention (counting nulls into n while null-skipping the sums
-    * would silently skew every coefficient). Degenerate groups
-    * (constant x, constant y, or a single row) yield null
-    * slope/intercept/r² rather than ±Inf/NaN. */
   /** Distribution-DRIFT monitor: Pearson's chi-square statistic of
     * each group's value histogram against the pooled distribution —
     * the "did this source/day change shape?" gate a production
@@ -120,11 +93,10 @@ object Stats {
   /** Fit a [[HistogramBaseline]] on a reference corpus/period. */
   def fitHistogramBaseline(df: DataFrame, valueCol: Column, binsPerUnit: Int = 4,
                            maxBins: Int = 1 << 20): HistogramBaseline = {
-    val rows = df.filter(valueCol.isNotNull && !isnan(valueCol))
+    val rows = Bounded.collectOrFail(df.filter(valueCol.isNotNull && !isnan(valueCol))
       .groupBy(Sketches.histogramBin(valueCol, binsPerUnit).as("bin"))
       .agg(count(lit(1)).as("cnt"))
-      .orderBy("bin").limit(maxBins + 1).collect()
-    require(rows.length <= maxBins, s"more than $maxBins bins — raise binsPerUnit granularity")
+      .orderBy("bin"), maxBins)(s"more than $maxBins bins — raise binsPerUnit granularity")
     HistogramBaseline(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
   }
 
@@ -349,6 +321,32 @@ object Stats {
           col("__tie")).as("var18")): _*)
   }
 
+  /** Per-group simple linear regression (ordinary least squares) of
+    * `yCol` on `xCol`, plus Pearson r²: returns one row per group
+    * with `n`, `slope`, `intercept`, `r2`.
+    *
+    * Exactness contract (the q71 oracle hash-gates it): x and y are
+    * cast to DECIMAL before summing, so the six sufficient sums
+    * (n, Σx, Σy, Σx², Σxy, Σy²) are EXACT and order-independent —
+    * the nondeterministic float-sum trap that makes naive
+    * distributed regression unreproducible never opens. The
+    * closed-form step then runs in doubles through correctly-rounded
+    * IEEE ops only (casts, *, -, /), written in the same expression
+    * shape on both engines, hence bit-identical results. Callers
+    * should pre-center x (e.g. rebase epoch seconds to the corpus
+    * era) so x² stays inside the declared decimal precision, and
+    * note the decimal casts QUANTIZE the inputs: x to `xScale`
+    * places (default 0 — integral predictors) and y to `yScale`
+    * places, half-up. Pass wider scales for fractional inputs.
+    *
+    * Rows with a null x or y — including values that overflow the
+    * declared decimal precision, which cast to null — are excluded
+    * entirely: `n` and every sum cover exactly the observed (x, y)
+    * pairs, the OLS
+    * convention (counting nulls into n while null-skipping the sums
+    * would silently skew every coefficient). Degenerate groups
+    * (constant x, constant y, or a single row) yield null
+    * slope/intercept/r² rather than ±Inf/NaN. */
   def linearFit(df: DataFrame, groupCols: Seq[String],
                 xCol: Column, yCol: Column,
                 xPrec: Int = 12, xScale: Int = 0,
@@ -518,13 +516,9 @@ object Stats {
     * window ever partitions by a score value (the r12 verdict's
     * skew risk: one hot value used to serialize a corpus fraction
     * into a single task's sort — pinned at the q144/q145 gates).
-    * Output is a single row: `(n, slope, intercept, r2, spearman)`.
-    *
-    * `binsPerUnit` is retained for signature compatibility with the
-    * r11/r12 blocked-rank formulation; the census path no longer
-    * bins. `idCol` likewise only names a column to exclude. */
-  def spearman(df: DataFrame, idCol: String, xCol: Column, yCol: Column,
-               binsPerUnit: Int = 4, maxBins: Int = 1 << 20): DataFrame = {
+    * Output is a single row: `(n, slope, intercept, r2, spearman)`. */
+  def spearman(df: DataFrame, xCol: Column, yCol: Column,
+               maxBins: Int = 1 << 20): DataFrame = {
     val scored = df.select(xCol.cast("long").as("__x"),
         yCol.cast("long").as("__y"))
       .filter(col("__x").isNotNull && col("__y").isNotNull)
@@ -598,13 +592,8 @@ object Stats {
     * ever materialized and no window partitions by the score value
     * (the r12 verdict's skew risk: one hot score used to serialize
     * a corpus fraction into a single task — pinned at the q144
-    * gate).
-    *
-    * `idCol`/`binsPerUnit` are retained for signature compatibility
-    * with the r11/r12 blocked-rank formulation; the census path
-    * uses neither. */
-  def classAuc(df: DataFrame, idCol: String, scoreCol: Column,
-               labelCol: String, binsPerUnit: Int = 4,
+    * gate). */
+  def classAuc(df: DataFrame, scoreCol: Column, labelCol: String,
                maxBins: Int = 1 << 20): DataFrame = {
     val scored = df.select(scoreCol.cast("long").as("__v"),
         col(labelCol).cast("long").as("__label"))
@@ -658,9 +647,8 @@ object Stats {
     val rows = df.filter(v.isNotNull)
       .select(col(idCol), v.as("v"),
         floor(v * binsPerUnit).cast("long").as("__bin"))
-    val binRows = rows.groupBy(col("__bin")).agg(count(lit(1)).as("__c"))
-      .limit(maxBins + 1).collect()
-    require(binRows.length <= maxBins,
+    val binRows = Bounded.collectOrFail(
+      rows.groupBy(col("__bin")).agg(count(lit(1)).as("__c")), maxBins)(
       s"more than $maxBins value bins at binsPerUnit=$binsPerUnit — lower binsPerUnit")
     require(binRows.nonEmpty, "empty input")
     val sorted = binRows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)

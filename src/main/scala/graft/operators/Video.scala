@@ -184,13 +184,6 @@ object Video {
     frames.toArray
   }
 
-  private val aviInfoUdf = udf((b: Array[Byte]) => Option(aviInfo(b)))
-
-  /** Header-only video metadata column (struct<width, height,
-    * usPerFrame, totalFrames, fourcc>, null for non-AVI) — metadata
-    * queries never touch frame data. */
-  def videoInfo(bin: Column): Column = aviInfoUdf(bin)
-
   private def sampledFramesUdf(everyK: Int) = udf { (b: Array[Byte]) =>
     val all = decodeAviFrames(b)
     if (all == null) null

@@ -1805,7 +1805,7 @@ object VectorQueries {
                  / (2.0 * CAST(a.n_pos AS DOUBLE)
                     * CAST(nn.n - a.n_pos AS DOUBLE)) END AS auc
       FROM a CROSS JOIN nn ORDER BY label""")) { (s, d) =>
-      graft.operators.Stats.classAuc(Tables.embeddings(s, d), "vec_id",
+      graft.operators.Stats.classAuc(Tables.embeddings(s, d),
           floor(element_at(col("embedding").cast("array<double>"), 1)
             * 1000000L + 0.5d),
           "label")
@@ -1856,7 +1856,7 @@ object VectorQueries {
       FROM f""")) { (s, d) =>
       val emb = Tables.embeddings(s, d).select(col("vec_id"),
         col("embedding").cast("array<double>").as("e"))
-      graft.operators.Stats.spearman(emb, "vec_id",
+      graft.operators.Stats.spearman(emb,
         floor(element_at(col("e"), 1) * 8 + 0.5d),
         floor(element_at(col("e"), 2) * 8 + 0.5d))
     },

@@ -272,7 +272,7 @@ class StatsSpec extends SparkSuite {
       } yield (s, l))
     } yield rows.zipWithIndex.map { case ((s, l), i) => (i.toLong, s, l) }
     for (rows <- PropSampling.sample(gen, n = 8)) {
-      val got = Stats.classAuc(rows.toDF("id", "s", "l"), "id", col("s"), "l")
+      val got = Stats.classAuc(rows.toDF("id", "s", "l"), col("s"), "l")
         .collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
           if (r.isNullAt(4)) None else Some(r.getDouble(4)))))
@@ -299,12 +299,12 @@ class StatsSpec extends SparkSuite {
     // Perfect separation: class-1 scores all above class-0 → AUC 1;
     // class 0 (one-vs-rest, scores all below) → AUC 0.
     val perfect = Seq((1L, 10L, 1L), (2L, 11L, 1L), (3L, 1L, 0L), (4L, 2L, 0L))
-    val p = Stats.classAuc(perfect.toDF("id", "s", "l"), "id", col("s"), "l")
+    val p = Stats.classAuc(perfect.toDF("id", "s", "l"), col("s"), "l")
       .collect().map(r => r.getLong(0) -> r.getDouble(4)).toMap
     assert(p(1L) === 1.0d && p(0L) === 0.0d, p.toString)
     // Single class: empty complement → null AUC.
     val mono = Seq((1L, 3L, 7L), (2L, 4L, 7L)).toDF("id", "s", "l")
-    assert(Stats.classAuc(mono, "id", col("s"), "l").collect().head.isNullAt(4))
+    assert(Stats.classAuc(mono, col("s"), "l").collect().head.isNullAt(4))
   }
 
   test("spearman ≡ driver mid-rank Pearson replay; monotone fixtures hit ±1 exactly") {
@@ -337,7 +337,7 @@ class StatsSpec extends SparkSuite {
     } yield rows.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
     for (rows <- PropSampling.sample(gen, n = 8)
          if rows.map(_._2).distinct.size > 1 && rows.map(_._3).distinct.size > 1) {
-      val got = Stats.spearman(rows.toDF("id", "x", "y"), "id", col("x"), col("y"))
+      val got = Stats.spearman(rows.toDF("id", "x", "y"), col("x"), col("y"))
         .collect().head.getDouble(4)
       assert(got === reference(rows), s"spearman diverged on $rows")
     }
@@ -345,14 +345,14 @@ class StatsSpec extends SparkSuite {
     // reversed: -1 exactly. Ranks make this exact where Pearson on
     // raw values would not be.
     val mono = (1L to 20L).map(i => (i, i, i * i))
-    assert(Stats.spearman(mono.toDF("id", "x", "y"), "id", col("x"), col("y"))
+    assert(Stats.spearman(mono.toDF("id", "x", "y"), col("x"), col("y"))
       .collect().head.getDouble(4) === 1.0d)
     val rev = (1L to 20L).map(i => (i, i, -(i * i)))
-    assert(Stats.spearman(rev.toDF("id", "x", "y"), "id", col("x"), col("y"))
+    assert(Stats.spearman(rev.toDF("id", "x", "y"), col("x"), col("y"))
       .collect().head.getDouble(4) === -1.0d)
     // A constant variable has zero rank variance: null rho, never NaN.
     val const = (1L to 5L).map(i => (i, 3L, i))
-    assert(Stats.spearman(const.toDF("id", "x", "y"), "id", col("x"), col("y"))
+    assert(Stats.spearman(const.toDF("id", "x", "y"), col("x"), col("y"))
       .collect().head.isNullAt(4))
   }
 
@@ -552,10 +552,10 @@ class StatsSpec extends SparkSuite {
       Stats.madOutliers(df, Seq("g"), "id", col("v"), maxBins = 3))
     assert(mad.getMessage.contains("census rows"))
     val sp = intercept[IllegalArgumentException](
-      Stats.spearman(df, "id", col("id"), col("v"), maxBins = 3))
+      Stats.spearman(df, col("id"), col("v"), maxBins = 3))
     assert(sp.getMessage.contains("census rows"))
     val auc = intercept[IllegalArgumentException](
-      Stats.classAuc(df.withColumn("l", col("id") % 2), "id", col("v"), "l",
+      Stats.classAuc(df.withColumn("l", col("id") % 2), col("v"), "l",
         maxBins = 3))
     assert(auc.getMessage.contains("census rows"))
     // Under the bound the guarded operators still answer exactly: the
