@@ -23,9 +23,8 @@ import org.apache.spark.sql.Dataset
 private[graft] object Bounded {
 
   /** `ds` limited to `bound + 1` rows, or `ds` itself when `bound + 1`
-    * is not a valid limit. For callers (a ≥ 1 `bound`) that must keep
-    * the capped frame rather than collect or count it. */
-  def cap[T](ds: Dataset[T], bound: Long): Dataset[T] =
+    * is not a valid limit. */
+  private def cap[T](ds: Dataset[T], bound: Long): Dataset[T] =
     if (bound < Int.MaxValue) ds.limit(bound.toInt + 1) else ds
 
   /** Every row of `ds` when it has at most `bound` rows, in one job;

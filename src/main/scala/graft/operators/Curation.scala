@@ -1163,12 +1163,13 @@ object Curation {
     * for that line's cells rather than dividing by zero.
     *
     * Scale shape: ONE corpus shuffle builds the (row, col, n)
-    * census (map-side combined); the `maxCells` fail-fast bounds
-    * everything after it BY CONSTRUCTION (the [[graft.operators
-    * .Stats.boundedCensus]] discipline), so the 2×`rounds` scaling
-    * passes and the in-frame target windows run over a single-
-    * partition frame that cannot exceed `maxCells` rows no matter
-    * the corpus.
+    * census (map-side combined); an in-plan `maxCells` guard fails
+    * the query on a larger census, so the 2×`rounds` scaling passes
+    * and the in-frame target windows run over a single-partition
+    * frame of at most `maxCells` rows. The guard is evaluated inside
+    * that single-partition window, so an oversized census reaches
+    * one task before it trips (unlike [[Stats.census]]'s bounded
+    * collect).
     * Headroom: cell ≤ total·10⁶ and the per-pass product
     * cell·target_e6 ≤ (total·10⁶)² needs total ≤ 10¹² rows inside
     * decimal(38,0) — guarded loud. */

@@ -763,9 +763,10 @@ object Temporal {
     val gcols = keyCols.map(col)
     // Bounded by CONSTRUCTION (the q62/q138 convention): the census
     // is calendar-bounded for sane bucket widths, but a degenerate
-    // bucketNs makes it corpus-sized — fail fast, and the checkpoint
-    // also serves the trend window + phase profile double-consume.
-    val census = Stats.boundedCensus(
+    // bucketNs makes it corpus-sized — fail fast. The local frame the
+    // census comes back as serves the trend window + phase profile
+    // double-consume.
+    val census = Stats.census(
       valueCensus(events, keyCols, tsCol, valueCol, bucketNs),
       maxBins.toLong, "seasonalDecompose (keys, bucket) census")
     val win = Window.partitionBy(gcols: _*).orderBy(col("bucket"))
@@ -860,8 +861,8 @@ object Temporal {
     * realized split TREE, not a padded grid.
     *
     * Scale shape: the corpus reduces to the bounded per-key bucket
-    * census ONCE (boundedCensus checkpoint — every level re-reads the
-    * materialized frame, not the corpus lineage); each level is a
+    * census ONCE ([[Stats.census]]'s bounded collect — every level
+    * re-reads the local frame, not the corpus lineage); each level is a
     * census-space window + argmax aggregate + a broadcast re-attach
     * of at most keys × 2^level split rows. Depth is capped at 16 —
     * 2^16 segments per key is far past any honest use, and the cap
@@ -874,7 +875,7 @@ object Temporal {
       "n_left", "n_right", "left_mean_e4", "right_mean_e4")
     require(!keyCols.exists(reserved), s"key columns may not use the reserved names $reserved")
     val gcols = keyCols.map(col)
-    var census = Stats.boundedCensus(
+    var census = Stats.census(
       valueCensus(events, keyCols, tsCol, valueCol, bucketNs),
       maxBins.toLong, "binarySegmentation (keys, bucket) census")
       .withColumn("seg", lit("T"))

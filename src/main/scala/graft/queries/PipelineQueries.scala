@@ -660,12 +660,11 @@ object PipelineQueries {
 
     // ---- q206: isotonic calibration — "does a higher value-score
     // really mean a higher purchase propensity, and what IS the
-    // calibrated rate per score band?" PAVA computed by the exact
-    // minimax identity entirely in census space (≤64 score bins →
-    // bounded pair cells; averages e9-quantized BEFORE min/max,
-    // which commutes with the monotone truncation, so the output is
-    // exactly trunc(PAVA) and hash-gates). iso_e9 is non-decreasing
-    // in bin by construction.
+    // calibrated rate per score band?" PAVA runs on the driver over
+    // the ≤64-bin score census in exact fractions, and each pool's
+    // average is e9-truncated once, so the output is exactly
+    // trunc(PAVA) and hash-gates (the oracle replays the minimax
+    // identity). iso_e9 is non-decreasing in bin by construction.
     Q("q206_isotonic", Some("""
       WITH e AS (SELECT LEAST(CAST(FLOOR(value / 8) AS BIGINT), 63) AS bin,
                         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS l
@@ -956,7 +955,7 @@ object PipelineQueries {
     // the rest. Everything is exact fixed-point (v_e4 sums, integer
     // DIV), so all four series hash-gate bit-for-bit. Engine: one
     // census aggregate, a per-key window over census rows (bounded
-    // by keys × calendar AND by the boundedCensus fail-fast), one
+    // by keys × calendar AND by the Stats.census fail-fast), one
     // broadcast phase-profile re-attach.
     Q("q185_seasonal_decompose", Some("""
       WITH b AS (SELECT event_type,
@@ -1029,9 +1028,10 @@ object PipelineQueries {
     // series, then split each side again, yielding the realized
     // split tree (seg T, TL, TR; undersized segments produce no
     // row). The oracle replays both levels with rank windows over
-    // the same HUGEINT statistic; the engine plan builds the bounded
-    // census once (checkpoint) and runs census-space windows +
-    // argmax aggregates per level with broadcast re-attaches.
+    // the same HUGEINT statistic; the engine collects the bounded
+    // census once (Stats.census) and runs census-space windows +
+    // argmax aggregates per level over the local frame, with
+    // broadcast re-attaches.
     Q("q189_binary_segmentation", Some("""
       WITH b AS (SELECT event_type,
                    epoch_ns(ts) // 86400000000000 AS bucket,
@@ -1277,8 +1277,9 @@ object PipelineQueries {
     // d_num = max_v |cumA(v)·n_b − cumB(v)·n_a| so the gate needs no
     // division (D = d_num/(n_a·n_b) is one consumer-side step).
     // Scale shape: one (group, value) census (e2 quantization bounds
-    // cells by value range; boundedCensus fail-fasts), prefix sums
-    // over census rows only — corpus rows never enter a window.
+    // cells by value range; Stats.census fail-fasts), prefix sums
+    // on the driver over census rows only — corpus rows never enter
+    // a window.
     Q("q194_ks_two_sample", Some("""
       WITH e AS (SELECT event_type,
                    CASE WHEN (epoch_ns(ts) // 86400000000000) % 7 >= 5
@@ -1543,7 +1544,7 @@ object PipelineQueries {
     // identity keeps every rank a long), group sizes, pooled N and
     // the pooled tie term; H's divisions and the chi2 lookup are
     // consumer-side (the mannKendall var18 convention). One pooled
-    // census + one bounded census-space prefix window — corpus rows
+    // census, its prefix sums computed on the driver — corpus rows
     // never rank.
     Q("q200_kruskal_wallis", Some("""
       WITH e AS (SELECT event_type, CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS v
@@ -2201,7 +2202,6 @@ object PipelineQueries {
              MAX(n) AS n
       FROM r GROUP BY event_type
       ORDER BY event_type""")) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       // Census-space pick (the q138/q144 r13 move): a percentile is
       // a rank statistic, so the element at a group rank is decided
       // by the (group, value) → count census alone — the oracle's
@@ -2209,26 +2209,23 @@ object PipelineQueries {
       // a rank. No corpus rows ever enter a window sort: the r12
       // shape buffered a whole event_type group (low cardinality —
       // a hot group is the q144 skew cliff) in one task. The census
-      // is bounded by CONSTRUCTION (Stats.boundedCensus fail-fast,
-      // r13 verdict item 5): on a near-continuous value column the
-      // census would approach corpus cardinality and re-open the
-      // same one-task window this shape exists to kill.
-      val census = Stats.boundedCensus(
+      // is bounded by CONSTRUCTION (Stats.census fail-fast, r13
+      // verdict item 5): on a near-continuous value column the census
+      // would approach corpus cardinality; the prefix sums run on the
+      // driver over the collected census.
+      val census = Stats.census(
         Tables.events(s, d)
           .groupBy(col("event_type"), col("value"))
           .agg(count(lit(1)).as("__c")),
-        1L << 20, "q62 (event_type, value) census")
-      val wOrd = Window.partitionBy(col("event_type")).orderBy(col("value"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.partitionBy(col("event_type"))
+        1L << 20, "q62 (event_type, value) census",
+        Stats.CensusSum.running("__cum", "__c", Seq("event_type"), "value"),
+        Stats.CensusSum.total("n", "__c", Seq("event_type")))
       def pickAt(target: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
         // 0-based rank `target` lives in this census row iff
         // cum − c ≤ target < cum
         max(when(col("__cum") - col("__c") <= target && target < col("__cum"),
           col("value")))
       census
-        .withColumn("__cum", sum(col("__c")).over(wOrd))
-        .withColumn("n", sum(col("__c")).over(wAll))
         .groupBy(col("event_type"))
         .agg(
           pickAt(expr("((n - 1) * 50) div 100")).as("p50"),
@@ -3162,9 +3159,10 @@ object PipelineQueries {
     // masks its own outliers; median/MAD has a 50% breakdown point).
     // Medians are exact lower-middle element PICKS, so every output
     // is a copied double or one correctly-rounded op — hash-gates
-    // bit-for-bit with no float hedge. Engine: two key-partitioned
-    // sort windows + broadcast census re-attach; the oracle replays
-    // the same picks with SQL windows.
+    // bit-for-bit with no float hedge. Engine: two bounded census
+    // collects whose per-key prefix sums run on the driver +
+    // broadcast census re-attach; the oracle replays the same picks
+    // with SQL windows.
     Q("q138_mad_outliers", Some("""
       WITH e AS (SELECT event_id, event_type,
                         CAST(TRY_CAST(value AS DECIMAL(18,2)) AS DOUBLE) AS v
@@ -3385,8 +3383,8 @@ object PipelineQueries {
     // bias). Durations bucket to 6h intervals; each interval reports
     // exact (n_events, n_censored, at_risk) longs — the survival
     // product is one consumer-side fold (the no-transcendentals
-    // rule). The at-risk suffix sum runs over the bounded bucket
-    // census only, never the corpus.
+    // rule). The at-risk suffix sum runs on the driver over the
+    // bounded bucket census only, never the corpus.
     Q("q149_km_lifetable", Some("""
       WITH e AS (SELECT user_id, event_type, epoch_ns(ts) AS ts FROM events),
       st AS (SELECT user_id, MIN(ts) AS start FROM e

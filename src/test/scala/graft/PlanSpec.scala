@@ -1,7 +1,15 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LogicalPlan, Window => LWindow}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 /** Physical/logical plan assertions: the optimizations the engine's
   * scale story depends on must actually appear in the plans —
@@ -330,35 +338,75 @@ class PlanSpec extends SparkSuite {
   }
 
   test("q138/q139 rank statistics: windows partitioned, never a global ROW_NUMBER") {
-    for (name <- Seq("q138_mad_outliers", "q139_equidepth_buckets")) {
-      val wins = optimized(name).collect { case w: LWindow => w }
-      assert(wins.nonEmpty, s"$name lost its rank windows")
-      assert(wins.forall(_.partitionSpec.nonEmpty),
-        s"$name fell into a single-partition global window")
-    }
+    // q138's medians are census picks whose prefix sums run on the
+    // driver, so it may have no window at all — but never an
+    // unpartitioned one.
+    val q138 = optimized("q138_mad_outliers").collect { case w: LWindow => w }
+    assert(q138.forall(_.partitionSpec.nonEmpty),
+      "q138_mad_outliers fell into a single-partition global window")
+    val wins = optimized("q139_equidepth_buckets").collect { case w: LWindow => w }
+    assert(wins.nonEmpty, "q139_equidepth_buckets lost its rank windows")
+    assert(wins.forall(_.partitionSpec.nonEmpty),
+      "q139_equidepth_buckets fell into a single-partition global window")
     assert(physical("q139_equidepth_buckets").contains("BroadcastHashJoin"),
       "bin offsets must attach by broadcast")
   }
 
   test("q144/q145 rank statistics run in census space — no window partitioned by a score value") {
-    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
     // The r12 formulation computed tie mid-ranks with
     // Window.partitionBy(score-value): one hot score = a corpus
     // fraction serialized into a single task's sort buffer (the r8
-    // exact-substring hot-anchor shape). The census formulation may
-    // only window over the bounded per-value census — unpartitioned
-    // BY DESIGN (census rows, never the corpus) and sitting directly
-    // above the census aggregate.
+    // exact-substring hot-anchor shape). The census formulation
+    // computes the mid-rank prefix sums on the driver over the
+    // bounded census, so neither plan holds any window.
     for (name <- Seq("q144_class_auc", "q145_spearman")) {
       val wins = optimized(name).collect { case w: LWindow => w }
-      assert(wins.nonEmpty, s"$name lost its census prefix-sum window")
-      for (w <- wins) {
-        assert(w.partitionSpec.isEmpty,
-          s"$name windows partitioned by a value column again — hot-value single-task buffering:\n$w")
-        assert(w.child.collectFirst { case a: Aggregate => a }.nonEmpty,
-          s"$name window no longer sits above the bounded census aggregate:\n$w")
-      }
+      assert(wins.isEmpty, s"$name windows again:\n${wins.mkString("\n")}")
     }
+  }
+
+  /** The optimized plan of every action `name`'s DataFrame build
+    * runs eagerly (bounded collects, checkpoints), then of the frame
+    * itself. */
+  private def buildAndFinalPlans(name: String): Seq[LogicalPlan] = {
+    val seen = new ConcurrentLinkedQueue[LogicalPlan]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe.optimizedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val df = q(name)
+      // listener events are async and in order: once a sentinel
+      // action has reported, every build action before it has too
+      val sentinel = s"plan_sentinel_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+      spark.range(1).toDF(sentinel).collect()
+      eventually(timeout(30.seconds)) {
+        assert(seen.asScala.exists(_.output.exists(_.name == sentinel)))
+      }
+      seen.asScala.toSeq :+ df.queryExecution.optimizedPlan
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("census-tier rows: no unpartitioned window unless a GlobalLimit is beneath it") {
+    // The q33 rule over every row that reaches a census operator, in
+    // the frame's plan and in every action its build runs: a census's
+    // running sums and totals are driver work, never a
+    // single-partition window.
+    val rows = Seq("q62_percentiles", "q138_mad_outliers", "q144_class_auc", "q145_spearman",
+      "q149_km_lifetable", "q185_seasonal_decompose", "q189_binary_segmentation",
+      "q193_seasonal_anomaly", "q194_ks_two_sample", "q195_cliffs_delta", "q196_hl_shift",
+      "q199_cvm_two_sample", "q200_kruskal_wallis", "q206_isotonic", "q207_winsorize",
+      "q208_quantile_normalize", "q210_source_length_drift", "q211_best_split", "q212_psi",
+      "q213_lang_agreement", "q223_jackknife_ci", "q227_voptimal_hist")
+    val bad = for {
+      name <- rows
+      plan <- buildAndFinalPlans(name)
+      w <- plan.collect { case w: LWindow => w }
+      if w.partitionSpec.isEmpty && w.child.collectFirst { case g: GlobalLimit => g }.isEmpty
+    } yield name
+    assert(bad.isEmpty, s"unpartitioned Window over unbounded input in ${bad.distinct.mkString(", ")}")
   }
 
   test("q136 link prediction: equi-joins only — no cartesian, no window") {

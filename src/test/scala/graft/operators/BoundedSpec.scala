@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit}
 import org.apache.spark.sql.execution.QueryExecution
@@ -78,28 +79,61 @@ class BoundedSpec extends SparkSuite {
   private def hasLimit(qe: QueryExecution): Boolean =
     qe.analyzed.collectFirst { case l: GlobalLimit => l; case l: LocalLimit => l }.isDefined
 
-  test("at Int.MaxValue and above no Limit lands in a probe's or boundedCensus's plan") {
+  test("at Int.MaxValue and above no Limit lands in a probe's or census's plan") {
     val marker = "bounded_probe_marker"
     val df = ids(3).withColumnRenamed("id", marker)
-    for (bound <- Seq(Int.MaxValue.toLong, Long.MaxValue)) {
-      val plans = actionPlans(marker, Set("collect", "count", "localCheckpoint")) {
-        assert(Bounded.collect(df, bound).map(_.length) === Some(3))
-        assert(Bounded.fits(df, bound))
-        assert(Stats.boundedCensus(df, bound, "census").count() === 3)
-      }
-      for ((action, qe) <- plans)
-        assert(!hasLimit(qe), s"$action at bound $bound planned a Limit:\n${qe.analyzed}")
+    def probes(bound: Long): Seq[(String, String, () => Unit)] = Seq(
+      ("Bounded.collect", "collect",
+        () => assert(Bounded.collect(df, bound).map(_.length) === Some(3))),
+      ("Bounded.fits", "count", () => assert(Bounded.fits(df, bound))),
+      ("Stats.census", "collect",
+        () => assert(Stats.collectCensus(df, bound, "census").rows.length === 3)))
+    for (bound <- Seq(Int.MaxValue.toLong, Long.MaxValue); (name, action, run) <- probes(bound)) {
+      val plans = actionPlans(marker, Set(action))(run())
+      for ((a, qe) <- plans)
+        assert(!hasLimit(qe), s"$name's $a at bound $bound planned a Limit:\n${qe.analyzed}")
     }
     // Below Int.MaxValue, bound + 1 is a valid limit and the same
     // listener sees it in every probe.
-    val capped = actionPlans(marker, Set("collect", "count", "localCheckpoint")) {
-      Bounded.collect(df, Int.MaxValue - 1)
-      Bounded.fits(df, Int.MaxValue - 1)
-      Stats.boundedCensus(df, Int.MaxValue - 1, "census")
+    for ((name, action, run) <- probes(Int.MaxValue - 1)) {
+      val plans = actionPlans(marker, Set(action))(run())
+      assert(plans.exists { case (a, qe) => a == action && hasLimit(qe) },
+        s"$name below Int.MaxValue planned no Limit")
     }
-    for (action <- Seq("collect", "count", "localCheckpoint"))
-      assert(capped.exists { case (a, qe) => a == action && hasLimit(qe) },
-        s"$action below Int.MaxValue planned no Limit")
+  }
+
+  /** Spark jobs `run` starts, counted by a listener on its job group;
+    * a sentinel job started after it marks the end of its events. */
+  private def jobsOf(run: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (group, sentinel) = (java.util.UUID.randomUUID.toString, java.util.UUID.randomUUID.toString)
+    val started = new ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(started.add)
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "jobs of one call")
+      try run finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      eventually(timeout(10.seconds))(assert(started.contains(sentinel)))
+    } finally sc.removeSparkListener(l)
+    started.asScala.count(_ == group)
+  }
+
+  test("one census call starts no more jobs than one Bounded.collect of its frame") {
+    def census = spark.range(200).groupBy((col("id") % 7).as("k")).agg(count(lit(1)).as("c"))
+    val collectJobs = jobsOf(assert(Bounded.collect(census, 1000).map(_.length) === Some(7)))
+    var local: DataFrame = null
+    val censusJobs = jobsOf {
+      local = Stats.census(census, 1000, "t", Stats.CensusSum.running("cum", "c", Nil, "k"))
+    }
+    assert(local.collect().map(_.getLong(2)).max === 200L)
+    assert(collectJobs >= 1)
+    assert(censusJobs <= collectJobs, s"census started $censusJobs jobs, collect $collectJobs")
   }
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toSeq.mkString("|")).toSeq.sorted

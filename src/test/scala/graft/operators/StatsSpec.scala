@@ -527,44 +527,123 @@ class StatsSpec extends SparkSuite {
     assert(agg === (("a", 6L, 2L, 0L, 132L)))
   }
 
-  test("boundedCensus: every census-windowed operator fail-fasts over its bound") {
+  test("census: every census operator fail-fasts over its bound") {
     import spark.implicits._
     // An ALL-DISTINCT value column — the adversarial input on which a
-    // (group, value) census approaches corpus cardinality and an
-    // unguarded census window would buffer a corpus fraction in one
-    // task. The bound must hold by CONSTRUCTION: under it the full
-    // census comes back; over it the guard trips BEFORE an oversized
-    // materialization (the limit caps the checkpoint at maxRows + 1).
+    // (group, value) census approaches corpus cardinality. The bound
+    // must hold by CONSTRUCTION: under it the full census comes back;
+    // over it the one bounded collect fails before more than
+    // maxRows + 1 rows reach the driver.
     val rows = (0L until 40L).map(i => (i, i % 4, (i * 31 % 97).toDouble))
     val df = rows.toDF("id", "g", "v")
     val census = df.groupBy(col("g"), col("v")).agg(count(lit(1)).as("__c"))
-    assert(Stats.boundedCensus(census, 1000L, "t").count() === census.count())
-    // At exactly the bound the census still passes (the +1 probe row
-    // is what trips, not the bound itself).
-    assert(Stats.boundedCensus(census, census.count(), "t").count() === census.count())
-    val direct = intercept[IllegalArgumentException](
-      Stats.boundedCensus(census, 5L, "t"))
-    assert(direct.getMessage.contains("census rows"))
-    // Operator surfaces: each census-windowed operator routes through
-    // the guard (this is the pin the r13 verdict asked for — every
-    // such operator either fail-fasts or bins).
-    val mad = intercept[IllegalArgumentException](
-      Stats.madOutliers(df, Seq("g"), "id", col("v"), maxBins = 3))
-    assert(mad.getMessage.contains("census rows"))
-    val sp = intercept[IllegalArgumentException](
-      Stats.spearman(df, col("id"), col("v"), maxBins = 3))
-    assert(sp.getMessage.contains("census rows"))
-    val auc = intercept[IllegalArgumentException](
-      Stats.classAuc(df.withColumn("l", col("id") % 2), col("v"), "l",
-        maxBins = 3))
-    assert(auc.getMessage.contains("census rows"))
-    // Under the bound the guarded operators still answer exactly: the
-    // limit is a no-op when the census fits.
+    val n = census.count()
+    val all = census.collect().map(_.toSeq).toSet
+    // Exactly maxRows rows pass (the +1 probe row is what trips, not
+    // the bound itself); maxRows + 1 rows fail.
+    for (bound <- Seq(1000L, n))
+      assert(Stats.census(census, bound, "t").collect().map(_.toSeq).toSet === all)
+    val direct = intercept[IllegalArgumentException](Stats.census(census, n - 1, "t"))
+    assert(direct.getMessage ===
+      s"requirement failed: t: more than ${n - 1} distinct census rows — quantize/bucket coarser upstream")
+    assert(intercept[IllegalArgumentException](Stats.census(census, 0L, "t"))
+      .getMessage.contains("maxRows must be positive"))
+    // Every call site of the primitive, each over its bound of 3: the
+    // 16 Stats operators (twoSampleCum behind three), Temporal's two
+    // and q62 (whose 2^20 bound is fixed: below).
+    val inB = col("id") % 2 === 0
+    val ev = df.select(col("g"), col("id").as("ts"), col("v"))
+    val sites: Seq[(String, () => Any)] = Seq(
+      "madOutliers" -> (() => Stats.madOutliers(df, Seq("g"), "id", col("v"), maxBins = 3)),
+      "spearman" -> (() => Stats.spearman(df, col("id"), col("v"), maxBins = 3)),
+      "classAuc" -> (() => Stats.classAuc(df.withColumn("l", col("id") % 2), col("v"), "l",
+        maxBins = 3)),
+      "kmLifeTable" -> (() => Stats.kmLifeTable(df, col("id"), col("id") % 2, bucketWidth = 1L,
+        maxBuckets = 3)),
+      "ksTwoSample" -> (() => Stats.ksTwoSample(df, Seq("g"), inB, col("v"), maxBins = 3)),
+      "cliffsDelta" -> (() => Stats.cliffsDelta(df, Seq("g"), inB, col("v"), maxBins = 3)),
+      "cvmTwoSample" -> (() => Stats.cvmTwoSample(df, Seq("g"), inB, col("v"), maxBins = 3)),
+      "hodgesLehmannShift" -> (() => Stats.hodgesLehmannShift(df, Seq("g"), inB, col("v"),
+        maxBinsPerSide = 3)),
+      "kruskalWallis" -> (() => Stats.kruskalWallis(df, "g", col("v"), maxBins = 3)),
+      "isotonicCalibrate" -> (() => Stats.isotonicCalibrate(df, col("id"), col("id") % 2,
+        maxBins = 3)),
+      "winsorize" -> (() => Stats.winsorize(df, Seq("g"), "id", col("v"), maxBins = 3)),
+      "quantileNormalize" -> (() => Stats.quantileNormalize(df, Seq("g"), "id", col("v"),
+        maxBins = 3)),
+      "ksOneVsRest" -> (() => Stats.ksOneVsRest(df, "g", col("v"), maxBins = 3)),
+      "bestSplit" -> (() => Stats.bestSplit(df, Seq("g"), col("v"), col("id") % 2, maxBins = 3)),
+      "psiDrift" -> (() => Stats.psiDrift(df, Seq("g"), inB, col("v"), maxBins = 3)),
+      "cohenKappa" -> (() => Stats.cohenKappa(df, Seq("g"), col("id"), col("v"), maxBins = 3)),
+      "vOptimalHist" -> (() => Stats.vOptimalHist(df, col("id"), col("v"), k = 2, maxBins = 3)),
+      "jackknifeMeanVar" -> (() => Stats.jackknifeMeanVar(df, Seq("g"), col("id"), col("v"),
+        maxBuckets = 3)),
+      "seasonalDecompose" -> (() => Temporal.seasonalDecompose(ev, Seq("g"), "ts", col("v"),
+        bucketNs = 1L, period = 3, maxBins = 3)),
+      "binarySegmentation" -> (() => Temporal.binarySegmentation(ev, Seq("g"), "ts", col("v"),
+        bucketNs = 1L, depth = 1, maxBins = 3)))
+    for ((name, run) <- sites) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.startsWith(s"requirement failed: $name") &&
+        e.getMessage.contains("more than 3 distinct census rows"), s"$name: ${e.getMessage}")
+    }
+    // q62's census is bounded at 2^20 rows: one more distinct
+    // (event_type, value) cell than that fails the query's build.
+    val dir = java.nio.file.Files.createTempDirectory("q62-census").toString
+    try {
+      spark.range((1L << 20) + 1)
+        .select(col("id").as("event_id"), col("id").as("ts"), lit(0L).as("user_id"),
+          lit("view").as("event_type"), col("id").cast("double").as("value"),
+          lit(null).cast("string").as("props"))
+        .coalesce(1).write.parquet(s"$dir/events.parquet")
+      val e = intercept[IllegalArgumentException](
+        graft.SparkEntry.queries("q62_percentiles")(spark, dir))
+      assert(e.getMessage.contains(s"q62 (event_type, value) census: more than ${1L << 20}"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    // Under the bound the guarded operators still answer exactly.
     val loose = Stats.madOutliers(df, Seq("g"), "id", col("v"), maxBins = 1 << 20)
     val tight = Stats.madOutliers(df, Seq("g"), "id", col("v"),
       maxBins = rows.map(r => (r._2, r._3)).distinct.size)
     assert(loose.orderBy("id").collect().toSeq ===
       tight.orderBy("id").collect().toSeq)
+  }
+
+  test("census sums ≡ the Spark windows they replace, null keys and NaN included") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    val gen = Gen.listOfN(40, for {
+      g <- Gen.option(Gen.oneOf("a", "b", "c"))
+      o <- Gen.option(Gen.oneOf(-2.0, -0.0, 0.0, 1.5, 7.0, Double.NaN, Double.PositiveInfinity))
+      v <- Gen.option(Gen.chooseNum(-5L, 9L))
+    } yield (g, o, v))
+    for (rows <- PropSampling.sample(gen, n = 6)) {
+      val census = rows.toDF("g", "o", "v").groupBy("g", "o")
+        .agg(sum("v").as("v"), count(lit(1)).as("c"))
+      val asc = Window.partitionBy("g").orderBy(col("o"))
+      val desc = Window.partitionBy("g").orderBy(col("o").desc)
+      val pooled = Window.orderBy(col("o"))
+      val byG = Window.partitionBy("g")
+      val want = census
+        .withColumn("r_asc", sum("v").over(asc)).withColumn("r_desc", sum("v").over(desc))
+        .withColumn("r_pool", sum("c").over(pooled)).withColumn("t_g", sum("v").over(byG))
+        .withColumn("t_o", sum("c").over(Window.partitionBy("o")))
+        .withColumn("n_g", count(lit(1)).over(byG))
+      val got = Stats.census(census, 1000L, "t",
+        Stats.CensusSum.running("r_asc", "v", Seq("g"), "o"),
+        Stats.CensusSum.running("r_desc", "v", Seq("g"), "o", descending = true),
+        Stats.CensusSum.running("r_pool", "c", Nil, "o"),
+        Stats.CensusSum.total("t_g", "v", Seq("g")),
+        Stats.CensusSum.total("t_o", "c", Seq("o")),
+        Stats.CensusSum.count("n_g", Seq("g")))
+      assert(got.schema === want.schema)
+      def key(r: org.apache.spark.sql.Row) = r.toSeq.mkString("|")
+      assert(got.collect().map(key).sorted.toSeq === want.collect().map(key).sorted.toSeq,
+        s"census sums diverged on $rows")
+    }
+    // Long overflow throws, as ANSI sum does.
+    val big = Seq(("a", 1L, Long.MaxValue), ("a", 2L, 1L)).toDF("g", "o", "v")
+    intercept[ArithmeticException](
+      Stats.census(big, 10L, "t", Stats.CensusSum.total("t", "v", Seq("g"))))
   }
 
   test("hillTailIndex: recovers known Pareto exponents; heavier tail → smaller alpha") {
@@ -720,7 +799,7 @@ class StatsSpec extends SparkSuite {
     val disj = Seq(("a", false, 1L), ("a", false, 2L), ("a", true, 9L))
     assert(Stats.ksTwoSample(disj.toDF("k", "b", "v"), Seq("k"), col("b"), col("v"))
       .as[(String, Long, Long, Long)].collect().head._4 === 2L)
-    // boundedCensus fail-fast.
+    // Census bound fail-fast.
     val wide = (1L to 9L).map(v => ("a", v % 2 == 0, v))
     val e = intercept[Exception](Stats.ksTwoSample(wide.toDF("k", "b", "v"),
       Seq("k"), col("b"), col("v"), maxBins = 4).collect())
@@ -947,7 +1026,7 @@ class StatsSpec extends SparkSuite {
       assert(got.toSeq.map(_._3).sum === n * (n + 1L))
     }
     // Census bound trips loud (the N guard needs >2e6 rows — the
-    // boundedCensus maxBins path is the testable guard).
+    // census maxBins path is the testable guard).
     val wide = (1L to 9L).map(v => ("a", v))
     val e = intercept[Exception](Stats.kruskalWallis(wide.toDF("k", "v"),
       "k", col("v"), maxBins = 4).collect())
@@ -1057,6 +1136,9 @@ class StatsSpec extends SparkSuite {
     assert(e1.getMessage.contains("1e7"))
     val e2 = intercept[IllegalArgumentException](run(Seq((1L, 1L), (2L, 2L)), 3))
     assert(e2.getMessage.contains("occupied bins"))
+    // Empty input is the zero-bins case of the same guard.
+    val e3 = intercept[IllegalArgumentException](run(Seq.empty, 1))
+    assert(e3.getMessage === "requirement failed: vOptimalHist: only 0 occupied bins for k=1 segments")
   }
 
   test("jackknifeMeanVar ≡ BigInt replay; single-bucket drop; census guard trips") {
