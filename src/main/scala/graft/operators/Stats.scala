@@ -81,21 +81,17 @@ object Stats {
                             sums: CensusSum*): DataFrame =
     collectCensus(df, maxRows, what, sums: _*).toDF(df.sparkSession)
 
-  /** Spark's sort order on a group or order key: nulls first, doubles
-    * with -0.0 = 0.0 and NaN above every number. */
-  private def compareKeys(a: Any, b: Any): Int = (a, b) match {
+  /** Spark's sort order on an order key: nulls first, doubles with
+    * -0.0 = 0.0 and NaN above every number. */
+  private def compareOrder(a: Any, b: Any): Int = (a, b) match {
     case (null, _) | (_, null) => (if (a == null) 0 else 1) - (if (b == null) 0 else 1)
     case (x: java.lang.Double, y: java.lang.Double) =>
       if (x.doubleValue == y.doubleValue) 0 else java.lang.Double.compare(x, y)
-    case (x: Comparable[_], y) if x.getClass == y.getClass =>
-      x.asInstanceOf[Comparable[Any]].compareTo(y)
-    case _ => throw new IllegalArgumentException(
-      s"census keys must be comparable scalars: ${a.getClass} vs ${b.getClass}")
+    case (x: java.lang.Long, y: java.lang.Long) => java.lang.Long.compare(x, y)
   }
 
   private def censusSum(c: LocalCensus, s: CensusSum): Array[Any] = {
     val rows = c.rows
-    val by = s.by.map(c.index)
     val value = s.value.map { v =>
       require(c.schema(v).dataType == LongType, s"census sum over non-long column $v")
       c.index(v)
@@ -105,11 +101,20 @@ object Stats {
         s"census order key $o must be long or double")
       c.index(o)
     }
-    def group(i: Int, j: Int): Int =
-      by.iterator.map(k => compareKeys(rows(i).get(k), rows(j).get(k))).find(_ != 0).getOrElse(0)
+    // Dense group ids. Floating keys are canonical (x + 0 turns -0.0
+    // into 0.0; the bits of every NaN are one), so groups match
+    // partitionBy's.
+    val by = s.by.map(c.index)
+    val ids = new java.util.HashMap[Seq[Any], Integer]()
+    val gid = rows.map(r => ids.computeIfAbsent(by.map(k => r.get(k) match {
+      case d: java.lang.Double => java.lang.Double.doubleToLongBits(d + 0.0)
+      case f: java.lang.Float => java.lang.Float.floatToIntBits(f + 0.0f)
+      case x => x
+    }), _ => ids.size).intValue)
+    val keys = order.fold(new Array[Any](rows.length))(o => rows.map(_.get(o)))
+    def group(i: Int, j: Int): Int = Integer.compare(gid(i), gid(j))
     // descending reverses ascending-nulls-first into Spark's nulls last
-    def peers(i: Int, j: Int): Int =
-      order.fold(0)(o => (if (s.descending) -1 else 1) * compareKeys(rows(i).get(o), rows(j).get(o)))
+    def peers(i: Int, j: Int): Int = (if (s.descending) -1 else 1) * compareOrder(keys(i), keys(j))
     val sorted = rows.indices.sortWith { (i, j) =>
       val g = group(i, j)
       (if (g != 0) g else peers(i, j)) < 0
