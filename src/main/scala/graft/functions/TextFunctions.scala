@@ -46,14 +46,6 @@ object TextFunctions {
           i => array_join(slice(toks, i, lit(n)), " ")))
   }
 
-  /** Character n-gram shingles. */
-  def charShingles(c: Column, n: Int): Column =
-    when(length(c) < n, array().cast("array<string>"))
-      .otherwise(
-        transform(
-          sequence(lit(1), length(c) - lit(n - 1)),
-          i => c.substr(i, lit(n))))
-
   /** Canonical content fingerprint: md5 over the sorted distinct
     * token set. Invariant under word order and duplication — catches
     * shuffled near-duplicates exactly. */

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.expressions.Window
@@ -62,7 +64,8 @@ object Curation {
     *
     * Scale shape: one word census shuffle (map-side combinable
     * min/count) + one doc census, both collapsing into ≤
-    * `checkpoints` rows before the spine windows. ids must be
+    * `checkpoints` rows; the spine's running sums are driver work
+    * ([[Stats.census]]). ids must be
     * non-negative; cuts are `(maxId+1)·k/checkpoints` so the last
     * band always closes the corpus. */
   def vocabGrowth(docs: DataFrame, idCol: String, tokensCol: Column,
@@ -84,19 +87,15 @@ object Curation {
       .groupBy(band("__id").as("band"))
       .agg(sum("__t").as("n_tokens"), count(lit(1)).as("n_docs"))
     val spine = spark.range(checkpoints).select(col("id").as("band"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("band").asc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    spine
       .join(firstSeen, Seq("band"), "left")
       .join(tokensPer, Seq("band"), "left")
       .select(col("band"),
         coalesce(col("n_docs"), lit(0L)).as("n_docs"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
         coalesce(col("new_words"), lit(0L)).as("new_words"))
-      .withColumn("cum_docs", sum("n_docs").over(w))
-      .withColumn("cum_tokens", sum("n_tokens").over(w))
-      .withColumn("vocab", sum("new_words").over(w))
+    def cum(out: String, value: String) = Stats.CensusSum.running(out, value, Nil, "band")
+    Stats.census(spine, checkpoints, "vocabGrowth band spine",
+      cum("cum_docs", "n_docs"), cum("cum_tokens", "n_tokens"), cum("vocab", "new_words"))
   }
 
   /** Quality SELECTION CURVE — "if I keep only documents scoring at
@@ -114,8 +113,8 @@ object Curation {
     * surviving-token fraction).
     *
     * Scale shape: one corpus census shuffle into ≤ `bins` rows;
-    * the suffix-cumulative windows over the BAND spine (tens of
-    * rows), and totals broadcast — nothing after the census is
+    * the BAND spine's suffix sums and total are driver work
+    * ([[Stats.census]]) — nothing after the census is
     * corpus-shaped. */
   def selectionCurve(docs: DataFrame, scoreE4: Column, sizeCol: Column,
                      bins: Int = 10, widthE4: Long = 1000L): DataFrame = {
@@ -127,19 +126,16 @@ object Curation {
         greatest(lit(0L), least(expr(s"__s DIV ${widthE4}L"), lit(bins - 1L))))
       .groupBy("bin")
       .agg(count(lit(1)).as("n_docs"), sum("__n").as("n_tokens"))
-    val spine = docs.sparkSession.range(bins).select(col("id").as("bin"))
-    val banded = spine.join(census, Seq("bin"), "left")
+    val banded = docs.sparkSession.range(bins).select(col("id").as("bin"))
+      .join(census, Seq("bin"), "left")
       .select(col("bin"),
         coalesce(col("n_docs"), lit(0L)).as("n_docs"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("bin").desc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val totals = banded.agg(sum("n_tokens").as("__tt"))
-    banded
-      .withColumn("surv_docs", sum("n_docs").over(w))
-      .withColumn("surv_tokens", sum("n_tokens").over(w))
-      .crossJoin(broadcast(totals))
+    def surv(out: String, value: String) =
+      Stats.CensusSum.running(out, value, Nil, "bin", descending = true)
+    Stats.census(banded, bins, "selectionCurve band spine",
+        surv("surv_docs", "n_docs"), surv("surv_tokens", "n_tokens"),
+        Stats.CensusSum.total("__tt", "n_tokens", Nil))
       .withColumn("surv_frac_e4",
         expr("CAST(surv_tokens * 10000 DIV GREATEST(__tt, 1) AS BIGINT)"))
       .drop("__tt")
@@ -245,8 +241,8 @@ object Curation {
     * Scale shape: one map-side-combined census shuffle over the
     * corpus; everything after runs on the strata table (sources /
     * domains — thousands at most), where the one-row totals frame is
-    * broadcast and the remainder ranking windows over strata, never
-    * corpus rows. */
+    * broadcast and the remainder rank is a [[GlobalRank]] over strata,
+    * never corpus rows and never one task. */
   def temperatureAllocate(docs: DataFrame, groupCol: String, sizeCol: Column,
                           budget: Long): DataFrame = {
     val census = docs.groupBy(groupCol)
@@ -259,10 +255,8 @@ object Curation {
       .withColumn("base", expr("__num DIV __tw"))
       .withColumn("rem", expr("__num % __tw"))
     val leftover = based.agg((first("__budget") - sum("base")).as("__left"))
-    based.crossJoin(broadcast(leftover))
-      .withColumn("__rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("rem").desc, col(groupCol).asc)))
+    GlobalRank(based, Seq(col("rem").desc, col(groupCol).asc), "__rk")._1
+      .crossJoin(broadcast(leftover))
       .select(col(groupCol), col("n_tokens"), col("w_fp"),
         (col("base") + when(col("__rk") <= col("__left"), 1L).otherwise(0L))
           .as("alloc"))
@@ -629,51 +623,27 @@ object Curation {
     * complements them with the only sampling design here whose
     * inclusion probability is proportional to size.
     *
-    * The primitive underneath is an EXACT GLOBAL PREFIX SUM, built
-    * the scalable way: ids are blocked (`id div blockSize`), one
-    * map-side-combinable aggregate computes per-block token totals,
-    * the driver turns that BOUNDED block table (fail-fast guarded at
-    * `maxBlocks` — the maxVocab convention) into running offsets,
-    * and a per-block window adds the in-block running sum to the
-    * broadcast block offset. The naive plan — one global
-    * `Window.orderBy(id)` — funnels the corpus through a single
-    * partition; this shape keeps every stage partition-parallel, and
-    * the same two-phase scheme serves any exact-cumsum need
-    * (quantile splits, contiguous sharding). Selection is then pure
+    * The primitive underneath is an EXACT GLOBAL PREFIX SUM in id
+    * order, from [[GlobalRank]]: partition-parallel at every stage,
+    * where the naive plan — one global `Window.orderBy(id)` — funnels
+    * the corpus through a single partition. Selection is then pure
     * integer arithmetic on nonnegative longs (`div` agrees with the
     * oracle's floor division there): a doc is picked iff
     * `cum div step > (cum - w) div step`. */
   def systematicSampleByTokens(docs: DataFrame, step: Long,
-                               idCol: String = "doc_id", textCol: String = "text",
-                               blockSize: Long = 256L,
-                               maxBlocks: Int = 1 << 20): DataFrame = {
+                               idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(step > 0, "step must be positive")
-    require(blockSize > 0, "blockSize must be positive")
     val sized = docs.select(col(idCol).cast("long").as(idCol),
-        size(TextFunctions.tokens(col(textCol))).cast("long").as("n_tokens"))
-      .withColumn("__blk", expr(s"`$idCol` div $blockSize"))
-    val blockRows = Bounded.collectOrFail(sized.groupBy(col("__blk"))
-      .agg(sum(col("n_tokens")).as("__bt"),
-        count(lit(1)).as("__n"), count_distinct(col(idCol)).as("__nd")), maxBlocks)(
-      s"more than $maxBlocks id blocks at blockSize=$blockSize — raise blockSize")
+      size(TextFunctions.tokens(col(textCol))).cast("long").as("n_tokens"))
     // The walk order — and the oracle's RANGE-frame cumulative sum —
     // is only well-defined when ids are unique; a duplicated id would
     // make which copy crosses a boundary run-dependent. The check
-    // rides the block aggregate already being paid.
-    require(blockRows.forall(r => r.getLong(2) == r.getLong(3)),
-      s"duplicate values in id column `$idCol` — systematic sampling needs a unique walk order")
-    val totals = blockRows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val offsets = totals.map(_._1)
-      .zip(totals.map(_._2).scanLeft(0L)(_ + _).dropRight(1)).toSeq
-    val sp = docs.sparkSession
-    import sp.implicits._
-    val offDf = offsets.toDF("__blk", "__off")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__blk")).orderBy(col(idCol))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    sized.join(broadcast(offDf), "__blk")
-      .withColumn("cum_tokens", sum(col("n_tokens")).over(w) + col("__off"))
+    // rides the rank's bucket census.
+    val (ranked, _) = GlobalRank(sized, Seq(col(idCol)), "__rank",
+      runningSum = Some("n_tokens" -> "cum_tokens"),
+      uniqueLead = Some(
+        s"duplicate values in id column `$idCol` — systematic sampling needs a unique walk order"))
+    ranked
       .filter(expr(s"(cum_tokens div $step) > ((cum_tokens - n_tokens) div $step)"))
       .select(col(idCol), col("n_tokens"), col("cum_tokens"))
   }
@@ -1154,7 +1124,7 @@ object Curation {
     * alternating passes (row pass: scale each row to the uniform
     * row target; col pass: scale each column back to its observed
     * total), in EXACT e6 fixed-point: cells carry as e6-scaled
-    * decimal(38,0) and every scaling is one integer multiply by the
+    * exact integers and every scaling is one integer multiply by the
     * e6 target followed by one integral division by the current
     * marginal (`div` ≡ DuckDB `//` on nonnegative operands), so the
     * trajectory — including truncation — is bit-identical
@@ -1163,66 +1133,47 @@ object Curation {
     * for that line's cells rather than dividing by zero.
     *
     * Scale shape: ONE corpus shuffle builds the (row, col, n)
-    * census (map-side combined); an in-plan `maxCells` guard fails
-    * the query on a larger census, so the 2×`rounds` scaling passes
-    * and the in-frame target windows run over a single-partition
-    * frame of at most `maxCells` rows. The guard is evaluated inside
-    * that single-partition window, so an oversized census reaches
-    * one task before it trips (unlike [[Stats.census]]'s bounded
-    * collect).
+    * census (map-side combined), which comes to the driver through
+    * one [[Bounded.collectOrFail]] at `maxCells` — an oversized census
+    * fails before it reaches one task — and the 2×`rounds` scaling
+    * passes run there in exact `BigInt` (truncating division of
+    * nonnegative operands is `decimal(38,0)` `div`). The fitted table
+    * returns as a local frame.
     * Headroom: cell ≤ total·10⁶ and the per-pass product
     * cell·target_e6 ≤ (total·10⁶)² needs total ≤ 10¹² rows inside
-    * decimal(38,0) — guarded loud. */
+    * decimal(38,0) — guarded loud, as the oracle's arithmetic needs. */
   def ipfRake(df: DataFrame, rowCol: String, colCol: String,
               rounds: Int = 4, maxCells: Int = 4096): DataFrame = {
     require(rounds >= 1 && rounds <= 16, "rounds must be in [1, 16]")
     require(maxCells >= 1, "maxCells must be positive")
     val census = df
       .filter(col(rowCol).isNotNull && col(colCol).isNotNull)
-      .groupBy(col(rowCol).as("__r"), col(colCol).as("__c"))
+      .groupBy(col(rowCol).as(rowCol), col(colCol).as(colCol))
       .agg(count(lit(1)).as("n"))
-    // Targets computed IN-FRAME by census-space windows rather than
-    // separate aggregates + joins: deriving `total`/`n_rows`/col
-    // totals as standalone frames re-runs the corpus census once per
-    // derivation (no plan reuse without caching — three corpus scans
-    // for a hundred-row frame). The empty partitionBy() window
-    // requires AllTuples, which collapses the census to ONE
-    // partition; every later window pass then runs exchange-free
-    // (SinglePartition satisfies any ClusteredDistribution) — safe
-    // because the guard bounds the frame at maxCells rows by
-    // construction.
-    val wAll = Window.partitionBy()
-    val base = census
-      .withColumn("__cells", count(lit(1)).over(wAll))
-      .withColumn("__total", sum(col("n")).over(wAll))
-      .withColumn("__total", when(col("__total") <= 1000000000000L, col("__total"))
-        .otherwise(raise_error(lit(
-          "ipfRake: total > 1e12 — e6 fixed-point headroom (decimal(38,0)) exceeded")).cast("long")))
-      .withColumn("__nr", size(collect_set(col("__r")).over(wAll)))
-      .withColumn("cell", when(col("__cells") <= maxCells,
-          col("n").cast("decimal(38,0)") * lit(1000000L))
-        .otherwise(raise_error(lit(
-          s"ipfRake: census exceeds $maxCells cells — coarsen the strata upstream")).cast("decimal(38,0)")))
-      .withColumn("__rte6",
-        expr("(CAST(__total AS DECIMAL(38,0)) * 1000000) div CAST(__nr AS DECIMAL(38,0))"))
-      .withColumn("__cte6",
-        sum(col("n")).over(Window.partitionBy(col("__c"))).cast("decimal(38,0)") *
-          lit(1000000L))
-      .drop("__cells", "__total", "__nr")
-    var cur = base
-    for (_ <- 1 to rounds) {
-      cur = cur
-        .withColumn("__rs", sum(col("cell")).over(Window.partitionBy(col("__r"))))
-        .withColumn("cell", when(col("__rs") > 0,
-          expr("(cell * __rte6) div __rs")).otherwise(lit(0L).cast("decimal(38,0)")))
-        .drop("__rs")
-        .withColumn("__cs", sum(col("cell")).over(Window.partitionBy(col("__c"))))
-        .withColumn("cell", when(col("__cs") > 0,
-          expr("(cell * __cte6) div __cs")).otherwise(lit(0L).cast("decimal(38,0)")))
-        .drop("__cs")
+    val cells = Bounded.collectOrFail(census, maxCells)(
+      s"ipfRake: census exceeds $maxCells cells — coarsen the strata upstream")
+    val n = cells.map(r => BigInt(r.getLong(2)))
+    require(n.sum <= 1000000000000L,
+      "ipfRake: total > 1e12 — e6 fixed-point headroom (decimal(38,0)) exceeded")
+    val (rows, cols) = (cells.map(_.get(0)), cells.map(_.get(1)))
+    // each cell's line marginal: the sum of `v` over cells sharing its key
+    def marginal(keys: Array[Any], v: Array[BigInt]): Array[BigInt] = {
+      val by = keys.indices.groupMapReduce(keys(_))(v(_))(_ + _)
+      keys.map(by)
     }
-    cur.select(col("__r").as(rowCol), col("__c").as(colCol), col("n"),
-      col("cell").cast("long").as("mix_e6"))
+    val e6 = BigInt(1000000)
+    val rowTarget = if (cells.isEmpty) BigInt(0) else n.sum * e6 / rows.distinct.length
+    val colTarget = marginal(cols, n).map(_ * e6)
+    def scale(cell: Array[BigInt], keys: Array[Any], target: Int => BigInt): Array[BigInt] = {
+      val m = marginal(keys, cell)
+      cell.indices.map(i => if (m(i) > 0) cell(i) * target(i) / m(i) else BigInt(0)).toArray
+    }
+    var cell = n.map(_ * e6)
+    for (_ <- 1 to rounds)
+      cell = scale(scale(cell, rows, _ => rowTarget), cols, colTarget)
+    df.sparkSession.createDataFrame(
+      cells.indices.map(i => Row.fromSeq(cells(i).toSeq :+ cell(i).toLong)).asJava,
+      census.schema.add(StructField("mix_e6", LongType, nullable = true)))
   }
 
   /** Blocklist / keyword-filter hits via Aho–Corasick

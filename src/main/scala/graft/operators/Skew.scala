@@ -1,44 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation for hot keys — the manual fallback when AQE's
-  * skew-join splitting cannot apply (aggregations, or joins whose
-  * build side AQE will not replicate).
-  *
-  * Both operators derive the salt deterministically (hash of a
-  * discriminator column, never `rand()`), so results are stable
-  * across retries and replays — a task re-run with a fresh random
-  * salt would double-count rows on speculative execution.
-  */
+/** Key-skew diagnostics: the census a hot-key mitigation (AQE's
+  * skew-join splitting, or salting a skewed aggregate or join) is
+  * chosen from. */
 object Skew {
-
-  /** Two-phase salted aggregation: partial aggregate on (key, salt)
-    * spreads a hot key over `salts` reducers, the final aggregate
-    * merges the partials. Use for algebraic aggregates (sum/count/
-    * min/max) over heavily skewed keys; a hot key's rows land on
-    * `salts` tasks instead of one. */
-  def saltedSumCount(df: DataFrame, keyCol: String, valCol: String,
-                     discriminator: Column, salts: Int): DataFrame =
-    df
-      .withColumn("__salt", pmod(xxhash64(discriminator), lit(salts)))
-      .groupBy(col(keyCol), col("__salt"))
-      .agg(sum(col(valCol)).as("__psum"), count(lit(1)).as("__pcnt"))
-      .groupBy(col(keyCol))
-      .agg(sum(col("__psum")).as(s"sum_$valCol"), sum(col("__pcnt")).as("n"))
-
-  /** Salted equi-join: the (small, replicable) build side is
-    * exploded across all salt values, the probe side picks one salt
-    * per row — the hot key's probe rows spread over `salts` join
-    * tasks while every one of them still finds the build row.
-    * Build-side cost: ×salts rows, the standard replication trade. */
-  def saltedJoin(probe: DataFrame, build: DataFrame, keyCol: String,
-                 discriminator: Column, salts: Int): DataFrame = {
-    val p = probe.withColumn("__salt", pmod(xxhash64(discriminator), lit(salts)))
-    val b = build.withColumn("__salt", explode(sequence(lit(0L), lit(salts - 1L))))
-    p.join(b, Seq(keyCol, "__salt")).drop("__salt")
-  }
 
   /** Key-skew DIAGNOSTICS: the report an operator chooses a salting /
     * AQE strategy FROM — the `topK` heaviest keys of `keyCol` with

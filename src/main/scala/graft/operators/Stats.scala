@@ -703,43 +703,20 @@ object Stats {
   /** EXACT equi-depth bucketing (NTILE without the global sort):
     * every row's exact global rank in `(value, id)` order and its
     * k-quantile bucket `((rank−1)·k) div n` — the feature-binning /
-    * balanced-range-split primitive. The rank is the q122 two-phase
-    * prefix scheme transposed to VALUE order: rows bucket into
-    * coarse histogram bins (`floor(v·binsPerUnit)`, monotone in v,
-    * so bin order extends value order and equal values can never
-    * straddle bins), one bounded census turns per-bin counts into
-    * driver-side offsets (fail-fast at `maxBins`), and a PER-BIN
-    * sort window adds the in-bin row number — every stage
-    * partition-parallel where the naive plan (the oracle) funnels
-    * the corpus through one global ROW_NUMBER. Values normalize
-    * through the [[zscoreOutliers]] decimal cast; rank arithmetic is
-    * nonnegative integer only, so the frame hash-gates. */
+    * balanced-range-split primitive. The rank is a [[GlobalRank]]:
+    * every stage partition-parallel where the naive plan (the oracle)
+    * funnels the corpus through one global ROW_NUMBER. Values
+    * normalize through the [[zscoreOutliers]] decimal cast; rank
+    * arithmetic is nonnegative integer only, so the frame hash-gates. */
   def equiDepthBuckets(df: DataFrame, idCol: String, valueCol: Column,
-                       k: Int, binsPerUnit: Int = 4,
-                       maxBins: Int = 1 << 20,
-                       prec: Int = 18, scale: Int = 2): DataFrame = {
+                       k: Int, prec: Int = 18, scale: Int = 2): DataFrame = {
     require(k > 0, "k must be positive")
-    require(binsPerUnit > 0, "binsPerUnit must be positive")
     val v = valueCol.try_cast(s"decimal($prec,$scale)").cast("double")
-    val rows = df.filter(v.isNotNull)
-      .select(col(idCol), v.as("v"),
-        floor(v * binsPerUnit).cast("long").as("__bin"))
-    val binRows = Bounded.collectOrFail(
-      rows.groupBy(col("__bin")).agg(count(lit(1)).as("__c")), maxBins)(
-      s"more than $maxBins value bins at binsPerUnit=$binsPerUnit — lower binsPerUnit")
-    require(binRows.nonEmpty, "empty input")
-    val sorted = binRows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val n = sorted.map(_._2).sum
-    val offsets = sorted.map(_._1)
-      .zip(sorted.map(_._2).scanLeft(0L)(_ + _).dropRight(1)).toSeq
-    val sp = df.sparkSession
-    import sp.implicits._
-    val offDf = offsets.toDF("__bin", "__off")
-    val w = Window.partitionBy(col("__bin")).orderBy(col("v"), col(idCol))
-    rows.join(broadcast(offDf), "__bin")
-      .withColumn("rank", row_number().over(w).cast("long") + col("__off"))
-      .select(col(idCol), col("v"), col("rank"),
-        expr(s"((rank - 1) * $k) div ${n}L").as("bucket"))
+    val rows = df.filter(v.isNotNull).select(col(idCol), v.as("v"))
+    val (ranked, n) = GlobalRank(rows, Seq(col("v"), col(idCol)), "rank")
+    require(n > 0, "empty input")
+    ranked.select(col(idCol), col("v"), col("rank"),
+      expr(s"((rank - 1) * $k) div ${n}L").as("bucket"))
   }
 
   /** Kaplan-Meier LIFE TABLE over right-censored durations — the
@@ -970,8 +947,8 @@ object Stats {
     * convention).
     *
     * Scale shape: one census shuffle into a strata-sized frame; the
-    * Gini rank windows over STRATA (sources/domains — thousands),
-    * totals broadcast. Guard: stratum·n products stay inside longs
+    * Gini rank is a [[GlobalRank]] over STRATA (sources/domains —
+    * thousands), totals broadcast. Guard: stratum·n products stay inside longs
     * for any census below ~3e9 total — the jsDivergence guard
     * applies upstream of that scale. */
   def inequality(df: DataFrame, groupCol: String, sizeCol: Column): DataFrame = {
@@ -982,10 +959,7 @@ object Stats {
           .otherwise(raise_error(
             lit("inequality: total mass outside (0, 3e9] — rescale before " +
               "the long product bound")).cast("long")))
-    val ranked = census
-      .withColumn("__i", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("__x").asc, col(groupCol).asc)).cast("long"))
+    val ranked = GlobalRank(census, Seq(col("__x").asc, col(groupCol).asc), "__i")._1
       .crossJoin(broadcast(totals))
     val theilTerm = expr(
       s"""CASE WHEN __x > 0 THEN __x * (

@@ -3190,9 +3190,9 @@ object PipelineQueries {
     },
 
     // ---- q139: exact equi-depth buckets — NTILE semantics at scale:
-    // the q122 two-phase prefix scheme transposed to VALUE order
-    // (coarse monotone bins → bounded offset census → per-bin sort
-    // windows), so no corpus-wide global ROW_NUMBER anywhere in the
+    // q122's GlobalRank in VALUE order (sampled value buckets →
+    // bounded offset census → per-bucket sort windows), so no
+    // corpus-wide global ROW_NUMBER anywhere in the
     // engine plan (pinned); the oracle IS that naive global window,
     // proving the blocked rank equals the sequential definition
     // row-for-row. Decimal-normalized values make heavy ties, which

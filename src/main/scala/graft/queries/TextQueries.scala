@@ -731,7 +731,8 @@ object TextQueries {
     // Theil of token mass per source AND per lang (one row each):
     // the "is the mix dominated by a few strata" one-liner next to
     // q167's which-stratum-diverges and q163's how-to-rebalance.
-    // Gini rank windows over strata only; both metrics exact longs.
+    // Gini rank is a GlobalRank over strata only; both metrics exact
+    // longs.
     Q("q174_source_inequality", Some(inequalityOracleSql)) { (s, d) =>
       val docs = Tables.documents(s, d)
       def one(dim: String) = graft.operators.Stats.inequality(
@@ -748,7 +749,7 @@ object TextQueries {
     // distinct-counts: each word's first-occurrence census buckets
     // into bands, the band-spine cumulative IS the distinct count at
     // every cut simultaneously. One word census + one doc census,
-    // both ≤10 rows before the spine windows.
+    // both ≤10 rows; the spine's running sums are driver work.
     Q("q173_vocab_growth", Some("""
       WITH n AS (SELECT MAX(doc_id) + 1 AS nn FROM documents),
       tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
@@ -958,8 +959,8 @@ object TextQueries {
     // in 10 bands), own mass and SURVIVAL mass at that threshold
     // (suffix-cumulative docs/tokens + exact ×10⁴ surviving-token
     // fraction): the dashboard that picks a quality cutoff. One
-    // census shuffle into ≤10 rows; the cumulative windows over the
-    // band spine, empty bands emitting zeros.
+    // census shuffle into ≤10 rows; the band spine's suffix sums are
+    // driver work, empty bands emitting zeros.
     Q("q172_selection_curve", Some(s"""
       WITH q AS (
         SELECT CAST(floor((0.4 * LEAST(1.0, len(string_split(text, ' ')) / 100.0)
@@ -1415,8 +1416,8 @@ object TextQueries {
     // correctly rounded in both engines, generic pow is not) with
     // the 100k-unit budget split by exact largest-remainder (Hare)
     // apportionment in long arithmetic — allocations sum to the
-    // budget on any input. One corpus census shuffle; the ranking
-    // windows over the strata table only.
+    // budget on any input. One corpus census shuffle; the remainder
+    // rank is a GlobalRank over the strata table only.
     Q("q163_temperature_mix", Some("""
       WITH c AS (SELECT source, CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
                  FROM documents GROUP BY 1),
@@ -1449,9 +1450,9 @@ object TextQueries {
     // passes in exact e6 fixed-point so the full fitted table
     // hash-gates (every pass = integer multiply by the e6 target,
     // integral divide by the current marginal — `div` ≡ `//`, both
-    // truncating, values nonnegative). One corpus census shuffle;
-    // the maxCells fail-fast bounds all 8 window passes by
-    // construction; targets attach as broadcast scalars.
+    // truncating, values nonnegative). One corpus census shuffle,
+    // collected under the maxCells fail-fast; the 8 scaling passes
+    // run on the driver in exact integers.
     Q("q215_ipf_raking", Some(ipfOracleSql(4))) { (s, d) =>
       Curation.ipfRake(Tables.documents(s, d), "lang", "source", rounds = 4)
         .orderBy("lang", "source")
@@ -1752,9 +1753,9 @@ object TextQueries {
     // corpus: the one sampling design here with size-proportional
     // inclusion (long docs more likely), next to q50's fixed-rate,
     // q74's fixed-size and q76's derived-rate filters. The engine
-    // side computes the exact global token prefix sum with the
-    // two-phase block scheme (per-block totals → bounded driver
-    // prefix → per-block window), never a single-partition global
+    // side computes the exact global token prefix sum with
+    // GlobalRank (sampled id buckets → bounded driver offsets →
+    // per-bucket window), never a single-partition global
     // window; the oracle IS that naive global window, so the gate
     // proves the scalable plan equals the sequential definition
     // boundary-for-boundary. Selection is nonnegative integer
@@ -2086,16 +2087,22 @@ object TextQueries {
       val docs = Tables.documents(s, d).select(
         col("doc_id"), qcol.as("q"),
         size(TextFunctions.tokens(col("text"))).cast("long").as("n_toks"))
-        .withColumn("g", lit(0))
-      // Quartile boundary bins from the mergeable sketch: ONE bounded
-      // row, collected as strategy constants (the k-means centroid
-      // rule) so classification below is a literal-only projection.
-      val bounds = Sketches.binnedPercentiles(docs, Seq("g"), col("q"),
-        percentiles = Seq(25, 50, 75), binsPerUnit = 64).head()
-      def boundaryBin(name: String): Long =
-        math.round(bounds.getAs[Double](name) * 64.0d) // bin/64 * 64 — exact
-      val (b25, b50, b75) = (boundaryBin("p25_est"), boundaryBin("p50_est"), boundaryBin("p75_est"))
+      // Quartile boundary bins from the binned-percentile histogram
+      // (q ∈ [0, 1]: at most 65 bins), its running counts summed on the
+      // driver by the census primitive and the picked bins kept as
+      // strategy constants (the k-means centroid rule), so
+      // classification below is a literal-only projection.
       val bin = Sketches.histogramBin(col("q"), 64)
+      val hist = graft.operators.Stats.collectCensus(
+        docs.filter(col("q").isNotNull && !isnan(col("q")))
+          .groupBy(bin.as("bin")).agg(count(lit(1)).as("cnt")),
+        65, "q88 quality histogram",
+        graft.operators.Stats.CensusSum.running("cum", "cnt", Nil, "bin"),
+        graft.operators.Stats.CensusSum.total("n", "cnt", Nil))
+      def boundaryBin(p: Int): Long = hist.rows
+        .filter(r => r.getLong(2) >= (r.getLong(3) - 1) * p / 100 + 1)
+        .map(_.getLong(0)).minOption.getOrElse(0L)
+      val (b25, b50, b75) = (boundaryBin(25), boundaryBin(50), boundaryBin(75))
       docs.select(col("q"), col("n_toks"),
           (lit(1) + (bin > lit(b25)).cast("int") + (bin > lit(b50)).cast("int")
             + (bin > lit(b75)).cast("int")).as("stratum"))

@@ -303,8 +303,8 @@ class PlanSpec extends SparkSuite {
   }
 
   test("q122 systematic sample: the prefix sum is block-partitioned, never a global window") {
-    // The whole point of the two-phase cumsum: the corpus-sized
-    // window runs partitioned by id block; only blocked windows may
+    // The whole point of the GlobalRank prefix sum: the corpus-sized
+    // window runs partitioned by id bucket; only bucketed windows may
     // appear, and the offsets attach by broadcast join.
     val wins = optimized("q122_systematic_sample").collect { case w: LWindow => w }
     assert(wins.nonEmpty, "sampler lost its running-sum window")
@@ -389,19 +389,13 @@ class PlanSpec extends SparkSuite {
     } finally spark.listenerManager.unregister(l)
   }
 
-  test("census-tier rows: no unpartitioned window unless a GlobalLimit is beneath it") {
-    // The q33 rule over every row that reaches a census operator, in
-    // the frame's plan and in every action its build runs: a census's
-    // running sums and totals are driver work, never a
-    // single-partition window.
-    val rows = Seq("q62_percentiles", "q138_mad_outliers", "q144_class_auc", "q145_spearman",
-      "q149_km_lifetable", "q185_seasonal_decompose", "q189_binary_segmentation",
-      "q193_seasonal_anomaly", "q194_ks_two_sample", "q195_cliffs_delta", "q196_hl_shift",
-      "q199_cvm_two_sample", "q200_kruskal_wallis", "q206_isotonic", "q207_winsorize",
-      "q208_quantile_normalize", "q210_source_length_drift", "q211_best_split", "q212_psi",
-      "q213_lang_agreement", "q223_jackknife_ci", "q227_voptimal_hist")
+  test("every registered row: no unpartitioned window unless a GlobalLimit is beneath it") {
+    // The q33 rule over every registered query, in the frame's plan
+    // and in every action its build runs: a global rank or prefix sum
+    // is a GlobalRank and a census's sums are driver work — never a
+    // single-partition window over unbounded input.
     val bad = for {
-      name <- rows
+      name <- SparkEntry.queries.keys.toSeq.sorted
       plan <- buildAndFinalPlans(name)
       w <- plan.collect { case w: LWindow => w }
       if w.partitionSpec.isEmpty && w.child.collectFirst { case g: GlobalLimit => g }.isEmpty

@@ -26,12 +26,6 @@ class TextFunctionsSpec extends SparkSuite {
     assert(short == Seq.empty)
   }
 
-  test("char shingles") {
-    val got = Seq("abcd").toDF("t")
-      .select(TextFunctions.charShingles(col("t"), 2)).as[Seq[String]].head()
-    assert(got == Seq("ab", "bc", "cd"))
-  }
-
   test("quality score components") {
     // "the the cat" -> 3 tokens, 2 distinct, 2 stopword hits
     // len: 0.4*min(1, 3/100)=0.012; distinct: 0.3*2/3=0.2;

@@ -168,9 +168,6 @@ class BoundedSpec extends SparkSuite {
       ("Stats.fitHistogramBaseline",
         () => hist(Stats.fitHistogramBaseline(values, col("v"), maxBins = Max)),
         () => hist(Stats.fitHistogramBaseline(values, col("v")))),
-      ("Stats.equiDepthBuckets",
-        () => rows(Stats.equiDepthBuckets(values, "id", col("v"), k = 2, maxBins = Max)),
-        () => rows(Stats.equiDepthBuckets(values, "id", col("v"), k = 2))),
       ("Bpe.learnMergesLocal",
         () => bpe(Bpe.learnMergesLocal(words, "word", "freq", 2, maxDictRows = Max)),
         () => bpe(Bpe.learnMergesLocal(words, "word", "freq", 2))),
@@ -183,9 +180,6 @@ class BoundedSpec extends SparkSuite {
       ("CharLm.collectModel",
         () => CharLm.collectModel(docs, rareFactor = 10, maxModelRows = Max),
         () => CharLm.collectModel(docs, rareFactor = 10)),
-      ("Curation.systematicSampleByTokens",
-        () => rows(Curation.systematicSampleByTokens(docs, 100L, maxBlocks = Max)),
-        () => rows(Curation.systematicSampleByTokens(docs, 100L))),
       ("Curation.doremiMixWeights",
         () => rows(Curation.doremiMixWeights(docs, "source", rounds = 2, maxDomains = Max)),
         () => rows(Curation.doremiMixWeights(docs, "source", rounds = 2))),

@@ -435,7 +435,7 @@ class CurationSpec extends SparkSuite {
     assert(shares.getOrElse("val", 0.0) < 0.2 && shares.getOrElse("test", 0.0) < 0.2)
   }
 
-  test("systematicSampleByTokens ≡ sequential walk; block size never changes the result") {
+  test("systematicSampleByTokens ≡ sequential walk; every token boundary covered once") {
     import spark.implicits._
     // ids with gaps (sparse blocks) and varied lengths; words are
     // space-joined so n_tokens is the word count exactly
@@ -452,11 +452,10 @@ class CurationSpec extends SparkSuite {
         if (cum / step > before / step) Some((id, w, cum)) else None
       }
     }
-    for (step <- Seq(100L, 333L, 997L); blockSize <- Seq(1L, 256L, 1000000L)) {
-      val got = Curation.systematicSampleByTokens(df, step, blockSize = blockSize)
+    for (step <- Seq(100L, 333L, 997L)) {
+      val got = Curation.systematicSampleByTokens(df, step)
         .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-      assert(got === sequential(step),
-        s"diverged at step=$step blockSize=$blockSize")
+      assert(got === sequential(step), s"diverged at step=$step")
     }
     // token-mass invariant: every 100-token boundary is covered by
     // exactly one picked document (a long doc may cover several)
@@ -465,10 +464,6 @@ class CurationSpec extends SparkSuite {
       .as[(Long, Long, Long)].collect()
       .map { case (_, w, cum) => cum / 100L - (cum - w) / 100L }.sum
     assert(covered === total / 100L, "picked docs must cover every boundary once")
-    // block-count guard fails fast instead of collecting unbounded totals
-    val e = intercept[IllegalArgumentException](
-      Curation.systematicSampleByTokens(df, 100L, blockSize = 1L, maxBlocks = 3))
-    assert(e.getMessage.contains("blocks"))
   }
 
   test("sequentialPoissonSample ≡ sequential u/w ranking; weights bias; zero weights drop") {
