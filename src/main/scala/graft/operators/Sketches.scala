@@ -329,7 +329,11 @@ object Sketches {
     * for the same group merge beforehand by summing `cnt` — which
     * the cumulative window does implicitly, so duplicate bin rows
     * (e.g. one per micro-batch) are fine as long as each count is
-    * disjoint. */
+    * disjoint. With no group column the histogram's running counts are
+    * a [[Stats.census]] on the driver (at most 2²⁰ bins). */
+  /** Bins one ungrouped histogram may hold on the driver. */
+  private val maxSingleBins = 1 << 20
+
   def histogramPercentiles(hist: DataFrame, groupCols: Seq[String],
                            percentiles: Seq[Int], binsPerUnit: Int): DataFrame = {
     require(binsPerUnit > 0 && (binsPerUnit & (binsPerUnit - 1)) == 0,
@@ -337,11 +341,16 @@ object Sketches {
     require(percentiles.nonEmpty && percentiles.forall(p => p >= 0 && p <= 100),
       "percentiles must be in [0, 100]")
     val gcols = groupCols.map(col)
-    val byBin = Window.partitionBy(gcols: _*).orderBy(col("bin"))
-    val whole = Window.partitionBy(gcols: _*)
-    val cum = hist
-      .withColumn("cum", sum(col("cnt")).over(byBin))
-      .withColumn("n", sum(col("cnt")).over(whole))
+    val cum =
+      if (groupCols.isEmpty)
+        // One histogram: its running and total counts are a census's
+        // driver sums, never a window over the whole histogram.
+        Stats.census(hist.groupBy(col("bin")).agg(sum(col("cnt")).as("cnt")), maxSingleBins,
+          "histogramPercentiles", Stats.CensusSum.running("cum", "cnt", Nil, "bin"),
+          Stats.CensusSum.total("n", "cnt", Nil))
+      else hist
+        .withColumn("cum", sum(col("cnt")).over(Window.partitionBy(gcols: _*).orderBy(col("bin"))))
+        .withColumn("n", sum(col("cnt")).over(Window.partitionBy(gcols: _*)))
     val aggs = percentiles.map { p =>
       (min(when(col("cum") >= expr(s"((n - 1) * $p) div 100") + 1, col("bin")))
         .cast("double") / lit(binsPerUnit.toDouble)).as(s"p${p}_est")

@@ -3190,8 +3190,8 @@ object PipelineQueries {
     },
 
     // ---- q139: exact equi-depth buckets — NTILE semantics at scale:
-    // q122's GlobalRank in VALUE order (sampled value buckets →
-    // bounded offset census → per-bucket sort windows), so no
+    // q122's GlobalRank in VALUE order (value buckets → bounded
+    // offset census → per-bucket sort windows), so no
     // corpus-wide global ROW_NUMBER anywhere in the
     // engine plan (pinned); the oracle IS that naive global window,
     // proving the blocked rank equals the sequential definition

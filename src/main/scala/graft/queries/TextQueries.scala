@@ -1754,7 +1754,7 @@ object TextQueries {
     // inclusion (long docs more likely), next to q50's fixed-rate,
     // q74's fixed-size and q76's derived-rate filters. The engine
     // side computes the exact global token prefix sum with
-    // GlobalRank (sampled id buckets → bounded driver offsets →
+    // GlobalRank (id buckets → bounded driver offsets →
     // per-bucket window), never a single-partition global
     // window; the oracle IS that naive global window, so the gate
     // proves the scalable plan equals the sequential definition
@@ -2087,22 +2087,15 @@ object TextQueries {
       val docs = Tables.documents(s, d).select(
         col("doc_id"), qcol.as("q"),
         size(TextFunctions.tokens(col("text"))).cast("long").as("n_toks"))
-      // Quartile boundary bins from the binned-percentile histogram
-      // (q ∈ [0, 1]: at most 65 bins), its running counts summed on the
-      // driver by the census primitive and the picked bins kept as
-      // strategy constants (the k-means centroid rule), so
-      // classification below is a literal-only projection.
+      // Quartile boundary bins from the mergeable sketch: ONE bounded
+      // row, collected as strategy constants (the k-means centroid
+      // rule) so classification below is a literal-only projection.
+      val bounds = Sketches.binnedPercentiles(docs, Nil, col("q"),
+        percentiles = Seq(25, 50, 75), binsPerUnit = 64).head()
+      def boundaryBin(name: String): Long =
+        math.round(bounds.getAs[Double](name) * 64.0d) // bin/64 * 64 — exact
+      val (b25, b50, b75) = (boundaryBin("p25_est"), boundaryBin("p50_est"), boundaryBin("p75_est"))
       val bin = Sketches.histogramBin(col("q"), 64)
-      val hist = graft.operators.Stats.collectCensus(
-        docs.filter(col("q").isNotNull && !isnan(col("q")))
-          .groupBy(bin.as("bin")).agg(count(lit(1)).as("cnt")),
-        65, "q88 quality histogram",
-        graft.operators.Stats.CensusSum.running("cum", "cnt", Nil, "bin"),
-        graft.operators.Stats.CensusSum.total("n", "cnt", Nil))
-      def boundaryBin(p: Int): Long = hist.rows
-        .filter(r => r.getLong(2) >= (r.getLong(3) - 1) * p / 100 + 1)
-        .map(_.getLong(0)).minOption.getOrElse(0L)
-      val (b25, b50, b75) = (boundaryBin(25), boundaryBin(50), boundaryBin(75))
       docs.select(col("q"), col("n_toks"),
           (lit(1) + (bin > lit(b25)).cast("int") + (bin > lit(b50)).cast("int")
             + (bin > lit(b75)).cast("int")).as("stratum"))

@@ -35,6 +35,9 @@ class GlobalRankSpec extends SparkSuite {
     spark.sparkContext.parallelize(rows, parts).toDF("id", "a", "x", "v")
   }
 
+  /** Both routes: the probe's bound ≤ 0 forces the sampled one. */
+  private val routes = Seq("driver census" -> Long.MaxValue, "sampled" -> 0L)
+
   private def sorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
@@ -58,11 +61,12 @@ class GlobalRankSpec extends SparkSuite {
       rows.map { case (id, a, x, v) => (i, id, a, x, v) } }
       .toDF("case", "id", "a", "x", "v")
     val (want, schema) = reference(tagged, order, "v")
-    for ((rows, i) <- cases.zipWithIndex; parts <- Seq(1, 3, 17)) {
-      val (got, n) = GlobalRank(frame(rows, parts), order, "rank", Some("v" -> "cum"))
-      assert(n === rows.size.toLong, s"$what: row count at $parts partitions")
-      assert(got.schema === schema, s"$what: schema at $parts partitions")
-      assert(sorted(got) === want.getOrElse(i, Nil), s"$what: diverged at $parts partitions on $rows")
+    for ((rows, i) <- cases.zipWithIndex; parts <- Seq(1, 3, 17); (route, bound) <- routes) {
+      val (got, n) = GlobalRank.rank(frame(rows, parts), order, "rank", Some("v" -> "cum"), None, bound)
+      assert(n === rows.size.toLong, s"$what: row count at $parts partitions, $route route")
+      assert(got.schema === schema, s"$what: schema at $parts partitions, $route route")
+      assert(sorted(got) === want.getOrElse(i, Nil),
+        s"$what: diverged at $parts partitions, $route route, on $rows")
     }
   }
 
@@ -90,24 +94,29 @@ class GlobalRankSpec extends SparkSuite {
     val order = Seq(col("c").desc, col("g"))
     val (want, _) = reference(samples.zipWithIndex.map { case (rows, i) =>
       census(rows).withColumn("case", lit(i)) }.reduce(_ unionByName _), order, "s")
-    for ((rows, i) <- samples.zipWithIndex) {
-      val (got, n) = GlobalRank(census(rows), order, "rank", Some("s" -> "cum"))
+    for ((rows, i) <- samples.zipWithIndex; (route, bound) <- routes) {
+      val (got, n) = GlobalRank.rank(census(rows), order, "rank", Some("s" -> "cum"), None, bound)
       val once = sorted(got)
-      assert(sorted(got) === once, "two evaluations of one ranked frame disagree")
+      assert(sorted(got) === once, s"two evaluations of one ranked frame disagree, $route route")
       assert(n === 37L)
-      assert(once === want(i))
+      assert(once === want(i), s"$route route")
     }
   }
 
-  test("rank column is a non-null long; a repeated unique lead fails with its message") {
+  test("rank column is a non-null long; a null or repeated unique lead fails with its message") {
     import spark.implicits._
     val (got, _) = GlobalRank(Seq(3L, 1L, 2L).toDF("id"), Seq(col("id")), "r")
     assert(got.schema("r") === StructField("r", LongType, nullable = false))
     assert(got.orderBy("id").collect().map(_.getLong(1)).toSeq === Seq(1L, 2L, 3L))
-    val e = intercept[IllegalArgumentException](
-      GlobalRank(Seq(4L, 1L, 4L).toDF("id"), Seq(col("id")), "r", uniqueLead = Some("repeated id")))
-    assert(e.getMessage.contains("repeated id"))
-    assert(GlobalRank(Seq(4L, 1L).toDF("id"), Seq(col("id")), "r",
-      uniqueLead = Some("repeated id"))._1.collect().map(_.getLong(1)).sorted.toSeq === Seq(1L, 2L))
+    for ((route, bound) <- routes) {
+      def lead(ids: Option[Long]*) = GlobalRank.rank(ids.toDF("id"), Seq(col("id")), "r", None,
+        Some("repeated id"), bound)
+      for (bad <- Seq(Seq(Some(4L), Some(1L), Some(4L)), Seq(Some(4L), None))) {
+        val e = intercept[IllegalArgumentException](lead(bad: _*))
+        assert(e.getMessage.contains("repeated id"), s"$route route")
+      }
+      assert(lead(Some(4L), Some(1L))._1.collect().map(_.getLong(1)).sorted.toSeq === Seq(1L, 2L),
+        s"$route route")
+    }
   }
 }
