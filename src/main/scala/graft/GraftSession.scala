@@ -19,8 +19,45 @@ import org.apache.spark.sql.SparkSession
   *    track executor count anyway.
   *  - UTC session timezone so timestamp rendering matches the DuckDB
   *    oracle byte-for-byte.
+  *
+  * Engine settings, so that a warm engine compiles and sets up each
+  * operator once ([[engineConf]]; measured on 4 cores at sf0.01 with
+  * the perfbench workloads):
+  *  - `spark.sql.codegen.cache.maxEntries=1024`: Spark caches
+  *    generated classes in one JVM-wide cache of 100 entries (4
+  *    segments of about 25). One workload's working set is larger
+  *    (relational_shuffle 91 distinct classes, kernels_streaming
+  *    124; all 246 registered rows 3,261), so at 100 the engine
+  *    recompiled byte-identical code: 608 compiles in 4 timed kernels_streaming
+  *    passes, against 35 in 8 at 1024. Peak metaspace there stays at
+  *    170 MB (169.7 at 1024, 170.2 at 100). The size is read once,
+  *    when the code generator is first used in the JVM, so it only
+  *    takes in a JVM whose first session this is.
+  *  - `spark.sql.artifact.isolation.enabled=false`: with isolation
+  *    each streaming lane's cloned session gets a fresh executor
+  *    classloader, and the codegen cache keys on the classloader, so
+  *    q187 and q245 recompiled 14 and 3 classes on every run. The
+  *    engine adds no session artifacts.
+  *  - `spark.sql.streaming.checkpointFileManagerClass`:
+  *    [[graft.streaming.LocalCheckpointFileManager]], which writes
+  *    `file:` checkpoint and state files with java.nio instead of
+  *    Hadoop's local file system, which forked `chmod` and `readlink`
+  *    about 280 times per kernels_streaming pass (~2.4 ms each).
+  *  Together, in alternating perfbench pairs, kernels_streaming's
+  *  `query_geomean_s` median went from 0.96 to 0.45 s and
+  *  relational_shuffle's from 0.74 to 0.53 s.
   */
 object GraftSession {
+
+  /** The engine's compile-once and fork-free settings (see the
+    * object doc). The first two are static: a JVM whose session
+    * already exists keeps its values, and [[apply]] says so. */
+  private[graft] val engineConf: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> "1024",
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    graft.streaming.LocalCheckpointFileManager.ConfKey ->
+      classOf[graft.streaming.LocalCheckpointFileManager].getName)
+
   def apply(appName: String, cpus: String): SparkSession = {
     val builder = SparkSession.builder()
       .appName(appName)
@@ -36,20 +73,26 @@ object GraftSession {
     val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
       .map { kv => val Array(k, v) = kv.split("=", 2); (k.trim, v.trim) }
-    extra.foreach { case (k, v) => builder.config(k, v) }
+    val overlaid = extra.map(_._1).toSet
+    val engine = engineConf.filterNot { case (k, _) => overlaid(k) }
+    (engine ++ extra).foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
-    // getOrCreate silently IGNORES builder configs when a session
-    // already exists in the JVM (tests, notebook reuse) — an A/B
-    // experiment would then record results under the wrong config.
-    // Verify the overlay actually took and shout if it did not.
-    extra.foreach { case (k, v) =>
-      val actual = spark.conf.getOption(k)
-      if (!actual.contains(v))
-        System.err.println(
-          s"[GraftSession] WARNING: SPARK_GRAFT_EXTRA_CONF '$k=$v' did NOT take " +
-            s"(session already exists; effective value: ${actual.getOrElse("<unset>")}) — " +
-            "results from this session must not be attributed to the overlay")
-    }
+    // getOrCreate silently IGNORES static builder configs when a
+    // session already exists in the JVM (tests, notebook reuse): an
+    // A/B experiment would then record results under the wrong
+    // config, and the engine would recompile and thrash its codegen
+    // cache. Verify every setting actually took and shout if not.
+    def check(source: String, settings: Seq[(String, String)]): Unit =
+      settings.foreach { case (k, v) =>
+        val actual = spark.conf.getOption(k)
+        if (!actual.contains(v))
+          System.err.println(
+            s"[GraftSession] WARNING: $source '$k=$v' did NOT take " +
+              s"(session already exists; effective value: ${actual.getOrElse("<unset>")}) — " +
+              "results from this session must not be attributed to it")
+      }
+    check("engine setting", engine)
+    check("SPARK_GRAFT_EXTRA_CONF", extra)
     spark.sparkContext.setLogLevel("WARN")
     // SQL surface parity: spark.sql callers get the same custom
     // expressions as the Column API.

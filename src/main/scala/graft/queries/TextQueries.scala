@@ -3049,7 +3049,7 @@ object TextQueries {
       val scored = lineFilterProjection(
         graft.streaming.StreamLane.documents(s, d), lm)
       graft.streaming.StreamLane.drain(s, scored, "append", "q245_mem",
-          statePartitions = 8, noDataBatch = false)
+          noDataBatch = false)
         .orderBy("doc_id")
     })
 

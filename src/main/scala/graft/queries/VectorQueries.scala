@@ -458,7 +458,7 @@ object VectorQueries {
       val served = Similarity.ivfServeBroadcast(emb, merged, cents,
         qStream, k = 5, nProbe = 4)
       graft.streaming.StreamLane.drain(s, served, "append", "q240_mem",
-          statePartitions = 8, noDataBatch = false)
+          noDataBatch = false)
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("query_id", "rank")
     },
