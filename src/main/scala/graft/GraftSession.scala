@@ -73,26 +73,23 @@ object GraftSession {
     val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
       .map { kv => val Array(k, v) = kv.split("=", 2); (k.trim, v.trim) }
-    val overlaid = extra.map(_._1).toSet
-    val engine = engineConf.filterNot { case (k, _) => overlaid(k) }
-    (engine ++ extra).foreach { case (k, v) => builder.config(k, v) }
+    val settings = engineConf ++ extra
+    settings.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     // getOrCreate silently IGNORES static builder configs when a
     // session already exists in the JVM (tests, notebook reuse): an
     // A/B experiment would then record results under the wrong
     // config, and the engine would recompile and thrash its codegen
-    // cache. Verify every setting actually took and shout if not.
-    def check(source: String, settings: Seq[(String, String)]): Unit =
-      settings.foreach { case (k, v) =>
-        val actual = spark.conf.getOption(k)
-        if (!actual.contains(v))
-          System.err.println(
-            s"[GraftSession] WARNING: $source '$k=$v' did NOT take " +
-              s"(session already exists; effective value: ${actual.getOrElse("<unset>")}) — " +
-              "results from this session must not be attributed to it")
-      }
-    check("engine setting", engine)
-    check("SPARK_GRAFT_EXTRA_CONF", extra)
+    // cache. Verify every setting actually took (the overlay's value
+    // where it overrides an engine setting) and shout if not.
+    settings.toMap.foreach { case (k, v) =>
+      val actual = spark.conf.getOption(k)
+      if (!actual.contains(v))
+        System.err.println(
+          s"[GraftSession] WARNING: '$k=$v' did NOT take " +
+            s"(session already exists; effective value: ${actual.getOrElse("<unset>")}) — " +
+            "results from this session must not be attributed to it")
+    }
     spark.sparkContext.setLogLevel("WARN")
     // SQL surface parity: spark.sql callers get the same custom
     // expressions as the Column API.
