@@ -165,7 +165,6 @@ object AudioOps {
     out
   }
 
-  /** Test-fixture encoder: float32 mono → PCM16 WAV bytes. */
   /** Perceptual audio envelope hash, 64 bits — the audio sibling of
     * the image dHash ([[graft.operators.Multimodal.dHashPng]]):
     * decode, split into 65 equal-length frames, one bit per
@@ -205,6 +204,7 @@ object AudioOps {
     bits
   }
 
+  /** Test-fixture encoder: float32 mono → PCM16 WAV bytes. */
   def toWavBytes(samples: Array[Float], sampleRate: Int): Array[Byte] = {
     val dataLen = samples.length * 2
     val buf = java.nio.ByteBuffer.allocate(44 + dataLen)

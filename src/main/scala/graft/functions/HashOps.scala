@@ -156,56 +156,6 @@ object HashOps {
       Array[Any](hit, hit == k.toLong))
   }
 
-  /** Count of DISTINCT word n-gram shingles whose 15-hex md5 form
-    * "maybe" passes a Bloom fit on shingle hexes — the prefilter
-    * twin of [[evalShingleHits]] (no false negatives: a Bloom hit
-    * count of 0 proves zero exact hits), with the shingle walk and
-    * hex formation inlined exactly as there. */
-  def bloomShingleHits(tokens: ArrayData, n: Int, k: Int, numBits: Int,
-                       words: Array[Long]): Long = {
-    val cnt = tokens.numElements()
-    if (cnt < n) return 0L
-    val toks = new Array[Array[Byte]](cnt)
-    var i = 0
-    while (i < cnt) { toks(i) = tokens.getUTF8String(i).getBytes; i += 1 }
-    val matched = new java.util.HashSet[String]()
-    val buf = new java.io.ByteArrayOutputStream(64)
-    val d = md5Local.get()
-    val hex = new Array[Char](15)
-    i = 0
-    while (i <= cnt - n) {
-      buf.reset()
-      var j = 0
-      while (j < n) {
-        if (j > 0) buf.write(' ')
-        buf.write(toks(i + j))
-        j += 1
-      }
-      d.reset()
-      val dig = d.digest(buf.toByteArray)
-      var x = 0
-      while (x < 15) {
-        val b = dig(x / 2) & 0xff
-        hex(x) = HexDigits(if (x % 2 == 0) b >>> 4 else b & 0xf)
-        x += 1
-      }
-      val s = new String(hex)
-      if (!matched.contains(s)) {
-        val kb = s.getBytes("UTF-8")
-        var hit = true
-        var q = 0
-        while (hit && q < k) {
-          val p = bloomPos(kb, q, numBits)
-          if ((words((p >>> 6).toInt) & (1L << (p & 63L).toInt)) == 0L) hit = false
-          q += 1
-        }
-        if (hit) matched.add(s)
-      }
-      i += 1
-    }
-    matched.size.toLong
-  }
-
   /** Minimum 60-bit hash over word n-gram shingles, one md5 per
     * shingle in a single pass (shingle bytes are assembled directly,
     * no intermediate strings). Null when fewer than n tokens —
@@ -275,11 +225,6 @@ object HashOps {
     best
   }
 
-  /** SimHash60 straight from a token array: one md5 per token (vs
-    * the interpreted per-token HOF md5 the column form paid), then
-    * the same sign-of-sum per bit as [[StringOps.simhash60]].
-    * Duplicate tokens must be removed by the caller (they would bias
-    * the bit sums — semantics are distinct-set SimHash). */
   /** Bounded per-thread memo for [[h60]] over short byte keys
     * (tokens): a 2^16-slot direct-mapped cache — natural-language
     * vocabularies repeat the same tokens millions of times across a
@@ -311,6 +256,11 @@ object HashOps {
     }
   }
 
+  /** SimHash60 straight from a token array: one md5 per token (vs
+    * the interpreted per-token HOF md5 the column form paid), then
+    * the same sign-of-sum per bit as [[StringOps.simhash60]].
+    * Duplicate tokens must be removed by the caller (they would bias
+    * the bit sums — semantics are distinct-set SimHash). */
   def simhash60Tokens(tokens: ArrayData): Long = {
     val counts = new Array[Int](60)
     val n = tokens.numElements()

@@ -83,11 +83,6 @@ object StringOps {
     cleaned.trim.replaceAll("(?U)\\s+", "-")
   }
 
-  /** Tolerant clock-duration parse (reference F2, `__init__.py:32-73`):
-    * "HH:MM:SS" / "MM:SS" / "SS" with messy `[;:]+` separators and
-    * empty fields treated as 0. Returns total seconds; NaN signals
-    * parse failure (mapped to SQL NULL by the expression).
-    */
   /** Character-bigram array of a string — the codegen'd kernel
     * behind [[graft.operators.CharLm.charBigrams]] (an interpreted
     * per-char `transform(sequence(...))` HOF was the q77 scan's hot
@@ -239,6 +234,11 @@ object StringOps {
   // EVERY call — a per-row Pattern.compile in the q17 hot loop.
   private val SepRuns = java.util.regex.Pattern.compile("[;:]+")
 
+  /** Tolerant clock-duration parse (reference F2, `__init__.py:32-73`):
+    * "HH:MM:SS" / "MM:SS" / "SS" with messy `[;:]+` separators and
+    * empty fields treated as 0. Returns total seconds; NaN signals
+    * parse failure (mapped to SQL NULL by the expression).
+    */
   def durationSeconds(s: String): Double = {
     if (s == null) return Double.NaN
     val cleaned = SepRuns.matcher(s.trim).replaceAll(":")
@@ -338,9 +338,6 @@ object StringOps {
     out.toArray
   }
 
-  /** Word-level Levenshtein distance (token-sequence edit distance) —
-    * the unit of the corpus-WER aggregate (reference A8,
-    * `post_process.py:322-329`). */
   /** Crawl-frontier URL canonicalization, rule-for-rule replayable
     * in plain SQL string ops (the q66 oracle does): strip the
     * fragment, strip ONE trailing slash from the pre-query part,
@@ -457,6 +454,9 @@ object StringOps {
     if (dp(n) > k) -1 else dp(n)
   }
 
+  /** Word-level Levenshtein distance (token-sequence edit distance) —
+    * the unit of the corpus-WER aggregate (reference A8,
+    * `post_process.py:322-329`). */
   def wordLevenshtein(a: Array[String], b: Array[String]): Int = {
     if (a == null || a.isEmpty) return if (b == null) 0 else b.length
     if (b == null || b.isEmpty) return a.length

@@ -32,9 +32,6 @@ object VectorFunctions {
   /** L2 norm. */
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity of two vectors. */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
-
   /** Cosine given precomputed norms (avoids recomputing per pair). */
   def cosinePrenormed(dotCol: Column, normA: Column, normB: Column): Column =
     dotCol / (normA * normB)

@@ -485,29 +485,6 @@ case class BloomPositions(child: Expression, k: Int, numBits: Int) extends Unary
   override protected def withNewChildInternal(c: Expression): BloomPositions = copy(child = c)
 }
 
-/** Bloom-probed distinct shingle hit count (array<string> → long):
-  * the prefilter twin of [[EvalShingleHits]], probing each shingle's
-  * 15-hex md5 form against a [[BloomModel]] fit on the eval set's
-  * shingle hexes. Zero means PROVABLY uncontaminated — the bitset
-  * broadcast replaces the GB-scale exact hex set for the first pass
-  * at 100-TB corpus scale. */
-case class BloomShingleHits(child: Expression, n: Int, model: BloomModel) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(v: Any): Any =
-    java.lang.Long.valueOf(HashOps.bloomShingleHits(
-      v.asInstanceOf[ArrayData], n, model.k, model.numBits, model.words))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomModel", model, classOf[BloomModel].getName)
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashOps.bloomShingleHits($c, $n, $ref.k(), $ref.numBits(), $ref.words())")
-  }
-
-  override protected def withNewChildInternal(c: Expression): BloomShingleHits = copy(child = c)
-}
-
 /** Distinct eval-shingle hit count of a token array against a
   * plan-time [[ShingleSetModel]] (array<string> → long): shingle
   * hashing fused with the membership probe
@@ -1099,8 +1076,6 @@ object GraftFunctions {
     col(BloomPositions(expr(c), k, numBits))
   def bloom_membership(c: Column, model: BloomModel): Column =
     col(BloomMembership(expr(c), model))
-  def bloom_shingle_hits(c: Column, n: Int, model: BloomModel): Column =
-    col(BloomShingleHits(expr(c), n, model))
 
   /** Register all custom functions for SQL use, so `spark.sql`
     * callers get the same codegen'd expressions as the Column API

@@ -309,12 +309,6 @@ object Bpe {
         expr("CAST(n_chars * 10000 DIV n_tokens AS BIGINT)"))
   }
 
-  /** Collect a trained merge table into the driver-side ranked list
-    * [[segmentStatsWithMerges]] closes over (bounded by numMerges). */
-  def collectMerges(mergeDf: DataFrame): Seq[(String, String)] =
-    mergeDf.orderBy("merge_rank").select("lhs", "rhs").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
-
   /** Segment per-document token statistics under a trained dictionary:
     * every document word is looked up in the segmented dictionary
     * (words absent from the fit corpus fall back to character count).

@@ -76,8 +76,7 @@ object Clustering {
   /** A fitted set of centroids — the deployable artifact of [[fit]]:
     * plain driver-side doubles, so it serializes into a closure /
     * plan literal and scores batch or stream identically (the
-    * fit-batch / score-stream split [[graft.streaming.EventStreams
-    * .clusterAssigned]] deploys). */
+    * fit-batch / score-stream split [[assignWithModel]] runs). */
   final case class KMeansModel(centroids: Seq[(Int, Seq[Double])]) {
     private[operators] def toCentroids: Array[Centroid] =
       centroids.map { case (id, v) => Centroid(id, v.toArray) }.toArray

@@ -314,41 +314,10 @@ object Curation {
         GraftFunctions.shingle_hex_tokens(TextFunctions.tokens(col(textCol)), n))).as("sh"))
       .distinct().collect().map(_.getString(0)))
 
-  /** Bloom twin of [[collectEvalShingles]]: fit the membership
-    * sketch on the eval set's distinct shingle hexes. At benchmark
-    * scale the exact hex set is small and this is optional; at a
-    * 100-TB eval-suite union the bitset (numBits/8 bytes, caller-
-    * bounded) broadcasts where the exact set would not. */
-  def collectEvalBloom(evalDocs: DataFrame, n: Int = 3, textCol: String = "text",
-                       numBits: Int = 1 << 20, k: Int = 5): graft.functions.BloomModel =
-    Sketches.fitBloom(
-      evalDocs.select(explode(array_distinct(
-        GraftFunctions.shingle_hex_tokens(TextFunctions.tokens(col(textCol)), n))).as("key")),
-      "key", numBits, k)
-
-  /** [[contaminationScoredWithModel]] behind a Bloom PREFILTER fit
-    * on the same eval shingles: the bitset probe runs first and the
-    * exact hex-set probe only where the Bloom reports a possible hit
-    * — identical output (Bloom has no false negatives; spec-pinned),
-    * but on a clean-dominated corpus the expensive exact probe runs
-    * on the false-positive sliver instead of every row. */
-  def contaminationScoredWithBloom(docs: DataFrame,
-                                   model: graft.functions.ShingleSetModel,
-                                   bloom: graft.functions.BloomModel,
-                                   idCol: String = "doc_id",
-                                   textCol: String = "text"): DataFrame = {
-    val toks = TextFunctions.tokens(col(textCol))
-    val hits = when(GraftFunctions.bloom_shingle_hits(toks, model.n, bloom) > 0,
-      GraftFunctions.eval_shingle_hits(toks, model)).otherwise(lit(0L))
-    docs.select(col(idCol), hits.as("n_eval_shingles"),
-      (hits > 0).as("contaminated"))
-  }
-
   /** Score half: per-doc distinct eval-shingle hits + flag, as a
     * PURE stateless codegen projection (shingle hashing fused with
     * the membership probe — no explode, no join, no shuffle), so it
-    * runs identically on batch frames and unbounded streams
-    * ([[graft.streaming.EventStreams.contaminationScored]]). Same
+    * runs identically on batch frames and unbounded streams. Same
     * output contract as [[flagContaminated]]; parity is spec-pinned. */
   def contaminationScoredWithModel(docs: DataFrame,
                                    model: graft.functions.ShingleSetModel,
@@ -907,10 +876,6 @@ object Curation {
         coalesce(col("__nk"), lit(0L)).as("n_kept"), col("text"))
   }
 
-  /** Fixed-size non-overlapping token windows as a paragraph split
-    * for corpora without layout structure — the [[paragraphDedup]]
-    * companion when there is no `\n\n` to split on. The final window
-    * may be shorter. */
   /** Fixed-point log2 in 1/16-bit steps of a POSITIVE integer SQL
     * expression — `16·(bitlen−1)` plus the 4 bits after the MSB as a
     * linear fraction: monotone, exact integer arithmetic only
@@ -1021,6 +986,10 @@ object Curation {
       .select(col(idCol), col("__s.n_ngrams").as("n_ngrams"),
         col("__s.score_q").as("score_q"))
 
+  /** Fixed-size non-overlapping token windows as a paragraph split
+    * for corpora without layout structure — the [[paragraphDedup]]
+    * companion when there is no `\n\n` to split on. The final window
+    * may be shorter. */
   def tokenWindows(textCol: Column, windowTokens: Int): Column = {
     require(windowTokens >= 1, "windowTokens must be positive")
     val toks = TextFunctions.tokens(textCol)

@@ -162,7 +162,7 @@ object Dedup {
     * ([[lshCandidates]]/[[minhashNearDupPairs]]): their contract is
     * "all pairs above threshold", and a silent cap would degrade
     * completeness without opt-in — the cap is something a caller
-    * chooses, sized via [[lshHotBands]]. */
+    * chooses. */
   val DefaultMaxBandSize = 1024
 
   /** LSH candidate pairs from banded minhash signatures.
@@ -193,8 +193,7 @@ object Dedup {
     * non-star pair (b,c) inside a hot band surfaces only if some
     * OTHER band ≤ the cap contains it, so "all pairs above
     * threshold" completeness degrades to "all members reachable from
-    * the band representative" within hot bands — size the cap with
-    * [[lshHotBands]] before opting in. When capped, the
+    * the band representative" within hot bands. When capped, the
     * band-frequency probe is a window count over the same hash
     * partitioning the self-join needs anyway — no extra shuffle of
     * the banded rows; uncapped, no window runs at all. */
@@ -232,22 +231,6 @@ object Dedup {
         .select(col("band_min").as("doc_a"), col(idCol).as("doc_b"))
       allPairs.unionByName(starPairs).distinct()
     }
-  }
-
-  /** Diagnostic for sizing a hot-band cap: the bands whose member
-    * count exceeds `maxBandSize`, with their frequencies. Run this
-    * before opting a pair-level call into a cap — a nonempty result
-    * quantifies exactly how many bands (and how many members each)
-    * would switch from all-pairs to star pairs. */
-  def lshHotBands(sigs: DataFrame, bands: Int, rowsPerBand: Int,
-                  idCol: String = "doc_id",
-                  maxBandSize: Int = DefaultMaxBandSize): DataFrame = {
-    val bandKeys = (0 until bands).map { b =>
-      xxhash64(lit(b), slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))
-    }
-    sigs.select(col(idCol), explode(array(bandKeys: _*)).as("band"))
-      .groupBy("band").agg(count(lit(1)).as("bf"))
-      .filter(col("bf") > maxBandSize)
   }
 
   /** Identical-token-set collapse: one representative row per
@@ -363,20 +346,6 @@ object Dedup {
     within.unionByName(cross)
   }
 
-  /** MinHash+LSH near-duplicate pairs, exactly verified at
-    * `threshold`, over identical-set collapsed representatives.
-    *
-    * Candidates are the union of two channels:
-    *  - LSH banding over rep signatures — banding must be tuned to
-    *    the threshold (S-curve midpoint ≈ (1/bands)^(1/rowsPerBand));
-    *    the default bands=2 × rowsPerBand=32 targets t≈0.99, where a
-    *    moderately-similar s=0.9 pair collides with only p≈0.067, so
-    *    the candidate set stays near-linear.
-    *  - the same-fingerprint channel, which catches exact duplicates
-    *    with probability 1 — the dominant duplicate class never
-    *    depends on banding probability at all (and is expanded
-    *    directly with Jaccard 1.0, skipping verification).
-    */
   /** SAMPLED recall audit of the MinHash-LSH candidate stage against
     * exact Jaccard ground truth — the text-dedup sibling of
     * [[Similarity.lshRecallAudit]], and the evaluation loop a
@@ -411,6 +380,20 @@ object Dedup {
         col("n_found").cast("double") / col("n_true").cast("double"))
   }
 
+  /** MinHash+LSH near-duplicate pairs, exactly verified at
+    * `threshold`, over identical-set collapsed representatives.
+    *
+    * Candidates are the union of two channels:
+    *  - LSH banding over rep signatures — banding must be tuned to
+    *    the threshold (S-curve midpoint ≈ (1/bands)^(1/rowsPerBand));
+    *    the default bands=2 × rowsPerBand=32 targets t≈0.99, where a
+    *    moderately-similar s=0.9 pair collides with only p≈0.067, so
+    *    the candidate set stays near-linear.
+    *  - the same-fingerprint channel, which catches exact duplicates
+    *    with probability 1 — the dominant duplicate class never
+    *    depends on banding probability at all (and is expanded
+    *    directly with Jaccard 1.0, skipping verification).
+    */
   def minhashNearDupPairs(docs: DataFrame, threshold: Double,
                           bands: Int = 2, rowsPerBand: Int = 32,
                           idCol: String = "doc_id", textCol: String = "text",
@@ -462,20 +445,9 @@ object Dedup {
     * exceeds `maxBroadcastDelta` (probed, never assumed) drops the
     * broadcast hints and the same joins run shuffled — correct at
     * any size, just no longer corpus-shuffle-free. */
-  /** Fit [[deltaIngest]]'s optional exact-tier Bloom: the membership
-    * sketch over the delta's canonical fingerprints ([[Sketches
-    * .fitBloom]] — driver state bounded by `numBits/64` words, not
-    * by delta size). */
-  def deltaFingerprintBloom(delta: DataFrame, textCol: String = "text",
-                            numBits: Int = 1 << 20, k: Int = 5): graft.functions.BloomModel =
-    Sketches.fitBloom(
-      delta.select(TextFunctions.canonicalFingerprint(col(textCol)).as("key")),
-      "key", numBits, k)
-
   def deltaIngest(corpus: DataFrame, delta: DataFrame, threshold: Double,
                   idCol: String = "doc_id", textCol: String = "text",
-                  maxBroadcastDelta: Int = 1 << 20,
-                  fpBloom: Option[graft.functions.BloomModel] = None): DataFrame = {
+                  maxBroadcastDelta: Int = 1 << 20): DataFrame = {
     require(threshold > 0.0 && threshold < 1.0, "threshold must be in (0, 1)")
     // Contract guard, probed not assumed (the q31/q22 routing rule):
     // a "delta" above maxBroadcastDelta rows stops being broadcast
@@ -492,17 +464,8 @@ object Dedup {
     def b(df: DataFrame): DataFrame = if (parts.smallDelta) broadcast(df) else df
 
     // Exact tier: corpus fingerprints against the broadcast delta's.
-    // Optional Bloom fast path ([[deltaFingerprintBloom]]): a bitset
-    // probe on the corpus side drops provably-unmatched rows before
-    // the hash join — identical output (no false negatives;
-    // spec-pinned), but the join's build-side lookups run only on
-    // the maybe sliver. On a 100-TB corpus where the daily delta
-    // still exceeds comfortable broadcast-hash-join sizing, the
-    // few-MB bitset is the cheaper first gate.
     val exact = corpus
       .select(col(idCol).as("match_id"), TextFunctions.canonicalFingerprint(col(textCol)).as("fp"))
-      .filter(fpBloom.map(m =>
-        GraftFunctions.bloom_membership(col("fp"), m).getField("maybe")).getOrElse(lit(true)))
       .join(b(dPrep.select(col("dn_id"), col("fp"))), Seq("fp"))
       .groupBy(col("dn_id")).agg(min(col("match_id")).as("exact_match_id"))
 
@@ -1185,9 +1148,11 @@ object Dedup {
     *    Local-checkpoint blocks ARE released by the ContextCleaner
     *    once each round's frame is unreferenced.
     *
-    * Non-convergence within `maxIterations` throws — an exact gate
-    * downstream must never silently compare a half-propagated
-    * labelling.
+    * The rounds run to the fixpoint, with no round cap, and always
+    * get there: the self-edge keeps a node's own label in its
+    * neighbour min and the jump takes `least`, so every round's label
+    * is ≤ the previous one, and labels come from the finite node set.
+    * Either route returns the converged labels on any graph.
     *
     * `reliableCheckpointDir` (r16, the one cluster-hardening caveat
     * from the r15 verdict): local checkpoints live on executors, so
@@ -1214,7 +1179,6 @@ object Dedup {
     * executor to lose — it is pure cost. */
   def connectedComponents(pairs: DataFrame,
                           aCol: String = "doc_a", bCol: String = "doc_b",
-                          maxIterations: Int = 50,
                           reliableCheckpointDir: Option[String] = None,
                           reliableInterval: Int = 5,
                           maxKernelEdges: Int = 4000000): DataFrame = {
@@ -1279,7 +1243,7 @@ object Dedup {
       var labels = cut(nodes.select(col("id"), col("id").as("comp")))
       var iter = 0
       var converged = labels.isEmpty // empty graph is already done
-      while (!converged && iter < maxIterations) {
+      while (!converged) {
         // Cut per round: the pointer jump reads this from both
         // sides of a self-join, and the cut is what keeps the round
         // plan flat (see scaladoc).
@@ -1308,11 +1272,6 @@ object Dedup {
         labels = next
         iter += 1
       }
-      if (!converged)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxIterations rounds — " +
-            "component diameter exceeds the bound; raise maxIterations or " +
-            "switch to large-star/small-star contraction")
       labels
     } finally {
       edges.unpersist(blocking = false)

@@ -57,21 +57,6 @@ object Layout {
         (mx - mn).cast("double")).cast("long"))
       .otherwise(lit(0L))
 
-  /** Z-order zone-map census: quantize `cols` against their global
-    * min/max, interleave into a z-value, bucket by the TOP
-    * `bucketBits` bits, and emit each bucket's row count plus
-    * per-column min/max — exactly the statistics a file skipper
-    * consults, so the census doubles as a direct measurement of how
-    * prunable the clustered layout is (LayoutSpec quantifies it
-    * against a single-column sort).
-    *
-    * Scale shape: one bounded global min/max aggregate (one row,
-    * attached back by broadcast — the q98 pattern), then one scan
-    * computing the z-value as a pure projection and ONE shuffle for
-    * the bucket aggregate, map-side combined to ≤ 2^bucketBits rows
-    * per partition. Nothing here grows with corpus size except the
-    * single scan; at a real write the same z-value feeds
-    * [[clusterByZorder]] instead of a census. */
   /** Attach the Morton z-value (global min/max fit by one bounded
     * aggregate, re-attached by one-row broadcast) — the shared core
     * of the census and the write path, so the two can never disagree
@@ -90,6 +75,21 @@ object Layout {
       .drop(cols.flatMap(c => Seq(s"__mn_$c", s"__mx_$c")): _*)
   }
 
+  /** Z-order zone-map census: quantize `cols` against their global
+    * min/max, interleave into a z-value, bucket by the TOP
+    * `bucketBits` bits, and emit each bucket's row count plus
+    * per-column min/max — exactly the statistics a file skipper
+    * consults, so the census doubles as a direct measurement of how
+    * prunable the clustered layout is (LayoutSpec quantifies it
+    * against a single-column sort).
+    *
+    * Scale shape: one bounded global min/max aggregate (one row,
+    * attached back by broadcast — the q98 pattern), then one scan
+    * computing the z-value as a pure projection and ONE shuffle for
+    * the bucket aggregate, map-side combined to ≤ 2^bucketBits rows
+    * per partition. Nothing here grows with corpus size except the
+    * single scan; at a real write the same z-value feeds
+    * [[clusterByZorder]] instead of a census. */
   def zorderZoneMap(df: DataFrame, cols: Seq[String], bits: Int,
                     bucketBits: Int): DataFrame = {
     require(bucketBits >= 1 && bucketBits <= cols.size * bits,

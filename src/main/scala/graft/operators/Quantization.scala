@@ -256,46 +256,28 @@ object Quantization {
     * corpus-wide exact scan.
     *
     * Plan shape: ONE prepared corpus frame `(cand_id, vec, norm,
-    * codes)` is `localCheckpoint`ed and feeds BOTH stages — the
-    * encode projection and the norm never recompute across the stage
-    * boundary (they otherwise re-run per action: shortlist, re-rank,
-    * and the caller's fit all re-scanning the source). Stage 1 is
+    * codes)` feeds BOTH stages; a caller whose corpus is expensive to
+    * re-read materializes it first (q107 localCheckpoints the
+    * embeddings its fit also reads). Stage 1 is
     * the [[adcTopKEncoded]] core (codes column scanned against the
     * broadcast query ADC tables, bounded top-kShort aggregate);
     * stage 2 joins the (queries × kShort)-row shortlist BACK onto
-    * the same checkpointed frame with the shortlist broadcast — the
+    * the same prepared frame with the shortlist broadcast — the
     * corpus is never shuffled, and the exact cosine (same
     * left-to-right double dot as q30's ground truth) runs on
-    * shortlist rows only. At a 100 TB corpus the checkpoint trades
-    * differently: drop it and let stage 2's broadcast-semi-join
-    * re-scan the columnar source, which prunes to the shortlist ids.
+    * shortlist rows only.
     * Output matches [[Similarity.bruteForceTopK]]'s presentation:
     * `(query_id, neighbor_id, rank, sim)` with raw-sim ranking,
     * id tiebreak, 6 dp display rounding. */
   def adcRerankTopK(corpus: DataFrame, queries: DataFrame, model: PqModel,
                     kShort: Int, k: Int,
-                    idCol: String = "vec_id", vecCol: String = "embedding",
-                    materialize: Boolean = true): DataFrame = {
+                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && kShort >= k, "need kShort >= k >= 1")
-    val built = corpus.select(
+    val base = corpus.select(
         col(idCol).as("cand_id"),
         asDouble(col(vecCol)).as("vec"))
       .withColumn("norm", graft.functions.VectorFunctions.l2Norm(col("vec")))
       .withColumn("codes", codesExpr(col("vec"), model.cbArrays, model.dsub))
-    // materialize=true (default) is EAGER: localCheckpoint(true)
-    // runs a full corpus encode+materialize job at
-    // DataFrame-CONSTRUCTION time, even if the caller never executes
-    // the returned frame — the deliberate trade so the two dependent
-    // stages (ADC shortlist, exact re-rank) read one materialization
-    // instead of racing to recompute it; and local checkpoints are
-    // NON-RELIABLE — an executor lost after lineage truncation fails
-    // the job rather than recomputing. Pass materialize=false when
-    // the CALLER already holds the corpus in a checkpoint
-    // (recomputing the kernel-encoded codes from memory is cheaper
-    // than an extra materialization action), when construction must
-    // stay lazy, or when the corpus is too large to copy (the 100 TB
-    // note above).
-    val base = if (materialize) built.localCheckpoint(true) else built
     val q = Similarity.prepared(queries, idCol, vecCol)
       .select(col(idCol).as("query_id"), col("vec").as("qvec"), col("norm").as("qnorm"))
     val short = adcTopKEncoded(

@@ -136,25 +136,14 @@ object Similarity {
     * Output is integer-only (both ranks), so the gate needs no
     * float hedge.
     *
-    * `materializeInput` (default FALSE — construction stays lazy)
-    * localCheckpoints the kNN frame before the self-join: both join
-    * sides read the SAME lineage, so without the cut an expensive
-    * producer (the n² brute-force scorer at audit scale) is
-    * recomputed once per side — measured ~2× on q142, which opts in.
-    * Opt-in because the checkpoint is EAGER (a full materialization
-    * job runs at DataFrame-CONSTRUCTION time — surprising for
-    * callers that build frames speculatively) and a local checkpoint
-    * is non-reliable under executor loss; when you do opt in, the
-    * eagerness is the point: a lazy checkpoint would let the
-    * self-join's two independent shuffle stages race-compute the
-    * producer concurrently and lose the saving. Leave false when the
-    * input is already materialized (cached/checkpointed/a table). */
-  def mutualKnn(knn: DataFrame, materializeInput: Boolean = false): DataFrame = {
-    val edgeList = if (materializeInput) knn.localCheckpoint(true) else knn
-    val fwd = edgeList.filter(col("query_id") < col("neighbor_id"))
+    * Both join sides read the SAME `knn` lineage, so an expensive
+    * producer runs once per side unless the caller materializes it
+    * first (q142 localCheckpoints its brute-force scorer). */
+  def mutualKnn(knn: DataFrame): DataFrame = {
+    val fwd = knn.filter(col("query_id") < col("neighbor_id"))
       .select(col("query_id").as("u"), col("neighbor_id").as("v"),
         col("rank").cast("long").as("rank_uv"))
-    val rev = edgeList.filter(col("query_id") > col("neighbor_id"))
+    val rev = knn.filter(col("query_id") > col("neighbor_id"))
       .select(col("neighbor_id").as("u"), col("query_id").as("v"),
         col("rank").cast("long").as("rank_vu"))
     fwd.join(rev, Seq("u", "v"))
@@ -690,17 +679,6 @@ object Similarity {
     inlineRefinedBlockPairs(blocks, threshold, idCol)
   }
 
-  /** IVF-style ANN: corpus is assigned to the nearest of `nCentroids`
-    * deterministic seed centroids (hash-selected corpus vectors);
-    * queries probe their `nProbe` closest centroids. Classic
-    * inverted-file layout: the corpus is partitioned by centroid id,
-    * so a query touches ~nProbe/nCentroids of the data.
-    *
-    * Centroid selection is `orderBy(...).limit(n)` — a global top-n
-    * via per-partition partial limits — and corpus assignment is a
-    * fold over the broadcast centroid array inside a projection, so
-    * no step ever moves the corpus into a single partition (the old
-    * unpartitioned-Window form did exactly that). */
   /** One-row frame holding the broadcastable centroid array `cents`
     * for a prepared corpus: `nCentroids` hash-selected seed vectors,
     * numbered by their (hash, id) sort position.
@@ -789,6 +767,17 @@ object Similarity {
     TopK.perGroup(scored, "query_id", "cand_id", "sim_raw", k)
   }
 
+  /** IVF-style ANN: corpus is assigned to the nearest of `nCentroids`
+    * deterministic seed centroids (hash-selected corpus vectors);
+    * queries probe their `nProbe` closest centroids. Classic
+    * inverted-file layout: the corpus is partitioned by centroid id,
+    * so a query touches ~nProbe/nCentroids of the data.
+    *
+    * Centroid selection is `orderBy(...).limit(n)` — a global top-n
+    * via per-partition partial limits — and corpus assignment is a
+    * fold over the broadcast centroid array inside a projection, so
+    * no step ever moves the corpus into a single partition (the old
+    * unpartitioned-Window form did exactly that). */
   def ivfAnn(corpus: DataFrame, queries: DataFrame, k: Int,
              nCentroids: Int, nProbe: Int,
              idCol: String = "vec_id"): DataFrame = {
@@ -844,8 +833,8 @@ object Similarity {
     * parquet table that simply gains a partition); only the delta
     * pays assignment, as a stateless broadcast-fold projection
     * against the frozen model, which also makes this deployable on
-    * an unbounded vector STREAM (the [[graft.streaming.EventStreams]]
-    * fit-once/score-forever convention). Equivalent by construction
+    * an unbounded vector STREAM (fit once in batch, score every
+    * arriving row unchanged). Equivalent by construction
     * to re-indexing standing ∪ delta under the same frozen model
     * (spec-pinned), because assignment is deterministic per row.
     * The PQ twin needs no new operator: `Quantization.encodePq`

@@ -38,14 +38,6 @@ object Sketches {
     GraftFunctions.cms_buckets(termCol, depth, width)
   }
 
-  /** The depth cells one term touches, as an array of (d, bucket)
-    * structs — shared by the batch sketch below and the streaming
-    * windowed sketch (`EventStreams.cmsRegistersWindowed`), so their
-    * cell states merge/compare exactly. */
-  def cmsCells(termCol: Column, depth: Int, width: Int): Column =
-    transform(cmsBucketArray(termCol, depth, width),
-      (b, i) => struct(i.as("d"), b.as("bucket")))
-
   /** Build a depth x width count-min sketch over one term per input
     * row: returns `(d, bucket, cnt)` rows — at most depth*width of
     * them. One narrow generate + one bounded-state aggregate. */
@@ -313,27 +305,25 @@ object Sketches {
   }
 
   /** Bin id for the scaled histogram — shared by the batch sketch
-    * above and the streaming windowed histogram
-    * (`EventStreams.histogramBinsWindowed`), so their states merge
-    * and finalize identically. */
+    * above and any caller that bins upstream of
+    * [[histogramPercentiles]], so their bins finalize identically. */
   def histogramBin(valueCol: Column, binsPerUnit: Int): Column = {
     require(binsPerUnit > 0 && (binsPerUnit & (binsPerUnit - 1)) == 0,
       "binsPerUnit must be a power of two so the bin scaling stays IEEE-exact")
     floor(valueCol * lit(binsPerUnit)).cast("long")
   }
 
+  /** Bins one ungrouped histogram may hold on the driver. */
+  private val maxSingleBins = 1 << 20
+
   /** Finalize `(groupCols..., bin, cnt)` histogram rows into
-    * percentile estimates — the fold both the batch sketch and a
-    * streaming sink's closed windows run (the HLL
+    * percentile estimates — the fold the batch sketch runs (the HLL
     * registers/finalize split applied to percentiles). Histograms
     * for the same group merge beforehand by summing `cnt` — which
     * the cumulative window does implicitly, so duplicate bin rows
     * (e.g. one per micro-batch) are fine as long as each count is
     * disjoint. With no group column the histogram's running counts are
     * a [[Stats.census]] on the driver (at most 2²⁰ bins). */
-  /** Bins one ungrouped histogram may hold on the driver. */
-  private val maxSingleBins = 1 << 20
-
   def histogramPercentiles(hist: DataFrame, groupCols: Seq[String],
                            percentiles: Seq[Int], binsPerUnit: Int): DataFrame = {
     require(binsPerUnit > 0 && (binsPerUnit & (binsPerUnit - 1)) == 0,
@@ -388,8 +378,8 @@ object Sketches {
 
   /** Probe every row's key against a fitted filter: `(idCol, n_hit,
     * maybe_in_set)` as a pure stateless codegen projection — no
-    * join, no shuffle, streaming-deployable ([[graft.streaming
-    * .EventStreams]]). `maybe_in_set = false` is exact absence. */
+    * join, no shuffle, so it runs unchanged on a streaming frame.
+    * `maybe_in_set = false` is exact absence. */
   def bloomScored(docs: DataFrame, model: BloomModel,
                   idCol: String = "doc_id", keyCol: String = "text"): DataFrame =
     docs.select(col(idCol),

@@ -201,10 +201,9 @@ object Stats {
     * [[chiSquareDrift]]: the same cell completion and fixed-shape
     * term arithmetic, but expected shares come from the broadcast
     * model instead of the frame's own pooled margin, so the input
-    * can be a batch histogram OR the closed windows of
-    * [[graft.streaming.EventStreams.histogramBinsWindowed]] (drift
-    * monitoring of a live stream against last week's shape; parity
-    * is spec-pinned). Duplicate `(group, bin)` rows merge first —
+    * can be any `(group, bin, cnt)` histogram binned by
+    * [[Sketches.histogramBin]] (drift monitoring of new data against
+    * last week's shape). Duplicate `(group, bin)` rows merge first —
     * per-micro-batch re-emission is a documented-legal histogram
     * shape (see [[Sketches.histogramPercentiles]]) and split cells
     * would corrupt the squared terms. Observed bins ABSENT from the

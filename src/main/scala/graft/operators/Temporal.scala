@@ -532,24 +532,6 @@ object Temporal {
         coalesce(col("__n"), lit(0L)).as("n_obs"))
   }
 
-  /** EXACT half-life-decayed popularity — the recency-weighted count
-    * behind trending detection and crawl re-visit priority, made
-    * hash-gateable by doing the decay in POWERS OF TWO at bucket
-    * granularity: an event in a bucket `age` buckets before the
-    * corpus's newest bucket weighs `2^(maxAge − age)` (so one bucket
-    * of aging exactly halves the weight, the half-life = bucketNs
-    * contract), buckets older than `maxAge` contribute zero (the
-    * cut tail is < 2^-maxAge of a fresh event anyway). Every weight
-    * is an integer shift of an exact count — no `exp()`, no float
-    * fold — so scores compare bit-for-bit cross-engine; consumers
-    * wanting the conventional scale divide by `2^maxAge` once.
-    *
-    * Scale shape: ONE map-side-combinable (key, bucket) census, a
-    * one-row global max-bucket broadcast, and a keys-sized weighted
-    * re-aggregate — nothing corpus-sized after the first shuffle.
-    * Overflow ledger: counts·2^maxAge·buckets must stay < 2^63 —
-    * the default maxAge 32 leaves 2^31 headroom over per-bucket
-    * counts, fail-fast guarded. */
   /** One-sided CUSUM change-point detection per key — the classic
     * sequential drift monitor ("did this source's quality metric
     * shift up?") made DISTRIBUTED and exact through the prefix-sum
@@ -580,6 +562,24 @@ object Temporal {
         (col("cusum") > threshold).as("alarm"))
   }
 
+  /** EXACT half-life-decayed popularity — the recency-weighted count
+    * behind trending detection and crawl re-visit priority, made
+    * hash-gateable by doing the decay in POWERS OF TWO at bucket
+    * granularity: an event in a bucket `age` buckets before the
+    * corpus's newest bucket weighs `2^(maxAge − age)` (so one bucket
+    * of aging exactly halves the weight, the half-life = bucketNs
+    * contract), buckets older than `maxAge` contribute zero (the
+    * cut tail is < 2^-maxAge of a fresh event anyway). Every weight
+    * is an integer shift of an exact count — no `exp()`, no float
+    * fold — so scores compare bit-for-bit cross-engine; consumers
+    * wanting the conventional scale divide by `2^maxAge` once.
+    *
+    * Scale shape: ONE map-side-combinable (key, bucket) census, a
+    * one-row global max-bucket broadcast, and a keys-sized weighted
+    * re-aggregate — nothing corpus-sized after the first shuffle.
+    * Overflow ledger: counts·2^maxAge·buckets must stay < 2^63 —
+    * the default maxAge 32 leaves 2^31 headroom over per-bucket
+    * counts, fail-fast guarded. */
   def decayedCounts(events: DataFrame, keyCols: Seq[String], tsCol: String,
                     bucketNs: Long, maxAge: Int = 32): DataFrame = {
     require(bucketNs > 0, "bucketNs must be positive")
@@ -676,8 +676,8 @@ object Temporal {
     scoreSeasonal(buckets, seasonalProfile(buckets, period), period, thresholdE1)
   }
 
-  /** Bucketed count series `(bucket, n)` — the batch twin of
-    * [[graft.streaming.EventStreams.bucketCountsWindowed]]. */
+  /** Bucketed count series `(bucket, n)`: `ts div bucketNs`
+    * buckets with their event counts. */
   def bucketCounts(events: DataFrame, tsCol: String, bucketNs: Long): DataFrame = {
     require(bucketNs > 0, "bucketNs must be positive")
     events
@@ -697,8 +697,8 @@ object Temporal {
   }
 
   /** The SCORE half: bucket counts against a (possibly
-    * independently fit) slot profile — shared verbatim by the batch
-    * report and the streaming deployment, so parity is definitional.
+    * independently fit) slot profile — [[seasonalBaseline]]'s report
+    * and any other `(bucket, n)` series score through it.
     * Buckets whose slot is absent from the profile drop (nothing to
     * compare against — a fit period mismatch, surfaced by row
     * count, not a silent 0 residual). */

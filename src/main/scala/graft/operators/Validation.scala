@@ -36,10 +36,7 @@ object Validation {
                                 dim: DataFrame, dimCol: String) extends Check
 
   /** The scan checks' sufficient counts as aggregate columns — the
-    * compiled kernel [[report]] and the streaming twin
-    * ([[graft.streaming.EventStreams.validationWindowed]]) share, so
-    * a closed stream window's report is definitionally the batch
-    * report of the same rows. */
+    * compiled kernel of [[report]]. */
   def scanAggs(checks: Seq[Check]): Seq[Column] = {
     val perCheck = checks.collect {
       case Complete(n, c, _) => Seq(count(col(c)).as(s"__c_$n"))

@@ -446,7 +446,7 @@ object PipelineQueries {
       val model = graft.operators.Dedup.fitCorpusTriage(corpus)
       val arriving = graft.streaming.StreamLane.documents(s, d)
         .filter(pmod(col("doc_id"), lit(17)) === 0)
-      val routed = graft.streaming.EventStreams.triageScored(
+      val routed = graft.operators.Dedup.corpusTriageScored(
         arriving, model, threshold = 0.9, containThreshold = 0.8)
       // Stateless append lane: no watermark state, so the trailing
       // no-data batch would do nothing — skip it (q187's rule).

@@ -39,10 +39,6 @@ object TextQueries {
       fp AS (SELECT f.doc_id, CAST(f.pos AS BIGINT) AS pos, h.hash AS fp_hash
              FROM f JOIN h ON h.doc_id = f.doc_id AND h.pos = f.pos)"""
 
-  /** Unrolled IPF oracle (q215): `rounds` alternating row/col raking
-    * passes over the (source, lang) census as chained CTEs — DuckDB
-    * has recursive CTEs but unrolling keeps every round's integer
-    * truncation textually identical to the Spark plan's. */
   /** BLEU-components oracle (q231): per n = 1..4, candidate and
     * reference n-gram censuses, clipped-match sums (Σ min of the two
     * counts — the multiset intersection), then totals, the
@@ -127,6 +123,10 @@ object TextQueries {
     s"$head$layers $unions ORDER BY round, source"
   }
 
+  /** Unrolled IPF oracle (q215): `rounds` alternating row/col raking
+    * passes over the (source, lang) census as chained CTEs — DuckDB
+    * has recursive CTEs but unrolling keeps every round's integer
+    * truncation textually identical to the Spark plan's. */
   private def ipfOracleSql(rounds: Int): String = {
     val head = """
       WITH c0 AS (SELECT lang AS r, source AS c,

@@ -1183,7 +1183,7 @@ object VectorQueries {
       val model = Quantization.fitPq(emb, m = 8, ksub = 8, iters = 1)
       Quantization.adcRerankTopK(emb,
           emb.filter(pmod(col("vec_id"), lit(97)) === 0),
-          model = model, kShort = 25, k = 5, materialize = false)
+          model = model, kShort = 25, k = 5)
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("query_id", "rank")
     },
@@ -1633,11 +1633,13 @@ object VectorQueries {
       WHERE a.query_id < a.neighbor_id
       ORDER BY u, v""")) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      // materializeInput: the n² brute-force scorer would otherwise
-      // run once per self-join side (~2× measured here at sf0.1).
+      // Eager local checkpoint: the n² brute-force scorer would
+      // otherwise run once per self-join side (~2× measured here at
+      // sf0.1), and a lazy one would let the two sides' shuffle
+      // stages race to compute it.
       graft.operators.Similarity.mutualKnn(
-          graft.operators.Similarity.bruteForceTopK(emb, emb, k = 5),
-          materializeInput = true)
+          graft.operators.Similarity.bruteForceTopK(emb, emb, k = 5)
+            .localCheckpoint(true))
         .orderBy("u", "v")
     },
 

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 /** Structured Streaming surface for the engine.
   *
@@ -16,28 +15,15 @@ import org.apache.spark.sql.types._
   * watermarked tumbling-window aggregation and stateful
   * sessionization. Both run identically under `Trigger.AvailableNow`
   * for batch backfill — one code path for live and catch-up.
+  *
+  * This object holds only the stateful shapes a registered lane runs
+  * (windowed counts, sessions, HLL registers, the stream-stream join)
+  * and the reference's parquet sink. A stateless operator (a batch-fit
+  * model scored per row, a generator) needs no streaming wrapper: it
+  * runs unchanged on a streaming DataFrame, as q234 runs
+  * [[graft.operators.Dedup.corpusTriageScored]].
   */
 object EventStreams {
-
-  /** The driver's events schema, as a file-arrival stream. `ts` is
-    * epoch-nano (see GraftSession nanosAsLong note) in parquet form;
-    * JSON landing dirs carry it the same way. */
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", LongType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  /** File-arrival source over a JSON landing directory
-    * (`maxFilesPerTrigger` bounds per-batch work so a backlogged
-    * directory cannot produce an unbounded micro-batch). */
-  def readEventsJson(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 64): DataFrame =
-    spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dir)
 
   /** Epoch-nano BIGINT → timestamp column. `div`, not `/`: Column./
     * on longs is DOUBLE division, and realistic epoch-nanos
@@ -87,133 +73,6 @@ object EventStreams {
       .select(
         col("window.start").as("window_start"),
         col(attrCol), col("n"), col("sum_value"))
-
-  /** Streaming exact dedup at ingest — the streaming twin of
-    * [[graft.operators.Dedup.exactByFingerprint]]: rows whose
-    * dedup-key column repeats within the watermark horizon are
-    * dropped, keeping only the first arrival. State holds one entry
-    * per distinct key *inside the watermark window* and is evicted
-    * as event time advances — bounded, which is what makes exact
-    * dedup feasible on an unbounded stream (a batch groupBy can't
-    * run on infinite input; an unwatermarked dropDuplicates grows
-    * state forever). Callers pick the key: a content fingerprint
-    * (`TextFunctions.canonicalFingerprint`) for document streams,
-    * `event_id` for event streams. */
-  def dedupWithinWatermark(rows: DataFrame, keyCol: String,
-                           eventTimeCol: String, watermark: String): DataFrame =
-    rows
-      .withWatermark(eventTimeCol, watermark)
-      .dropDuplicatesWithinWatermark(keyCol)
-
-  /** Streaming MinHash-LSH NEAR-dup suppression at ingest — the
-    * streaming twin of [[graft.operators.Dedup.minhashNearDupPairs]]'
-    * candidate channel. Each document explodes into `bands` LSH band
-    * keys; a band-keyed stateful operator keeps only the FIRST
-    * arrival of each band key inside the watermark horizon, and a
-    * document is emitted iff it was the first arrival on ALL of its
-    * bands — any band collision with an earlier document (same batch
-    * or earlier ones within the horizon) suppresses it.
-    *
-    * **First arrival is deterministic**: within a micro-batch the
-    * lowest `idCol` value carrying a band key wins it (so "earlier"
-    * means earlier batch, then lower id inside a batch). Feeding the
-    * raw exploded rows straight into
-    * `dropDuplicatesWithinWatermark("__band")` would pick per-band
-    * winners in state-partition arrival order, which is independent
-    * per band — two colliding docs could split the wins so NEITHER
-    * reaches the all-bands bar and a dedup operator deletes every
-    * copy of the content, nondeterministically. So intra-batch
-    * collisions are resolved FIRST, statelessly: a repartition on the
-    * band key + a per-partition min-id fold leaves at most one
-    * candidate row per band key per micro-batch, and only then does
-    * the watermark-bounded dedup arbitrate against earlier batches.
-    * With min-id winners the lowest-id doc of any collision component
-    * wins all its bands, so every component keeps exactly its min-id
-    * survivor, every run, on any partitioning. (One watermark-contract
-    * edge: a row already behind the watermark reaches the fold —
-    * late filtering happens at the stateful dedup — so a late
-    * duplicate can claim a band and then be discarded, suppressing a
-    * fresh collider; late data influencing results is the documented
-    * trade of any watermarked operator.)
-    *
-    * Band keys register in state for suppressed docs too (the group
-    * saw the key) — a later doc colliding only with a suppressed one
-    * is still suppressed, matching the batch operator's transitive
-    * candidate channel.
-    *
-    * Two deliberate deviations from the batch operator, both the
-    * standard ingest trade:
-    *  - **No exact verification.** A band collision suppresses
-    *    directly; precision/recall is tuned by the banding S-curve
-    *    ((1/bands)^(1/rowsPerBand) midpoint) rather than a verify
-    *    join — at-ingest suppression cannot afford to re-read the
-    *    earlier document (its text is gone; only band-key state
-    *    remains). Corpora needing exactness run the batch join
-    *    downstream on what ingest admitted.
-    *  - **State is band keys only** (8 bytes × bands per admitted
-    *    doc within the horizon), evicted by the watermark — bounded,
-    *    like [[dedupWithinWatermark]], which is what makes the
-    *    unbounded-input shape feasible.
-    *
-    * Emission is watermark-delayed (the all-bands-won count is a
-    * streaming aggregate keyed on the watermarked event time), so
-    * the output appends once the watermark passes a document's event
-    * time — the chained dedup→aggregate pair is the supported
-    * multiple-stateful-operator shape (the min-id fold itself is
-    * stateless, so it adds no stateful operator to the chain). */
-  def lshNearDupWithinWatermark(rows: DataFrame, textCol: String, idCol: String,
-                                eventTimeCol: String, watermark: String,
-                                bands: Int = 4, rowsPerBand: Int = 4): DataFrame = {
-    import graft.functions.{GraftFunctions, TextFunctions}
-    import org.apache.spark.sql.{Encoders, Row}
-    val bandKeys = (0 until bands).map { b =>
-      xxhash64(lit(b), slice(col("__sig"), b * rowsPerBand + 1, rowsPerBand))
-    }
-    val banded = rows
-      .withColumn("__sig",
-        GraftFunctions.minhash_sig(TextFunctions.tokens(col(textCol)), bands * rowsPerBand))
-      .withColumn("__band", explode(array(bandKeys: _*)))
-      .drop("__sig")
-    // One row per (band, doc): band key, event time, full doc payload.
-    val packed = banded.select(
-      col("__band"), col(eventTimeCol).as("__t"),
-      struct(rows.columns.map(col): _*).as("__doc"))
-    val rowEnc = Encoders.row(packed.schema)
-    val idIdx = rows.schema.fieldIndex(idCol)
-    val idNumeric = rows.schema(idCol).dataType
-      .isInstanceOf[org.apache.spark.sql.types.NumericType]
-    // Stateless intra-batch resolution: co-locate each band key's
-    // rows, keep only the min-id row per key. Memory per task is one
-    // Row per distinct band key in the partition — micro-batch-
-    // bounded, the same per-trigger bound as sessionize below.
-    val resolved = packed
-      .repartition(col("__band"))
-      .mapPartitions { it =>
-        val best = new java.util.HashMap[Long, Row]()
-        it.foreach { r =>
-          val k = r.getLong(0)
-          val prev = best.get(k)
-          val smaller = prev != null && {
-            if (idNumeric)
-              r.getStruct(2).getAs[Number](idIdx).doubleValue() <
-                prev.getStruct(2).getAs[Number](idIdx).doubleValue()
-            else
-              String.valueOf(r.getStruct(2).get(idIdx)) <
-                String.valueOf(prev.getStruct(2).get(idIdx))
-          }
-          if (prev == null || smaller) best.put(k, r)
-        }
-        import scala.jdk.CollectionConverters._
-        best.values.iterator.asScala
-      }(rowEnc)
-    resolved
-      .withWatermark("__t", watermark)
-      .dropDuplicatesWithinWatermark("__band")
-      .groupBy(col("__t"), col("__doc"))
-      .agg(count(lit(1)).as("__n_first"))
-      .filter(col("__n_first") === bands)
-      .select(col("__doc.*"))
-  }
 
   /** One closed user session. */
   case class Session(userId: Long, startTs: Long, endTs: Long, nEvents: Int, totalValue: Double)
@@ -349,331 +208,12 @@ object EventStreams {
         col("event_type"), col("reg"), col("maxrho"))
   }
 
-  /** Streaming count-min sketch: per (tumbling window) term-count
-    * cells, maintained as a watermarked streaming count-aggregation.
-    * Same state story as [[hllRegistersWindowed]]: at most
-    * depth x width cells per open window no matter how many
-    * distinct terms flow through — a streaming per-term count holds
-    * every key — and the emitted rows are exactly the batch
-    * sketch's (d, bucket, cnt) shape (shared
-    * [[graft.operators.Sketches.cmsCells]]), so a closed window's
-    * cells match batch [[Sketches.countMinSketch]] over the same
-    * rows cell-for-cell and probe through the same `cmsEstimate`. */
-  def cmsRegistersWindowed(events: DataFrame, termCol: String = "event_type",
-                           depth: Int = 4, width: Int = 512,
-                           watermark: String = "2 hours"): DataFrame = {
-    import graft.operators.Sketches
-    events
-      .withColumn("event_time", tsCol)
-      .withWatermark("event_time", watermark)
-      .select(col("event_time"),
-        explode(Sketches.cmsCells(col(termCol), depth, width)).as("db"))
-      .groupBy(window(col("event_time"), "1 hour"),
-        col("db.d").as("d"), col("db.bucket").as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("window_start"),
-        col("d"), col("bucket"), col("cnt"))
-  }
-
-  /** Streaming scaled-histogram bins: per tumbling window and event
-    * type, the (bin, cnt) rows of the percentile sketch
-    * ([[graft.operators.Sketches.binnedPercentiles]]) as a
-    * watermarked streaming count-aggregation. State per open window
-    * is bounded by the value range × binsPerUnit — never by event
-    * count — the same bounded-state story as the HLL/CMS streams.
-    * Emitted rows finalize through the SAME
-    * [[graft.operators.Sketches.histogramPercentiles]] fold the
-    * batch sketch uses (run it as a cheap batch pass over the
-    * sink), so a closed window's estimates are bit-identical to
-    * batch `binnedPercentiles` over the same rows. */
-  def histogramBinsWindowed(events: DataFrame, binsPerUnit: Int = 4,
-                            watermark: String = "2 hours"): DataFrame = {
-    import graft.operators.Sketches
-    events
-      .withColumn("event_time", tsCol)
-      .withWatermark("event_time", watermark)
-      // NaN drops with null, matching the batch sketch's filter —
-      // see Sketches.binnedPercentiles.
-      .filter(col("value").isNotNull && !isnan(col("value")))
-      .groupBy(window(col("event_time"), "1 hour"),
-        col("event_type"),
-        Sketches.histogramBin(col("value"), binsPerUnit).as("bin"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("window_start"),
-        col("event_type"), col("bin"), col("cnt"))
-  }
-
-  /** Streaming hourly bucket counts — the windowed census the
-    * seasonal-anomaly deployment scores: closed (bucket, n) rows
-    * stream out under the watermark, and
-    * [[graft.operators.Temporal.scoreSeasonal]] grades them against
-    * a batch-fit [[graft.operators.Temporal.seasonalProfile]]
-    * (last month's hour-of-day shape) — live "tonight is not like
-    * other nights" paging with one counter of state per open
-    * window. A closed bucket's row is definitionally the batch
-    * [[graft.operators.Temporal.bucketCounts]] row of the same
-    * events (spec-pinned parity through the shared scoring kernel). */
-  def bucketCountsWindowed(events: DataFrame,
-                           watermark: String = "2 hours"): DataFrame =
-    events
-      .withColumn("event_time", tsCol)
-      .withWatermark("event_time", watermark)
-      .groupBy(window(col("event_time"), "1 hour"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("__ws"), col("n"))
-      .select(expr("unix_timestamp(__ws) DIV 3600").as("bucket"), col("n"))
-
-  /** Streaming deterministic bottom-k (KMV) sample: per tumbling
-    * window and event type, the k events with the smallest salted
-    * 48-bit md5 hash of their id — the streaming twin of
-    * [[graft.operators.Curation.bottomKSample]], maintained as a
-    * watermarked streaming aggregation over the SAME bounded
-    * [[graft.operators.TopK]] aggregator, so state per open window
-    * is ≤k candidates per (window, type) no matter how many events
-    * flow through. Emitted rows match batch `bottomKSample` over
-    * the same rows column-for-column (the parity gate), because
-    * hash, ordering, and tiebreak are shared. */
-  def bottomKSampleWindowed(events: DataFrame, k: Int, salt: String = "boka",
-                            watermark: String = "2 hours"): DataFrame = {
-    import graft.operators.TopK
-    val hk = conv(substring(
-        md5(concat(lit(s"$salt:"), col("event_id").cast("string"))), 1, 12), 16, 10)
-      .cast("long")
-    val top = udaf(TopK.aggregator(k),
-      org.apache.spark.sql.Encoders.product[TopK.Scored])
-    events
-      .withColumn("event_time", tsCol)
-      .withWatermark("event_time", watermark)
-      .select(col("event_time"), col("event_type"), col("event_id"),
-        (-hk.cast("double")).as("__nh"))
-      .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
-      .agg(top(col("event_id"), col("__nh")).as("top"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        posexplode(col("top")))
-      .select(col("window_start"), col("event_type"),
-        col("col.id").as("event_id"),
-        (col("pos") + 1).cast("long").as("rank"),
-        (-col("col.sim")).cast("long").as("sample_hash"))
-  }
-
-  /** Streaming data-quality monitoring: the q141 validation report
-    * per tumbling event-time window — completeness, range, and
-    * set-membership checks over the ingest stream, one report row
-    * per (closed window, check). The production deployment of
-    * [[graft.operators.Validation]]: the batch report gates a
-    * snapshot, this one PAGES when a window's metric degrades.
-    * Shares the batch op's compiled aggregate kernel
-    * ([[graft.operators.Validation.scanAggs]]/`scanRows`), so a
-    * closed window's row is DEFINITIONALLY the batch report of that
-    * window's events (spec-pinned). State per open window is one
-    * counter per check — bounded by the check list, never by event
-    * volume.
-    *
-    * Uniqueness and referential checks are deliberately absent:
-    * a distinct count over an unbounded stream is the HLL window's
-    * job, and FK orphan detection is the stream-static anti-join's —
-    * both already in this tier; fail-fast if asked. */
-  def validationWindowed(events: DataFrame,
-                         checks: Seq[graft.operators.Validation.Check],
-                         watermark: String = "2 hours"): DataFrame = {
-    import graft.operators.Validation
-    require(checks.nonEmpty, "validation needs at least one check")
-    require(checks.forall {
-      case _: Validation.Complete | _: Validation.InRange | _: Validation.InSet => true
-      case _ => false
-    }, "streaming validation supports Complete/InRange/InSet — use the HLL window " +
-       "for distinctness and a stream-static anti-join for referential integrity")
-    val aggs = Validation.scanAggs(checks)
-    events
-      .withColumn("event_time", tsCol)
-      .withWatermark("event_time", watermark)
-      .groupBy(window(col("event_time"), "1 hour"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("window.start").as("window_start"),
-        explode(array(Validation.scanRows(checks): _*)).as("r"))
-      .select(col("window_start"), col("r.check"), col("r.column"),
-        col("r.metric"), col("r.violations"), col("r.passed"))
-  }
-
-  /** Streaming quality scoring with a batch-fit char-bigram model —
-    * the fit-once/score-forever deployment every ingestion pipeline
-    * runs: [[graft.operators.CharLm.collectModel]] fits on the
-    * existing corpus (batch), and the incoming document stream is
-    * scored by a pure codegen'd projection that closes over the
-    * model. ZERO streaming state — no watermark, no aggregation, no
-    * stream-static join — so the op appends at ingest rate
-    * regardless of how long the stream runs; re-fit is redeploying
-    * with a new model value. Batch parity is exact on the fit corpus
-    * (spec-pinned); unseen bigrams score familiarity 0 and count
-    * rare, which is precisely the "this text looks nothing like the
-    * corpus" signal the gate exists to raise. */
-  /** Streaming DSIR importance weighting with batch-fit censuses —
-    * the data-SELECTION member of the fit-once/score-forever family:
-    * [[graft.operators.Curation.collectDsirModel]] fits the
-    * target/raw bucket censuses on the standing corpus (batch), and
-    * each arriving document is scored by a stateless codegen'd
-    * projection closing over the dense census arrays — no
-    * stream-static join, no state store, appends at ingest rate
-    * forever. Batch parity on the fit corpus is exact and
-    * spec-pinned; n-grams unseen at fit time smooth to the +1 floor
-    * exactly as the batch plan does. */
-  def dsirScored(docs: DataFrame, model: graft.functions.DsirModel,
-                 idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    graft.operators.Curation.dsirScoredWithModel(docs, model, idCol, textCol)
-
-  def familiarityScored(docs: DataFrame, model: graft.functions.CharLmModel,
-                        idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    graft.operators.CharLm.scoreWithModel(docs, model, idCol, textCol)
-
-  /** Streaming quality CLASSIFICATION with a batch-fit word-n-gram
-    * census — the word-tier sibling of [[familiarityScored]] and the
-    * fastText-gate deployment every curation pipeline runs at
-    * ingest: [[graft.operators.QualityClassifier.collectModel]] fits
-    * seed-vs-rest on the standing corpus (batch), and each arriving
-    * document is scored + classified by a stateless codegen'd
-    * projection closing over the census — no stream-static join, no
-    * state store, appends at ingest rate forever. Batch parity on
-    * the fit corpus is exact and spec-pinned. */
-  def qualityClassified(docs: DataFrame, model: graft.functions.WordLmModel,
-                        idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    graft.operators.QualityClassifier.scoreWithModel(docs, model, idCol, textCol)
-
-  /** Streaming blocklist matching (r16) — the Aho–Corasick kernel
-    * ([[graft.operators.Curation.blocklistHits]]) deployed at ingest:
-    * the automaton is built once from the standing blocklist and
-    * rides the plan as a closure (the fit-once/score-forever shape of
-    * [[familiarityScored]]/[[bloomScored]]); every arriving document
-    * is matched against ALL patterns in one stateless per-row pass —
-    * no stream-static join, no state store, appends at ingest rate
-    * regardless of blocklist size. Batch parity is exact by
-    * construction (same operator; spec-pinned). */
-  def blocklistScored(docs: DataFrame, patterns: Seq[String],
-                      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    graft.operators.Curation.blocklistHits(docs, patterns, idCol, textCol)
-
-  /** Streaming delta-ingest triage (r17) — the streaming twin of the
-    * q81 batch lane and the production shape of LLM-corpus
-    * ingestion: the standing corpus's dedup structures (fingerprint
-    * map + inverted token index) are batch-fit ONCE
-    * ([[graft.operators.Dedup.fitCorpusTriage]]) and every arriving
-    * document is routed exact/near/contained/accepted in one
-    * stateless projection ([[graft.operators.Dedup
-    * .corpusTriageScored]]) — no stream-static join, no state store,
-    * no watermark state; the plan appends at ingest rate with
-    * per-row cost bounded by the probed posting mass. Batch parity
-    * is exact by construction (same operator; spec-pinned), and the
-    * result is DuckDB-replayable, which is what lets the q234 lane
-    * hash-gate a streaming dedup end to end. */
-  def triageScored(docs: DataFrame, model: graft.operators.Dedup.CorpusTriageModel,
-                   threshold: Double = 0.9, containThreshold: Double = 0.8,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    graft.operators.Dedup.corpusTriageScored(docs, model, threshold,
-      containThreshold, idCol, textCol)
-
-  /** Streaming Bloom membership with a batch-fit filter — the
-    * sketch-family deployment of the same fit-once/score-forever
-    * shape: [[graft.operators.Sketches.fitBloom]] fits on the
-    * standing key set (batch: eval-suite keys, yesterday's
-    * fingerprints), and each arriving row is probed by a stateless
-    * codegen'd projection closing over the bitset — no stream-static
-    * join, no state store, appends at ingest rate forever.
-    * `maybe_in_set = false` is a PROOF of absence, so a streaming
-    * decontamination gate can drop clean rows immediately and route
-    * only the maybe sliver to an exact check. Batch parity is exact
-    * by construction (same expression; spec-pinned). */
-  def bloomScored(docs: DataFrame, model: graft.functions.BloomModel,
-                  idCol: String = "doc_id", keyCol: String = "text"): DataFrame =
-    graft.operators.Sketches.bloomScored(docs, model, idCol, keyCol)
-
-  /** Streaming BM25 relevance scoring with batch-fit corpus stats —
-    * the retrieval-tier deployment of the fit-once/score-forever
-    * shape: [[graft.operators.TextRank.collectBm25Model]] fits
-    * (N, avgdl, per-term df) on the standing index (batch), and
-    * every arriving document scores against the query terms in one
-    * stateless codegen projection with literals folded in —
-    * arithmetic identical to the batch q166 ranker term for term,
-    * so fit-corpus parity is exact (spec-pinned). Route scores to a
-    * windowed TopK downstream when per-window ranking is needed. */
-  def bm25Scored(docs: DataFrame, model: graft.operators.TextRank.Bm25Model,
-                 terms: Seq[String], idCol: String = "doc_id",
-                 textCol: String = "text"): DataFrame =
-    graft.operators.TextRank.bm25ScoreWithModel(docs, model, terms, idCol, textCol)
-
-  /** Streaming BPE segmentation with batch-fit merges — the
-    * tokenizer-tier deployment of the fit-once/score-forever shape:
-    * [[graft.operators.Bpe.learnMerges]] trains on the standing
-    * corpus (batch), and each arriving document segments via the
-    * ranked merge list folded into one stateless projection
-    * ([[graft.operators.Bpe.segmentStatsWithMerges]]) — no
-    * dictionary join, no state store, appends at ingest rate
-    * forever, and unseen words segment correctly because BPE
-    * application is defined on any word. Fit-corpus parity with the
-    * batch dict-join path is exact (spec-pinned). */
-  def bpeSegmented(docs: DataFrame, merges: Seq[(String, String)],
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    graft.operators.Bpe.segmentStatsWithMerges(docs, merges, idCol, textCol)
-
-  /** Streaming content-defined chunking at ingest — the storage-side
-    * twin of the batch operator ([[graft.operators.Curation
-    * .cdcChunks]]): every arriving document splits into
-    * content-defined chunks with stable hashes in a pure stateless
-    * Generator projection (no watermark, no aggregation, no state
-    * store — appends at ingest rate forever). Chunk hashes feed the
-    * downstream dedup-storage join exactly as in batch; boundary
-    * locality means a re-crawled document's unchanged regions
-    * reproduce their chunk hashes. Batch parity is exact
-    * (spec-pinned). */
-  def cdcChunked(docs: DataFrame, k: Int = 3, divisor: Int = 64,
-                 idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    graft.operators.Curation.cdcChunks(docs, k, divisor, idCol, textCol)
-
-  /** Streaming nearest-centroid assignment with a batch-fit k-means
-    * model — the same fit-once/score-forever deployment as
-    * [[familiarityScored]], for the embedding side: [[graft.operators
-    * .Clustering.fit]] trains on the standing corpus (batch), and
-    * arriving vectors are routed to their cluster by a pure
-    * stateless projection (centroids are plan literals — no
-    * watermark, no stream-static join, no state store), so the
-    * stream appends at ingest rate forever. This is the online half
-    * of IVF routing / SemDeDup blocking / topic-quota admission:
-    * batch parity with [[graft.operators.Clustering.assignWithModel]]
-    * is exact and spec-pinned. */
-  def clusterAssigned(vectors: DataFrame, model: graft.operators.Clustering.KMeansModel,
-                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    graft.operators.Clustering.assignWithModel(vectors, model, idCol, vecCol)
-
-  /** Streaming PQ encoding with a batch-fitted
-    * [[graft.operators.Quantization.PqModel]] — the compression twin
-    * of [[clusterAssigned]]: every arriving vector becomes its m
-    * sub-codes in a stateless plan-literal argmin projection (no
-    * state store, no stream-static join), so an ingest stream can
-    * land 64-byte codes instead of 256-byte vectors into the ANN
-    * index. Batch parity is exact by construction (same projection)
-    * and spec-pinned. */
-  def pqEncoded(vectors: DataFrame, model: graft.operators.Quantization.PqModel,
-                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    graft.operators.Quantization.encodePq(vectors, model, idCol, vecCol)
-
-  /** Streaming benchmark decontamination with a batch-collected eval
-    * shingle set — the third fit-batch/score-forever deployment
-    * (quality [[familiarityScored]], routing [[clusterAssigned]],
-    * and now admission hygiene): [[graft.operators.Curation
-    * .collectEvalShingles]] fits on the eval corpus once, and every
-    * arriving document is scored by a fused shingle-hash +
-    * membership probe in a stateless codegen projection — no
-    * explode, no stream-static join, no state store. Batch parity
-    * with [[graft.operators.Curation.flagContaminated]] is exact and
-    * spec-pinned. */
-  def contaminationScored(docs: DataFrame, model: graft.functions.ShingleSetModel,
-                          idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    graft.operators.Curation.contaminationScoredWithModel(docs, model, idCol, textCol)
-
   /** Watermarked STREAM-STREAM inner join — the attribution /
     * request-response correlation shape (click within `horizon` of
     * its impression, response matched to request, ASR result matched
-    * to submitted segment), and the tier's first two-unbounded-inputs
-    * operator: every prior streaming op here is one stream against
-    * either bounded state or a broadcast model.
+    * to submitted segment), and the tier's one two-unbounded-inputs
+    * operator: every other streaming op here is one stream against
+    * bounded state.
     *
     * Both sides carry a watermark and the join predicate carries a
     * closed event-time range; together those are what let Spark
@@ -687,8 +227,7 @@ object EventStreams {
     * the same exchange the batch join runs. Inner-join results are
     * watermark-independent under AvailableNow backfill, so batch
     * parity is EXACT (spec-pinned: the same frames joined with the
-    * same predicate in batch): one more fit-batch/score-stream-style
-    * twin, here join-batch/join-stream.
+    * same predicate in batch).
     *
     * Emits every qualifying (impression, click) pair — last-touch /
     * first-touch attribution is a downstream aggregate over pairs

@@ -4,10 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-/** Shared scaffolding for the hash-gated streaming bench lanes
-  * (q187/q188/q205/q214/q226): one events file-source builder and one
-  * memory-sink drain, so every lane runs the same source discipline
-  * and the lane bodies carry only their operator.
+/** Shared scaffolding for the hash-gated streaming bench lanes:
+  * file-source builders over events (q187/q188/q205/q214/q226/q233),
+  * documents (q234/q245) and embeddings (q240), and one memory-sink
+  * drain, so every lane runs the same source discipline and the lane
+  * bodies carry only their operator.
   *
   * State stores take their partition count from the session's
   * `spark.sql.shuffle.partitions`, like every other shuffle. With

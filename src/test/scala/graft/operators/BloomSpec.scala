@@ -1,13 +1,11 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.functions.GraftFunctions
-import graft.streaming.EventStreams
+import graft.streaming.StreamParity
 
-class BloomSpec extends SparkSuite {
+class BloomSpec extends SparkSuite with StreamParity {
   import spark.implicits._
 
   private val corpus = Seq(
@@ -43,52 +41,11 @@ class BloomSpec extends SparkSuite {
     assert(pos.toSeq == pos2.toSeq)
   }
 
-  test("contamination Bloom prefilter ≡ exact scoring, including zero-hit rows") {
-    val eval = docs.filter(col("doc_id") === 5L)
-    val exact = Curation.collectEvalShingles(eval, n = 3)
-    val bloom = Curation.collectEvalBloom(eval, n = 3, numBits = 256, k = 4)
-    val viaExact = Curation.contaminationScoredWithModel(docs, exact)
-      .as[(Long, Long, Boolean)].collect().toSet
-    val viaBloom = Curation.contaminationScoredWithBloom(docs, exact, bloom)
-      .as[(Long, Long, Boolean)].collect().toSet
-    assert(viaBloom === viaExact, "Bloom prefilter changed contamination output")
-    assert(viaExact.exists(_._3), "fixture must contain a contaminated row")
-    assert(viaExact.exists(!_._3), "fixture must contain a clean row")
-  }
-
-  test("deltaIngest with the fingerprint Bloom ≡ without") {
-    val standing = docs.filter(col("doc_id") <= 3L)
-    val delta = Seq(
-      (11L, "the cat sat on the mat today"),        // exact vs corpus 1/3
-      (12L, "a completely different sentence here"), // near corpus 2
-      (13L, "entirely novel delta content row")).toDF("doc_id", "text")
-    val plain = Dedup.deltaIngest(standing, delta, threshold = 0.5)
-      .collect().map(_.toSeq).toSet
-    val bloom = Dedup.deltaFingerprintBloom(delta, numBits = 256, k = 4)
-    val fast = Dedup.deltaIngest(standing, delta, threshold = 0.5, fpBloom = Some(bloom))
-      .collect().map(_.toSeq).toSet
-    assert(fast === plain, "Bloom-prefiltered delta ingest diverged")
-  }
-
   test("streaming Bloom scoring ≡ batch on a document stream; zero streaming state") {
     val model = Sketches.fitBloom(
       docs.filter(col("doc_id") % 2 === 1).select(col("text").as("key")), "key",
       numBits = 1024, k = 5)
-    val dir = Files.createTempDirectory(Paths.get("target"), "bloom-landing")
-    corpus.zipWithIndex.foreach { case ((id, t), i) =>
-      Files.writeString(dir.resolve(f"d$i%02d.json"), s"""{"doc_id":$id,"text":"$t"}""")
-    }
-    val stream = spark.readStream.schema("doc_id LONG, text STRING").json(dir.toString)
-    val scored = EventStreams.bloomScored(stream, model)
-    val out = Files.createTempDirectory(Paths.get("target"), "bloom-out")
-    val q = EventStreams.writeParquetSink(scored, s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val streamed = spark.read.parquet(s"$out/data")
-      .as[(Long, Long, Boolean)].collect().toSet
-    val batch = Sketches.bloomScored(docs, model)
-      .as[(Long, Long, Boolean)].collect().toSet
-    assert(streamed === batch, "streaming and batch Bloom scoring diverged")
-    val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
-    assert(st.isEmpty, s"membership probe must hold no streaming state: ${st.mkString(",")}")
+    assertStreamMatchesBatch(docs, Sketches.bloomScored(_, model),
+      Sketches.bloomScored(docs, model))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{PropSampling, SparkSuite}
+import graft.streaming.StreamParity
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
@@ -8,7 +9,7 @@ import org.scalacheck.Gen
   * with an in-test sequential reference on random corpora, and the
   * distributed sharding/broadcast structure must never change the
   * answer. */
-class CurationSpec extends SparkSuite {
+class CurationSpec extends SparkSuite with StreamParity {
 
   private def corpus(vocab: IndexedSeq[String], nDocs: Int, maxLen: Int): Gen[Seq[(Long, String)]] =
     Gen.sequence[Seq[String], String](
@@ -390,25 +391,10 @@ class CurationSpec extends SparkSuite {
 
   test("streaming CDC chunking ≡ batch; zero streaming state") {
     import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (2L, "one two three"), (3L, ""))
-    val dir = Files.createTempDirectory(Paths.get("target"), "cdc-landing")
-    corpus.zipWithIndex.foreach { case ((id, t), i) =>
-      Files.writeString(dir.resolve(f"d$i%02d.json"), s"""{"doc_id":$id,"text":"$t"}""")
-    }
-    val stream = spark.readStream.schema("doc_id LONG, text STRING").json(dir.toString)
-    val chunked = graft.streaming.EventStreams.cdcChunked(stream, k = 2, divisor = 4)
-    val out = Files.createTempDirectory(Paths.get("target"), "cdc-out")
-    val q = graft.streaming.EventStreams.writeParquetSink(chunked, s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val streamed = spark.read.parquet(s"$out/data")
-      .as[(Long, Int, Long, String, String)].collect().toSet
-    val batch = Curation.cdcChunks(corpus.toDF("doc_id", "text"), k = 2, divisor = 4)
-      .as[(Long, Int, Long, String, String)].collect().toSet
-    assert(streamed === batch, "streaming and batch CDC chunking diverged")
-    val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
-    assert(st.isEmpty, s"chunking must hold no streaming state: ${st.mkString(",")}")
+    val docs = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, "one two three"), (3L, "")).toDF("doc_id", "text")
+    assertStreamMatchesBatch(docs, Curation.cdcChunks(_, k = 2, divisor = 4),
+      Curation.cdcChunks(docs, k = 2, divisor = 4))
   }
 
   test("leakageSafeSplit: duplicates never straddle splits; deterministic; ~80/10/10") {

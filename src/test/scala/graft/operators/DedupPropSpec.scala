@@ -268,7 +268,7 @@ class DedupPropSpec extends SparkSuite {
     // Empty pair list: no nodes, no rows, no NPE.
     assert(Dedup.connectedComponents(
       Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")).collect().isEmpty)
-    // A 40-node path graph — worst-case diameter for the round bound.
+    // A 40-node path graph — worst-case diameter for the round count.
     val chain = (0L until 40L).sliding(2).map(s => (s(0), s(1))).toSeq
     val chainGot = Dedup.connectedComponents(chain.toDF("doc_a", "doc_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -289,7 +289,10 @@ class DedupPropSpec extends SparkSuite {
         b <- Gen.chooseNum(0L, n.toLong)
       } yield (a, b))
     } yield es // dups AND self-pairs kept deliberately
-    for (pairs <- PropSampling.sample(pairGen, n = 5) if pairs.nonEmpty) {
+    // A 48-node path, listed high end first: the longest diameter for
+    // its size, so the declarative route runs its most rounds.
+    val path = (0L until 48L).sliding(2).map(s => (s(1), s(0))).toSeq
+    for (pairs <- PropSampling.sample(pairGen, n = 5) :+ path if pairs.nonEmpty) {
       val df = pairs.toDF("doc_a", "doc_b")
       val viaKernel = Dedup.connectedComponents(df)
         .collect().map(_.toSeq).toSet

@@ -1,12 +1,10 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
-import graft.streaming.EventStreams
+import graft.streaming.StreamParity
 
-class QualityClassifierSpec extends SparkSuite {
+class QualityClassifierSpec extends SparkSuite with StreamParity {
   import spark.implicits._
 
   // Seed class (positive) = docs 1-2; negative = docs 3-4. Vocab
@@ -96,22 +94,8 @@ class QualityClassifierSpec extends SparkSuite {
 
   test("streaming classification ≡ batch on a document stream; zero streaming state") {
     val model = QualityClassifier.collectModel(docs, isPos)
-    val dir = Files.createTempDirectory(Paths.get("target"), "qc-landing")
-    corpus.zipWithIndex.foreach { case ((id, t, _), i) =>
-      Files.writeString(dir.resolve(f"d$i%02d.json"), s"""{"doc_id":$id,"text":"$t"}""")
-    }
-    val stream = spark.readStream.schema("doc_id LONG, text STRING").json(dir.toString)
-    val scored = EventStreams.qualityClassified(stream, model)
-    val out = Files.createTempDirectory(Paths.get("target"), "qc-out")
-    val q = EventStreams.writeParquetSink(scored, s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val streamed = spark.read.parquet(s"$out/data")
-      .as[(Long, Long, Long, Long, Boolean)].collect().toSet
-    val batch = QualityClassifier.scoreWithModel(docs, model)
-      .as[(Long, Long, Long, Long, Boolean)].collect().toSet
-    assert(streamed === batch, "streaming and batch classification diverged")
+    val streamed = assertStreamMatchesBatch(docs, QualityClassifier.scoreWithModel(_, model),
+      QualityClassifier.scoreWithModel(docs, model))
     assert(streamed.size === corpus.size)
-    val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
-    assert(st.isEmpty, s"classification must hold no streaming state: ${st.mkString(",")}")
   }
 }

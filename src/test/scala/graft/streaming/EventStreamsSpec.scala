@@ -1,17 +1,32 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, explode, lit, split, unix_micros}
 import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSuite
+import graft.operators.{Bpe, CharLm, Clustering, Curation, Dedup, Quantization, TextRank}
 
 /** Streaming shapes driven with AvailableNow over a JSON landing
   * directory — the batch-backfill path that shares code with the
   * live stream. */
-class EventStreamsSpec extends SparkSuite {
+class EventStreamsSpec extends SparkSuite with StreamParity {
   import spark.implicits._
 
   private val H = 3600L * 1000000000L // one hour in nanos
+
+  /** The events schema of the landing directories below: `ts` is
+    * epoch-nanos, as in the engine's events table. */
+  private val eventSchema =
+    "event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING"
+
+  /** File-arrival source over a JSON landing directory
+    * (`maxFilesPerTrigger` bounds the files one micro-batch reads). */
+  private def readEventsJson(dir: String, maxFilesPerTrigger: Int = 64): DataFrame =
+    spark.readStream
+      .schema(eventSchema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .json(dir)
 
   private def writeLanding(lines: Seq[String]): String = {
     val dir = Files.createTempDirectory(Paths.get("target"), "landing")
@@ -33,121 +48,191 @@ class EventStreamsSpec extends SparkSuite {
   private def ev(id: Long, ts: Long, user: Long, typ: String, value: Double): String =
     s"""{"event_id":$id,"ts":$ts,"user_id":$user,"event_type":"$typ","value":$value,"props":"{}"}"""
 
-  test("stateless cluster assignment on a vector stream ≡ batch assignment; no state store") {
-    // Fit k-means in BATCH on the fixture embeddings, then route the
-    // same vectors arriving as a JSON stream — exact parity, zero
-    // streaming state.
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
-    val model = graft.operators.Clustering.fit(emb, k = 4, iters = 2)
-    val dir = Files.createTempDirectory(Paths.get("target"), "vec-landing")
-    emb.limit(64).coalesce(1).write.mode("overwrite").json(dir.resolve("in").toString)
-    val stream = spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-      .json(dir.resolve("in").toString)
-    val out = Files.createTempDirectory(Paths.get("target"), "clusout")
-    val q = EventStreams.writeParquetSink(
-      EventStreams.clusterAssigned(stream, model), s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val streamed = spark.read.parquet(s"$out/data")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
-    val ids = streamed.map(_._1)
-    val batch = graft.operators.Clustering
-      .assignWithModel(emb.filter(col("vec_id").isin(ids.toSeq: _*)), model)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
-    assert(streamed === batch, "streaming and batch cluster assignment diverged")
-    assert(streamed.size === 64)
-    val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
-    assert(st.isEmpty, s"assignment must hold no streaming state: ${st.mkString(",")}")
+  /** One row of the stateless table: the frame that lands, the
+    * operator run on its stream, the batch reference the streamed
+    * rows must equal, and the row's own asserts on the streamed rows. */
+  private case class Stateless(in: DataFrame, op: DataFrame => DataFrame,
+                               batch: DataFrame, check: Set[Seq[Any]] => Unit = _ => ())
+
+  private def embeddings: DataFrame =
+    spark.read.parquet(s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
+
+  /** Batch-fit model, stateless score: each operator runs unchanged
+    * on a file-source stream, with exact parity and no state store. */
+  private val statelessRows: Seq[(String, () => Stateless)] = Seq(
+    "stateless cluster assignment on a vector stream ≡ batch assignment; no state store" -> { () =>
+      val emb = embeddings
+      val model = Clustering.fit(emb, k = 4, iters = 2)
+      val in = emb.orderBy("vec_id").limit(64)
+      Stateless(in, Clustering.assignWithModel(_, model),
+        Clustering.assignWithModel(in, model), s => assert(s.size === 64))
+    },
+    "stateless PQ encoding on a vector stream ≡ batch encodePq; no state store" -> { () =>
+      val emb = embeddings
+      val model = Quantization.fitPq(emb, m = 8, ksub = 8, iters = 1)
+      val in = emb.orderBy("vec_id").limit(64)
+      Stateless(in, Quantization.encodePq(_, model),
+        Quantization.encodePq(in, model), s => assert(s.size === 64))
+    },
+    "stateless contamination scoring on a doc stream ≡ batch flagContaminated; no state" -> { () =>
+      // The eval shingle set is fit in batch; ids % 3 == 0 quote a
+      // benchmark passage (unique per-doc words otherwise, so clean
+      // docs share NO 3-gram). The reference is the join-based batch
+      // operator — two algorithms for the same contract.
+      val docs = (0L until 90L).map { i =>
+        val own = (1 to 6).map(j => s"u${i}w$j").mkString(" ")
+        (i, if (i % 3 == 0) s"$own the quoted benchmark passage ends" else own)
+      }.toDF("doc_id", "text")
+      val evalSet = Seq((1000L, "intro the quoted benchmark passage ends outro"))
+        .toDF("doc_id", "text")
+      val model = Curation.collectEvalShingles(evalSet, n = 3)
+      Stateless(docs, Curation.contaminationScoredWithModel(_, model),
+        Curation.flagContaminated(docs, evalSet, n = 3), { s =>
+          assert(s.size === 90)
+          assert(s.exists(_(2) == true) && s.exists(_(2) == false),
+            "fixture must exercise both contaminated and clean outcomes")
+        })
+    },
+    "stateless model scoring on a document stream ≡ batch scoring; no state store in the plan" -> { () =>
+      val docs = Seq((1L, "the cat sat"), (2L, "the cat spat"), (3L, "dog dog dog"),
+        (4L, "zq"), (5L, "the the the cat")).toDF("doc_id", "text")
+      val model = CharLm.collectModel(docs, rareFactor = 10)
+      Stateless(docs, CharLm.scoreWithModel(_, model), CharLm.scoreWithModel(docs, model),
+        s => assert(s.size === 5))
+    },
+    "streaming blocklist matching ≡ batch blocklistHits; no state store in the plan" -> { () =>
+      val docs = Seq((1L, "she sells seashells"), (2L, "clean text"),
+        (3L, "sea she sea"), (4L, "nothing here")).toDF("doc_id", "text")
+      val patterns = Seq("she", "sea", "zzz")
+      Stateless(docs, Curation.blocklistHits(_, patterns), Curation.blocklistHits(docs, patterns),
+        s => assert(s.exists(_.head == 3L) && !s.exists(_.head == 4L),
+          "fixture must exercise both hit and miss documents"))
+    },
+    "streaming DSIR scoring ≡ the batch census-join plan on the fit corpus; no state" -> { () =>
+      // Censuses fit in batch (target = the alpha-speaking half); the
+      // reference is the census-JOIN batch plan, which pins the
+      // kernel's bucket scheme and fixed-point log to the SQL spelling.
+      val docs = Seq((1L, "alpha beta gamma alpha"), (2L, "alpha beta beta"),
+        (3L, "delta epsilon zeta"), (4L, "delta delta epsilon"), (5L, "solo"))
+        .toDF("doc_id", "text")
+      val target = docs.filter(col("doc_id") <= 2L)
+      val model = Curation.collectDsirModel(docs, target, n = 2, buckets = 512)
+      Stateless(docs, Curation.dsirScoredWithModel(_, model),
+        Curation.dsirImportance(docs, target, n = 2, buckets = 512),
+        s => assert(s.size === 5))
+    },
+    "streaming BM25 scoring ≡ batch ranker arithmetic on fit corpus; stateless" -> { () =>
+      val docs = Seq(
+        (1L, "spark window dup x"), (2L, "spark spark y z"),
+        (3L, "window a b c d e f g"), (4L, "x y z"), (5L, "dup")).toDF("doc_id", "text")
+      val terms = Seq("spark", "window", "dup")
+      val model = TextRank.collectBm25Model(docs, terms)
+      Stateless(docs, TextRank.bm25ScoreWithModel(_, model, terms),
+        TextRank.bm25Search(docs, "doc_id", "text", terms, k = 10),
+        s => assert(s.size === 4, "doc 4 matches no term and must not emit"))
+    },
+    "streaming BPE segmentation ≡ batch dict-join on fit corpus; stateless; unseen words segment" -> { () =>
+      val docs = Seq((1L, "abab abab"), (2L, "abab ab"), (3L, "ba ba abab"))
+        .toDF("doc_id", "text")
+      val words = docs.select(explode(split(col("text"), " ")).as("word"))
+        .filter(col("word") =!= "")
+        .groupBy("word").agg(count(lit(1)).as("freq"))
+      val (mergeDf, dict) = Bpe.learnMerges(words, "word", "freq", 4)
+      val merges = mergeDf.orderBy("merge_rank").select("lhs", "rhs")
+        .as[(String, String)].collect().toSeq
+      // Applying merges in rank order reproduces the trained
+      // dictionary segmentation for every fit-corpus word.
+      Stateless(docs, Bpe.segmentStatsWithMerges(_, merges),
+        Bpe.segmentStats(docs, "doc_id", "text", dict), { s =>
+          assert(s === rowSet(Bpe.segmentStatsWithMerges(docs, merges)))
+          // Unseen word: merge replay SEGMENTS it (the dict join only
+          // falls back to char count). Fit learned (a,b) then more:
+          // "ab" never appeared as a word, yet segments to one token.
+          val unseen = Bpe.segmentStatsWithMerges(
+              Seq((9L, "ab")).toDF("doc_id", "text"), merges)
+            .as[(Long, Long, Long, Long, Long)].collect().head
+          assert(unseen === ((9L, 1L, 1L, 2L, 20000L)))
+        })
+    },
+    "streaming delta-ingest triage ≡ batch corpusTriageScored; all four tiers; no state" -> { () =>
+      // Constructed so EVERY route fires, with a containment tie:
+      //  - delta 1 = corpus 10's token set reordered  -> exact
+      //  - delta 2 adds one token to corpus 10 (jr 10/11 ≈ 0.909) -> near
+      //  - delta 3 is fully inside corpus 20 (cont 1.0, jr 5/21)  -> contained
+      //  - delta 4 shares nothing            -> accepted
+      //  - delta 5 covers 9/10 of corpus 40 AND 50 equally (cont 0.9,
+      //    jr 9/11 < 0.9) -> contained, tie broken to the SMALLER id 40.
+      val corpus = Seq(
+        (10L, "a b c d e f g h i j"),
+        (20L, "p q r s t u v w x y z1 z2 z3 z4 z5 z6 z7 z8 z9 z10 z11"),
+        (40L, "m1 m2 m3 m4 m5 m6 m7 m8 m9 n40"),
+        (50L, "m1 m2 m3 m4 m5 m6 m7 m8 m9 n50"))
+      val delta = Seq(
+        (1L, "j i h g f e d c b a"),
+        (2L, "a b c d e f g h i j kk"),
+        (3L, "p q r s t"),
+        (4L, "zz yy ww"),
+        (5L, "m1 m2 m3 m4 m5 m6 m7 m8 m9 o5")).toDF("doc_id", "text")
+      // Null-text rows: skipped on the corpus side at fit, routed to
+      // 'accepted' on the scoring side — never a throw (the oracle's
+      // md5(NULL)/unnest(NULL) semantics).
+      val model = Dedup.fitCorpusTriage(
+        (corpus :+ (60L, null.asInstanceOf[String])).toDF("doc_id", "text"))
+      val batch = Dedup.corpusTriageScored(delta, model,
+        threshold = 0.9, containThreshold = 0.8)
+      Stateless(delta, Dedup.corpusTriageScored(_, model, 0.9, 0.8), batch, { _ =>
+        val nulled = Dedup.corpusTriageScored(
+            Seq((7L, null.asInstanceOf[String])).toDF("doc_id", "text"), model)
+          .as[(Long, String, Option[Long], Option[Double])].collect()
+        assert(nulled.toSeq === Seq((7L, "accepted", None, None)))
+        val b = batch.as[(Long, String, Option[Long], Option[Double])].collect().sortBy(_._1)
+        assert(b(0) === ((1L, "exact", Some(10L), Some(1.0d))))
+        assert(b(1)._2 === "near" && b(1)._3 === Some(10L) &&
+          b(1)._4 === Some(math.floor(10.0 / 11.0 * 10000 + 0.5) / 10000))
+        assert(b(2) === ((3L, "contained", Some(20L), Some(1.0d))))
+        assert(b(3) === ((4L, "accepted", None, None)))
+        assert(b(4) === ((5L, "contained", Some(40L), Some(0.9d))),
+          "containment tie must break to the smallest corpus id")
+        // The fit guard is a fail-fast limit probe, not an OOM.
+        val e = intercept[IllegalArgumentException](
+          Dedup.fitCorpusTriage(corpus.toDF("doc_id", "text"), maxPostingMass = 5L))
+        assert(e.getMessage.contains("distinct-token mass"))
+      })
+    })
+
+  for ((name, row) <- statelessRows) test(name) {
+    val r = row()
+    r.check(assertStreamMatchesBatch(r.in, r.op, r.batch))
   }
 
-  test("stateless PQ encoding on a vector stream ≡ batch encodePq; no state store") {
-    // Fit PQ in BATCH on the fixture embeddings, then encode the
-    // same vectors arriving as a JSON stream — the compression twin
-    // of cluster routing: exact parity, zero streaming state.
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
-    val model = graft.operators.Quantization.fitPq(emb, m = 8, ksub = 8, iters = 1)
-    val dir = Files.createTempDirectory(Paths.get("target"), "pq-landing")
-    emb.limit(64).coalesce(1).write.mode("overwrite").json(dir.resolve("in").toString)
-    val stream = spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-      .json(dir.resolve("in").toString)
-    val out = Files.createTempDirectory(Paths.get("target"), "pqout")
-    val q = EventStreams.writeParquetSink(
-      EventStreams.pqEncoded(stream, model), s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val streamed = spark.read.parquet(s"$out/data")
-      .collect().map(r => (r.getLong(0), r.getSeq[Int](1))).toSet
-    val ids = streamed.map(_._1)
-    val batch = graft.operators.Quantization
-      .encodePq(emb.filter(col("vec_id").isin(ids.toSeq: _*)), model)
-      .collect().map(r => (r.getLong(0), r.getSeq[Int](1))).toSet
-    assert(streamed === batch, "streaming and batch PQ encoding diverged")
-    assert(streamed.size === 64)
-    val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
-    assert(st.isEmpty, s"encoding must hold no streaming state: ${st.mkString(",")}")
-  }
-
-  test("stateless contamination scoring on a doc stream ≡ batch flagContaminated; no state") {
-    // Fit the eval shingle set in BATCH on a benchmark doc, stream a
-    // corpus where ids % 3 == 0 quote a benchmark passage (unique
-    // per-doc words otherwise, so clean docs share NO 3-gram), and
-    // require exact agreement with the join-based batch operator —
-    // two different algorithms for the same contract.
-    val corpus = (0L until 90L).map { i =>
-      val own = (1 to 6).map(j => s"u${i}w$j").mkString(" ")
-      val text = if (i % 3 == 0) s"$own the quoted benchmark passage ends" else own
-      (i, text)
-    }
-    val docs = corpus.toDF("doc_id", "text")
-    val evalSet = Seq((1000L, "intro the quoted benchmark passage ends outro"))
-      .toDF("doc_id", "text")
-    val model = graft.operators.Curation.collectEvalShingles(evalSet, n = 3)
-    val dir = Files.createTempDirectory(Paths.get("target"), "decon-landing")
-    docs.coalesce(1).write.mode("overwrite").json(dir.resolve("in").toString)
-    val stream = spark.readStream.schema("doc_id LONG, text STRING").json(dir.resolve("in").toString)
-    val out = Files.createTempDirectory(Paths.get("target"), "deconout")
-    val q = EventStreams.writeParquetSink(
-      EventStreams.contaminationScored(stream, model), s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val streamed = spark.read.parquet(s"$out/data")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val batch = graft.operators.Curation
-      .flagContaminated(docs, evalSet, n = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(streamed === batch, "streaming and batch decontamination diverged")
-    assert(streamed.size === 90)
-    assert(streamed.exists(_._3) && streamed.exists(!_._3),
-      "fixture must exercise both contaminated and clean outcomes")
-    val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
-    assert(st.isEmpty, s"scoring must hold no streaming state: ${st.mkString(",")}")
-  }
-
-  test("stateless model scoring on a document stream ≡ batch scoring; no state store in the plan") {
-    // Fit the model in BATCH on a small corpus, then score the same
-    // docs arriving as a stream — parity must be exact, and the
-    // streaming plan must contain no stateful operator at all.
-    val corpus = Seq((1L, "the cat sat"), (2L, "the cat spat"), (3L, "dog dog dog"),
-      (4L, "zq"), (5L, "the the the cat"))
-    val model = graft.operators.CharLm.collectModel(
-      corpus.toDF("doc_id", "text"), rareFactor = 10)
-    val dir = Files.createTempDirectory(Paths.get("target"), "docs-landing")
-    corpus.zipWithIndex.foreach { case ((id, t), i) =>
-      Files.writeString(dir.resolve(f"d$i%02d.json"), s"""{"doc_id":$id,"text":"$t"}""")
-    }
-    val stream = spark.readStream.schema("doc_id LONG, text STRING").json(dir.toString)
-    val scored = EventStreams.familiarityScored(stream, model)
-    val out = Files.createTempDirectory(Paths.get("target"), "scoreout")
-    val q = EventStreams.writeParquetSink(scored, s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val streamed = spark.read.parquet(s"$out/data")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val batch = graft.operators.CharLm.scoreWithModel(corpus.toDF("doc_id", "text"), model)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(streamed === batch, "streaming and batch model scoring diverged")
-    assert(streamed.size === corpus.size)
-    // Zero-state law: no state operator ever appears in progress.
-    val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
-    assert(st.isEmpty, s"scoring must hold no streaming state: ${st.mkString(",")}")
+  test("streaming dedup drops same-fingerprint arrivals within the watermark") {
+    // events 1 and 2 carry the same token SET ("hello world" vs
+    // "world hello") — the canonical fingerprint matches, so Spark's
+    // watermark-bounded dedup drops the second arrival; distinct
+    // content passes through.
+    val dir = writeLanding(Seq(
+      ev(1, 1 * H, 1, "hello world", 1.0),
+      ev(2, 1 * H + 10, 2, "world hello", 2.0),
+      ev(3, 1 * H + 20, 3, "fresh text", 3.0),
+      ev(4, 10 * H, 4, "sentinel", 0.0)))
+    val src = readEventsJson(dir)
+      .withColumn("event_time", EventStreams.tsCol)
+      .withColumn("fp", graft.functions.TextFunctions.canonicalFingerprint(col("event_type")))
+    val out = Files.createTempDirectory(Paths.get("target"), "dedupout")
+    val q = src
+      .withWatermark("event_time", "2 hours")
+      .dropDuplicatesWithinWatermark("fp")
+      .writeStream
+      .format("parquet")
+      .option("path", s"$out/data")
+      .option("checkpointLocation", s"$out/ckpt")
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(120000)
+    val got = spark.read.parquet(s"$out/data")
+      .select("event_id").as[Long].collect().toSet
+    assert(got == Set(1L, 3L, 4L))
   }
 
   test("stream-static enrichment join ≡ batch join+window; join holds no state") {
@@ -183,63 +268,6 @@ class EventStreamsSpec extends SparkSuite {
     assert(st.length === 1, s"only the window aggregate may hold state: $st")
   }
 
-  test("streaming blocklist matching ≡ batch blocklistHits; no state store in the plan") {
-    val corpus = Seq((1L, "she sells seashells"), (2L, "clean text"),
-      (3L, "sea she sea"), (4L, "nothing here"))
-    val patterns = Seq("she", "sea", "zzz")
-    val dir = Files.createTempDirectory(Paths.get("target"), "bl-landing")
-    corpus.zipWithIndex.foreach { case ((id, t), i) =>
-      Files.writeString(dir.resolve(f"d$i%02d.json"), s"""{"doc_id":$id,"text":"$t"}""")
-    }
-    val stream = spark.readStream.schema("doc_id LONG, text STRING").json(dir.toString)
-    val scored = EventStreams.blocklistScored(stream, patterns)
-    val out = Files.createTempDirectory(Paths.get("target"), "blout")
-    val q = EventStreams.writeParquetSink(scored, s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val streamed = spark.read.parquet(s"$out/data")
-      .as[(Long, String, Long)].collect().toSet
-    val batch = graft.operators.Curation
-      .blocklistHits(corpus.toDF("doc_id", "text"), patterns)
-      .as[(Long, String, Long)].collect().toSet
-    assert(streamed === batch, "streaming and batch blocklist matching diverged")
-    assert(streamed.exists(_._1 == 3L) && !streamed.exists(_._1 == 4L),
-      "fixture must exercise both hit and miss documents")
-    val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
-    assert(st.isEmpty, s"matching must hold no streaming state: ${st.mkString(",")}")
-  }
-
-  test("streaming DSIR scoring ≡ the batch census-join plan on the fit corpus; no state") {
-    // Fit the censuses in BATCH (target = the alpha-speaking half),
-    // then score the same docs as a stream through the collected
-    // model — parity with the census-JOIN batch plan must be exact,
-    // which pins the kernel's bucket scheme and fixed-point log to
-    // the SQL spelling.
-    val corpus = Seq((1L, "alpha beta gamma alpha"), (2L, "alpha beta beta"),
-      (3L, "delta epsilon zeta"), (4L, "delta delta epsilon"), (5L, "solo"))
-    val docs = corpus.toDF("doc_id", "text")
-    val target = docs.filter(col("doc_id") <= 2L)
-    val model = graft.operators.Curation.collectDsirModel(docs, target, n = 2,
-      buckets = 512)
-    val dir = Files.createTempDirectory(Paths.get("target"), "dsir-landing")
-    corpus.zipWithIndex.foreach { case ((id, t), i) =>
-      Files.writeString(dir.resolve(f"d$i%02d.json"), s"""{"doc_id":$id,"text":"$t"}""")
-    }
-    val stream = spark.readStream.schema("doc_id LONG, text STRING").json(dir.toString)
-    val scored = EventStreams.dsirScored(stream, model)
-    val out = Files.createTempDirectory(Paths.get("target"), "dsirout")
-    val q = EventStreams.writeParquetSink(scored, s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val streamed = spark.read.parquet(s"$out/data")
-      .as[(Long, Long, Long)].collect().toSet
-    val batch = graft.operators.Curation.dsirImportance(docs, target, n = 2,
-        buckets = 512)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(streamed === batch, "streaming DSIR diverged from the census-join batch plan")
-    assert(streamed.size === corpus.size)
-    val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
-    assert(st.isEmpty, s"scoring must hold no streaming state: ${st.mkString(",")}")
-  }
-
   test("watermarked hourly window aggregate over file arrivals") {
     // The sentinel advances the watermark past the earlier windows;
     // its own window stays open and must NOT be emitted — that
@@ -251,7 +279,7 @@ class EventStreamsSpec extends SparkSuite {
       ev(4, 10 * H, 3, "sentinel", 0.0)))
     val out = Files.createTempDirectory(Paths.get("target"), "winout")
     val q = EventStreams.writeParquetSink(
-      EventStreams.hourlyCounts(EventStreams.readEventsJson(spark, dir)),
+      EventStreams.hourlyCounts(readEventsJson(dir)),
       s"$out/data", s"$out/ckpt")
     q.awaitTermination(60000)
     val got = spark.read.parquet(s"$out/data")
@@ -274,7 +302,7 @@ class EventStreamsSpec extends SparkSuite {
     val dir = writeLanding(rows)
     val out = Files.createTempDirectory(Paths.get("target"), "hllout")
     val q = EventStreams.writeParquetSink(
-      EventStreams.hllRegistersWindowed(EventStreams.readEventsJson(spark, dir), p = 6),
+      EventStreams.hllRegistersWindowed(readEventsJson(dir), p = 6),
       s"$out/data", s"$out/ckpt")
     q.awaitTermination(60000)
     val registers = spark.read.parquet(s"$out/data")
@@ -321,190 +349,6 @@ class EventStreamsSpec extends SparkSuite {
       "streamed-register pair algebra diverged from batch")
   }
 
-  test("streaming CMS cells match the batch sketch cell-for-cell on closed windows") {
-    val rows = Seq(
-      ev(1, 1 * H + 10, 1, "click", 1.0), ev(2, 1 * H + 20, 2, "click", 1.0),
-      ev(3, 1 * H + 30, 3, "click", 1.0), ev(4, 1 * H + 40, 1, "buy", 1.0),
-      ev(5, 1 * H + 50, 2, "buy", 1.0), ev(6, 1 * H + 60, 1, "refund", 1.0),
-      ev(7, 10 * H, 9, "sentinel", 0.0))
-    val dir = writeLanding(rows)
-    val out = Files.createTempDirectory(Paths.get("target"), "cmsout")
-    val q = EventStreams.writeParquetSink(
-      EventStreams.cmsRegistersWindowed(
-        EventStreams.readEventsJson(spark, dir), depth = 4, width = 64),
-      s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val streamed = spark.read.parquet(s"$out/data")
-      .select("d", "bucket", "cnt")
-      .as[(Int, Long, Long)].collect().toSet
-    val batch = graft.operators.Sketches.countMinSketch(
-        Seq("click", "click", "click", "buy", "buy", "refund").toDF("event_type"),
-        "event_type", depth = 4, width = 64)
-      .as[(Int, Long, Long)].collect().toSet
-    assert(streamed === batch,
-      "streaming CMS cells diverged from the batch sketch (or the open window leaked)")
-  }
-
-  test("streaming histogram bins finalize to the same percentiles as the batch sketch") {
-    // Values spread over several bins (incl. a negative one and a
-    // repeated bin) in hour 1; the sentinel closes the window.
-    val rows = Seq(
-      ev(1, 1 * H + 10, 1, "click", 1.30), ev(2, 1 * H + 20, 2, "click", 1.45),
-      ev(3, 1 * H + 30, 3, "click", -0.60), ev(4, 1 * H + 40, 4, "click", 7.25),
-      ev(5, 1 * H + 50, 5, "click", 2.10), ev(6, 1 * H + 60, 6, "buy", 0.40),
-      ev(7, 1 * H + 70, 7, "buy", 0.90),
-      ev(8, 10 * H, 9, "sentinel", 0.0))
-    val dir = writeLanding(rows)
-    val out = Files.createTempDirectory(Paths.get("target"), "histout")
-    val q = EventStreams.writeParquetSink(
-      EventStreams.histogramBinsWindowed(
-        EventStreams.readEventsJson(spark, dir), binsPerUnit = 4),
-      s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val sunk = spark.read.parquet(s"$out/data")
-    // Closed-window rows finalize through the SAME fold as batch…
-    val streamed = graft.operators.Sketches
-      .histogramPercentiles(sunk, Seq("window_start", "event_type"),
-        percentiles = Seq(50, 90), binsPerUnit = 4)
-      .collect()
-      .map(r => r.getAs[String]("event_type") ->
-        ((r.getAs[Double]("p50_est"), r.getAs[Double]("p90_est"), r.getAs[Long]("n")))).toMap
-    // …so they must equal batch binnedPercentiles over the same rows.
-    val batchInput = Seq(
-      ("click", 1.30), ("click", 1.45), ("click", -0.60), ("click", 7.25),
-      ("click", 2.10), ("buy", 0.40), ("buy", 0.90)).toDF("event_type", "value")
-    val batch = graft.operators.Sketches
-      .binnedPercentiles(batchInput, Seq("event_type"),
-        org.apache.spark.sql.functions.col("value"),
-        percentiles = Seq(50, 90), binsPerUnit = 4)
-      .collect()
-      .map(r => r.getAs[String]("event_type") ->
-        ((r.getAs[Double]("p50_est"), r.getAs[Double]("p90_est"), r.getAs[Long]("n")))).toMap
-    assert(streamed.keySet === Set("click", "buy"), "open sentinel window leaked")
-    assert(streamed === batch, "streaming and batch percentile sketches diverged")
-  }
-
-  test("streaming bottom-k sample matches batch bottomKSample on closed windows") {
-    // 8 click events and 3 buys in hour 1; k=4 forces real selection
-    // on the click stratum. The sentinel closes the window.
-    val rows = (1 to 8).map(i => ev(i.toLong, 1 * H + i * 10, i.toLong, "click", 1.0)) ++
-      (9 to 11).map(i => ev(i.toLong, 1 * H + i * 10, i.toLong, "buy", 1.0)) :+
-      ev(99, 10 * H, 99, "sentinel", 0.0)
-    val dir = writeLanding(rows)
-    val out = Files.createTempDirectory(Paths.get("target"), "kmvout")
-    val q = EventStreams.writeParquetSink(
-      EventStreams.bottomKSampleWindowed(EventStreams.readEventsJson(spark, dir), k = 4),
-      s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val streamed = spark.read.parquet(s"$out/data")
-      .select("event_type", "event_id", "rank", "sample_hash")
-      .as[(String, Long, Long, Long)].collect().toSet
-    // Batch twin over the same rows, stratum = event_type, id = event_id.
-    val batchInput = ((1 to 8).map(i => (i.toLong, "click")) ++ (9 to 11).map(i => (i.toLong, "buy")))
-      .toDF("event_id", "event_type")
-    val batch = graft.operators.Curation
-      .bottomKSample(batchInput, "event_type", k = 4, idCol = "event_id")
-      .select("event_type", "event_id", "rank", "sample_hash")
-      .as[(String, Long, Long, Long)].collect().toSet
-    assert(streamed.exists(_._1 == "click") && streamed.count(_._1 == "click") === 4)
-    assert(!streamed.exists(_._1 == "sentinel"), "open sentinel window leaked")
-    assert(streamed === batch, "streaming and batch bottom-k samples diverged")
-  }
-
-  test("streaming dedup drops same-fingerprint arrivals within the watermark") {
-    import org.apache.spark.sql.functions.{col, count, explode, lit, split}
-    // events 1 and 2 carry the same token SET ("hello world" vs
-    // "world hello") — the canonical fingerprint matches, so the
-    // second arrival is dropped; distinct content passes through.
-    val dir = writeLanding(Seq(
-      ev(1, 1 * H, 1, "hello world", 1.0),
-      ev(2, 1 * H + 10, 2, "world hello", 2.0),
-      ev(3, 1 * H + 20, 3, "fresh text", 3.0),
-      ev(4, 10 * H, 4, "sentinel", 0.0)))
-    val src = EventStreams.readEventsJson(spark, dir)
-      .withColumn("event_time", EventStreams.tsCol)
-      .withColumn("fp", graft.functions.TextFunctions.canonicalFingerprint(col("event_type")))
-    val out = Files.createTempDirectory(Paths.get("target"), "dedupout")
-    val q = EventStreams.dedupWithinWatermark(src, "fp", "event_time", "2 hours")
-      .writeStream
-      .format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val got = spark.read.parquet(s"$out/data")
-      .select("event_id").as[Long].collect().toSet
-    assert(got == Set(1L, 3L, 4L))
-  }
-
-  test("streaming LSH suppression drops near-dup band colliders within the watermark") {
-    import org.apache.spark.sql.functions.{array, col, explode, lit, slice, xxhash64}
-    val bands = 4; val rowsPerBand = 4
-    val tA = "alpha beta gamma delta epsilon zeta eta theta"
-    val tB = "theta eta zeta epsilon delta gamma beta alpha" // same SET as A
-    val tC = "alpha beta gamma delta epsilon zeta eta"       // near-dup of A (one word off)
-    val tD = "completely different words in this one here"
-    // Expected admissions computed batch-side with the same kernels.
-    // The operator's semantics: a doc is admitted iff every one of
-    // its band keys is unseen AND it is the lowest id carrying that
-    // key in its batch — i.e. processing docs in id order, a doc is
-    // admitted iff none of its keys were registered earlier, and
-    // EVERY doc registers its keys, suppressed or not (a band's
-    // first arrival claims it even when that doc loses another band).
-    val bandKeysOf: String => Set[Long] = { t =>
-      val keys = (0 until bands).map(b =>
-        xxhash64(lit(b), slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)))
-      Seq(t).toDF("text")
-        .select(graft.functions.GraftFunctions.minhash_sig(
-          graft.functions.TextFunctions.tokens(col("text")), bands * rowsPerBand).as("sig"))
-        .select(explode(array(keys: _*)).as("k")).as[Long].collect().toSet
-    }
-    var seen = Set.empty[Long]
-    val expected = Seq(1L -> tA, 2L -> tB, 3L -> tC, 4L -> tD).collect {
-      case (id, t) if {
-        val ks = bandKeysOf(t); val admit = (ks & seen).isEmpty
-        seen ++= ks // suppressed docs register their first-arrival keys too
-        admit
-      } => id
-    }.toSet
-    assert(expected.contains(1L) && !expected.contains(2L),
-      "identical-set doc must collide on every band")
-    assert(expected.contains(4L), "distinct doc must not collide")
-
-    // One file PER DOC: the micro-batch reads them partition-parallel,
-    // so per-band arrival order is nondeterministic — admissions must
-    // come out deterministic (min-id winners) anyway.
-    val dir = writeLandingFilePerLine(Seq(
-      ev(1, 1 * H, 1, tA, 1.0),
-      ev(2, 1 * H + 10, 2, tB, 2.0),
-      ev(3, 1 * H + 20, 3, tC, 3.0),
-      ev(4, 1 * H + 30, 4, tD, 4.0),
-      ev(5, 10 * H, 5, "sentinel advances the watermark", 0.0)))
-    val src = EventStreams.readEventsJson(spark, dir)
-      .withColumn("event_time", EventStreams.tsCol)
-    val out = Files.createTempDirectory(Paths.get("target"), "lshout")
-    val q = EventStreams.lshNearDupWithinWatermark(
-        src, textCol = "event_type", idCol = "event_id",
-        eventTimeCol = "event_time", watermark = "2 hours",
-        bands = bands, rowsPerBand = rowsPerBand)
-      .writeStream
-      .format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val got = spark.read.parquet(s"$out/data")
-      .select("event_id").as[Long].collect().toSet
-    // The sentinel's own event time is never passed by the watermark,
-    // so it must not be emitted — that non-emission is the
-    // watermark-delayed admission working.
-    assert(got == expected, s"streaming admissions $got != batch-computed $expected")
-  }
-
   test("streaming sessions ≡ batch sessionize aggregation on closed sessions") {
     // Same event set through both sessionizers: the streaming
     // flatMapGroupsWithState path (30-min gap, watermark-closed) and
@@ -521,7 +365,7 @@ class EventStreamsSpec extends SparkSuite {
     val out = Files.createTempDirectory(Paths.get("target"), "sessparity")
     val q = EventStreams.writeParquetSink(
       EventStreams.sessionize(
-        EventStreams.readEventsJson(spark, dir), gapMinutes = 30).toDF(),
+        readEventsJson(dir), gapMinutes = 30).toDF(),
       s"$out/data", s"$out/ckpt")
     q.awaitTermination(60000)
     val streamed = spark.read.parquet(s"$out/data")
@@ -562,7 +406,7 @@ class EventStreamsSpec extends SparkSuite {
     val outW = Files.createTempDirectory(Paths.get("target"), "sesswin")
     val qw = EventStreams.writeParquetSink(
       EventStreams.sessionWindowAgg(
-        EventStreams.readEventsJson(spark, dir), gapMinutes = 30),
+        readEventsJson(dir), gapMinutes = 30),
       s"$outW/data", s"$outW/ckpt")
     qw.awaitTermination(60000)
     val windowed = spark.read.parquet(s"$outW/data")
@@ -571,7 +415,7 @@ class EventStreamsSpec extends SparkSuite {
     val outS = Files.createTempDirectory(Paths.get("target"), "sessstate")
     val qs = EventStreams.writeParquetSink(
       EventStreams.sessionize(
-        EventStreams.readEventsJson(spark, dir), gapMinutes = 30).toDF(),
+        readEventsJson(dir), gapMinutes = 30).toDF(),
       s"$outS/data", s"$outS/ckpt")
     qs.awaitTermination(60000)
     val stateful = spark.read.parquet(s"$outS/data")
@@ -598,7 +442,7 @@ class EventStreamsSpec extends SparkSuite {
     val dir = writeLandingFilePerLine(rows)
     val sink = s"sessbound_${System.nanoTime()}"
     val q = EventStreams.sessionWindowAgg(
-        EventStreams.readEventsJson(spark, dir), gapMinutes = 30)
+        readEventsJson(dir), gapMinutes = 30)
       .writeStream.format("memory").queryName(sink).outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
     val emitted = spark.table(sink).select("user_id")
@@ -631,7 +475,7 @@ class EventStreamsSpec extends SparkSuite {
       val dir = writeLandingFilePerLine(lines)
       val sink = s"sessrand_${System.nanoTime()}"
       val q = EventStreams.sessionWindowAgg(
-          EventStreams.readEventsJson(spark, dir), gapMinutes = 30)
+          readEventsJson(dir), gapMinutes = 30)
         .writeStream.format("memory").queryName(sink).outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
       val got = spark.table(sink)
@@ -668,7 +512,7 @@ class EventStreamsSpec extends SparkSuite {
       ev(5, 10 * H, 3, "w", 0.0)))
     val out = Files.createTempDirectory(Paths.get("target"), "sessout")
     val sessions = EventStreams.sessionize(
-      EventStreams.readEventsJson(spark, dir), gapMinutes = 30)
+      readEventsJson(dir), gapMinutes = 30)
     val q = sessions.writeStream
       .format("parquet")
       .option("path", s"$out/data")
@@ -701,7 +545,7 @@ class EventStreamsSpec extends SparkSuite {
       ev(4, 20L * H, 99, "w", 0.0))) // sentinel advances the watermark
     val out = Files.createTempDirectory(Paths.get("target"), "q205pin")
     val q = EventStreams.sessionize(
-        EventStreams.readEventsJson(spark, dir), gapMinutes = 30)
+        readEventsJson(dir), gapMinutes = 30)
       .writeStream.format("parquet")
       .option("path", s"$out/data").option("checkpointLocation", s"$out/ckpt")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
@@ -709,50 +553,6 @@ class EventStreamsSpec extends SparkSuite {
     val users = spark.read.parquet(s"$out/data")
       .select("userId").as[Long].collect().toSet
     assert(users === Set(11L), s"timeout boundary drifted: flushed users = $users")
-  }
-
-  test("windowed drift: streamed histogram bins scored against a batch baseline ≡ batch scoring") {
-    // baseline = the corpus' pooled value histogram (fit in batch);
-    // the stream's closed hourly windows are then drift-scored
-    // against it — live monitoring against last week's shape.
-    val rows = Seq(
-      ev(1, 1 * H + 10, 1, "click", 1.30), ev(2, 1 * H + 20, 2, "click", 1.45),
-      ev(3, 1 * H + 30, 3, "click", -0.60), ev(4, 1 * H + 40, 4, "click", 7.25),
-      ev(5, 1 * H + 50, 5, "click", 2.10), ev(6, 1 * H + 60, 6, "buy", 0.40),
-      ev(7, 1 * H + 70, 7, "buy", 0.90),
-      ev(8, 10 * H, 9, "sentinel", 0.0))
-    val baseline = graft.operators.Stats.fitHistogramBaseline(
-      Seq(1.30, 1.45, -0.60, 7.25, 2.10, 0.40, 0.90, 3.3, 3.4).toDF("value"),
-      col("value"), binsPerUnit = 4)
-    val dir = writeLanding(rows)
-    val out = Files.createTempDirectory(Paths.get("target"), "driftout")
-    val q = EventStreams.writeParquetSink(
-      EventStreams.histogramBinsWindowed(
-        EventStreams.readEventsJson(spark, dir), binsPerUnit = 4),
-      s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val sunkBins = spark.read.parquet(s"$out/data")
-    def score(bins: org.apache.spark.sql.DataFrame) =
-      graft.operators.Stats.chiSquareVsBaseline(
-          bins, Seq("window_start", "event_type"), "bin", "cnt", baseline)
-        .collect().map(r => (r.getAs[String]("event_type"),
-          r.getAs[Long]("n"), r.getAs[Double]("chi2"), r.getAs[Long]("n_unseen"))).toSet
-    val streamed = score(sunkBins)
-    // batch twin: the same rows binned declaratively
-    val batchBins = Seq(
-      ("click", 1.30), ("click", 1.45), ("click", -0.60), ("click", 7.25),
-      ("click", 2.10), ("buy", 0.40), ("buy", 0.90)).toDF("event_type", "value")
-      .withColumn("window_start",
-        org.apache.spark.sql.functions.lit(new java.sql.Timestamp(3600L * 1000L)))
-      .groupBy(col("window_start"), col("event_type"),
-        graft.operators.Sketches.histogramBin(col("value"), 4).as("bin"))
-      .agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("cnt"))
-    val batch = score(batchBins)
-    assert(streamed.map(t => (t._1, t._2, t._3, t._4)) ===
-      batch.map(t => (t._1, t._2, t._3, t._4)),
-      s"streamed drift scoring diverged: $streamed vs $batch")
-    assert(streamed.exists(_._2 > 0), "no closed windows scored")
   }
 
   test("stream-stream attribution join ≡ the same join on batch frames; join state present") {
@@ -773,8 +573,8 @@ class EventStreamsSpec extends SparkSuite {
     val clkDir = writeLanding(clkLines)
     val out = Files.createTempDirectory(Paths.get("target"), "attrout")
     val joined = EventStreams.attributionJoin(
-      EventStreams.readEventsJson(spark, impDir),
-      EventStreams.readEventsJson(spark, clkDir),
+      readEventsJson(impDir),
+      readEventsJson(clkDir),
       horizon = "1 hour")
     val q = EventStreams.writeParquetSink(joined, s"$out/data", s"$out/ckpt")
     q.awaitTermination(120000)
@@ -783,7 +583,7 @@ class EventStreamsSpec extends SparkSuite {
     // Twin claim: the SAME operator on batch frames (watermarks are
     // no-ops in batch) computes the expected pair set.
     def batchFrame(lines: Seq[String]) =
-      spark.read.schema(EventStreams.eventSchema).json(
+      spark.read.schema(eventSchema).json(
         spark.createDataset(lines)(org.apache.spark.sql.Encoders.STRING))
     val expected = EventStreams.attributionJoin(
         batchFrame(impLines), batchFrame(clkLines), horizon = "1 hour")
@@ -827,8 +627,8 @@ class EventStreamsSpec extends SparkSuite {
     Files.writeString(clkDir.resolve("part2.json"), ev(999, 200 * H, 777, "click", 1.0))
     val out = Files.createTempDirectory(Paths.get("target"), "attrlout")
     val joined = EventStreams.attributionJoin(
-      EventStreams.readEventsJson(spark, writeLanding(impLines)),
-      EventStreams.readEventsJson(spark, clkDir.toString, maxFilesPerTrigger = 1),
+      readEventsJson(writeLanding(impLines)),
+      readEventsJson(clkDir.toString, maxFilesPerTrigger = 1),
       horizon = "1 hour", joinType = "left_outer")
     val q = EventStreams.writeParquetSink(joined, s"$out/data", s"$out/ckpt")
     q.awaitTermination(120000)
@@ -839,215 +639,5 @@ class EventStreamsSpec extends SparkSuite {
       (1L, 100L, Some(200L)), (1L, 102L, Some(201L)), (1L, 103L, Some(201L)),
       (2L, 101L, Some(204L)), (9L, 104L, None)),
       s"left-outer attribution diverged: $streamed")
-  }
-
-  test("streaming windowed validation ≡ batch report on closed windows; bad checks fail fast") {
-    import graft.operators.Validation
-    import Validation.{Complete, InRange, InSet, Unique}
-    // Hour-1 traffic: a null value (completeness), an out-of-range
-    // value, an off-domain type — every check kind violates at least
-    // once AND passes at least once; the sentinel closes hour 1.
-    def raw(id: Long, ts: Long, typ: String, value: String): String =
-      s"""{"event_id":$id,"ts":$ts,"user_id":1,"event_type":"$typ","value":$value,"props":"{}"}"""
-    val rows = Seq(
-      raw(1, 1 * H + 10, "click", "1.5"), raw(2, 1 * H + 20, "click", "null"),
-      raw(3, 1 * H + 30, "zzz", "99.0"), raw(4, 1 * H + 40, "buy", "-3.0"),
-      raw(5, 1 * H + 50, "click", "2.5"),
-      raw(6, 10 * H, "sentinel", "0.0"))
-    val checks = Seq(
-      Complete("v_complete", "value", minRatio = 0.9),
-      InRange("v_range", "value", 0.0, 10.0),
-      InSet("t_domain", "event_type", Seq("click", "buy", "sentinel")))
-    val dir = writeLanding(rows)
-    val out = Files.createTempDirectory(Paths.get("target"), "valout")
-    val q = EventStreams.writeParquetSink(
-      EventStreams.validationWindowed(EventStreams.readEventsJson(spark, dir), checks),
-      s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val got = spark.read.parquet(s"$out/data").collect()
-      .map(r => r.getString(1) -> ((r.getString(2), r.getDouble(3),
-        r.getLong(4), r.getLong(5))))
-    assert(got.length === 3, s"expected one closed window x 3 checks: ${got.toSeq}")
-    // The shared compiled kernel makes this definitional, but pin it:
-    // the closed window's report equals the batch report of its rows.
-    val batchInput = Seq(
-      (Option(1.5d), "click"), (None: Option[Double], "click"),
-      (Option(99.0d), "zzz"), (Option(-3.0d), "buy"), (Option(2.5d), "click"))
-      .toDF("value", "event_type")
-    val batch = Validation.report(batchInput, checks).collect()
-      .map(r => r.getString(0) -> ((r.getString(1), r.getDouble(2),
-        r.getLong(3), r.getLong(4))))
-    assert(got.toMap === batch.toMap, "streamed window diverged from batch report")
-    // 4/5 complete fails the 0.9 floor; both violation checks flag.
-    val byName = got.toMap
-    assert(byName("v_complete")._4 === 0L && byName("v_complete")._3 === 1L)
-    assert(byName("v_range")._3 === 2L && byName("t_domain")._3 === 1L)
-    // Distinct counts need the HLL window, not this op.
-    intercept[IllegalArgumentException](
-      EventStreams.validationWindowed(
-        EventStreams.readEventsJson(spark, dir), Seq(Unique("u", "event_id"))))
-  }
-
-  test("streaming seasonal: closed hourly buckets + batch profile ≡ batch seasonalBaseline; spike pages") {
-    import graft.operators.Temporal
-    // Hours 1,25,49 share slot 1 (period 24): counts 2,2,8 — the
-    // hour-49 spike must page. Sentinel closes the watermark.
-    val rows = Seq(
-      ev(1, 1 * H + 10, 1, "click", 1.0), ev(2, 1 * H + 20, 2, "click", 1.0),
-      ev(3, 25 * H + 10, 3, "click", 1.0), ev(4, 25 * H + 20, 4, "click", 1.0)) ++
-      (10 to 17).map(i => ev(i, 49 * H + i, i, "click", 1.0)) :+
-      ev(99, 200 * H, 9, "sentinel", 0.0)
-    val dir = writeLanding(rows)
-    val out = Files.createTempDirectory(Paths.get("target"), "seasout")
-    val q = EventStreams.writeParquetSink(
-      EventStreams.bucketCountsWindowed(EventStreams.readEventsJson(spark, dir)),
-      s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val streamedBuckets = spark.read.parquet(s"$out/data")
-    val closed = streamedBuckets.select("bucket").as[Long].collect().toSet
-    assert(closed === Set(1L, 25L, 49L), s"closed buckets: $closed")
-    val batchDf = spark.read
-      .schema("event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
-      .json(dir)
-    val batchBuckets = Temporal.bucketCounts(batchDf, "ts", 3600000000000L)
-    val profile = Temporal.seasonalProfile(batchBuckets, 24)
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getBoolean(5))).toSet
-    val streamedScored = key(Temporal.scoreSeasonal(streamedBuckets, profile, 24))
-    val batchScored = key(Temporal.scoreSeasonal(
-      batchBuckets.filter(col("bucket").isin(closed.toSeq: _*)), profile, 24))
-    assert(streamedScored === batchScored,
-      "streamed seasonal scoring diverged from the batch kernel")
-    assert(streamedScored.exists(_._6), "the hour-49 spike must page")
-    assert(streamedScored.count(!_._6) >= 2, "normal hours must not page")
-  }
-
-  test("streaming BM25 scoring ≡ batch ranker arithmetic on fit corpus; stateless") {
-    import graft.operators.TextRank
-    val corpus = Seq(
-      (1L, "spark window dup x"), (2L, "spark spark y z"),
-      (3L, "window a b c d e f g"), (4L, "x y z"), (5L, "dup"))
-    val docs = corpus.toDF("doc_id", "text")
-    val terms = Seq("spark", "window", "dup")
-    val model = TextRank.collectBm25Model(docs, terms)
-    val batch = TextRank.bm25Search(docs, "doc_id", "text", terms, k = 10)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val dir = Files.createTempDirectory(Paths.get("target"), "bm25-landing")
-    corpus.zipWithIndex.foreach { case ((id, t), i) =>
-      Files.writeString(dir.resolve(f"d$i%02d.json"), s"""{"doc_id":$id,"text":"$t"}""")
-    }
-    val stream = spark.readStream.schema("doc_id LONG, text STRING").json(dir.toString)
-    val out = Files.createTempDirectory(Paths.get("target"), "bm25out")
-    val q = EventStreams.writeParquetSink(
-      EventStreams.bm25Scored(stream, model, terms), s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val streamed = spark.read.parquet(s"$out/data")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(streamed === batch,
-      "streaming BM25 scores diverged from the batch ranker arithmetic")
-    assert(streamed.size === 4, "doc 4 matches no term and must not emit")
-    val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
-    assert(st.isEmpty, s"scoring must hold no streaming state: ${st.mkString(",")}")
-  }
-
-  test("streaming BPE segmentation ≡ batch dict-join on fit corpus; stateless; unseen words segment") {
-    import graft.operators.Bpe
-    val corpus = Seq((1L, "abab abab"), (2L, "abab ab"), (3L, "ba ba abab"))
-    val docs = corpus.toDF("doc_id", "text")
-    val words = docs.select(explode(split(col("text"), " ")).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-    val (mergeDf, dict) = Bpe.learnMerges(words, "word", "freq", 4)
-    val merges = Bpe.collectMerges(mergeDf)
-    // Batch parity: applying merges in rank order reproduces the
-    // trained dictionary segmentation for every fit-corpus word.
-    val stateless = Bpe.segmentStatsWithMerges(docs, merges)
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    val dictJoin = Bpe.segmentStats(docs, "doc_id", "text", dict)
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    assert(stateless === dictJoin, "merge-replay segmentation diverged from the trained dict")
-    // Unseen word: the stateless path SEGMENTS it (dict-join only
-    // falls back to char count). Fit learned (a,b) then more: "ab"
-    // never appeared as a word, yet segments to one token.
-    val unseen = Bpe.segmentStatsWithMerges(
-        Seq((9L, "ab")).toDF("doc_id", "text"), merges)
-      .as[(Long, Long, Long, Long, Long)].collect().head
-    assert(unseen === ((9L, 1L, 1L, 2L, 20000L)))
-    // Streaming: same stateless projection over a file stream.
-    val dir = Files.createTempDirectory(Paths.get("target"), "bpe-landing")
-    corpus.zipWithIndex.foreach { case ((id, t), i) =>
-      Files.writeString(dir.resolve(f"d$i%02d.json"), s"""{"doc_id":$id,"text":"$t"}""")
-    }
-    val stream = spark.readStream.schema("doc_id LONG, text STRING").json(dir.toString)
-    val out = Files.createTempDirectory(Paths.get("target"), "bpeout")
-    val q = EventStreams.writeParquetSink(
-      EventStreams.bpeSegmented(stream, merges), s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val streamed = spark.read.parquet(s"$out/data")
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    assert(streamed === stateless, "streaming BPE diverged from batch")
-    val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
-    assert(st.isEmpty, s"segmentation must hold no streaming state: ${st.mkString(",")}")
-  }
-
-  test("streaming delta-ingest triage ≡ batch corpusTriageScored; all four tiers; no state") {
-    import graft.operators.Dedup
-    // Constructed so EVERY route fires, with a containment tie:
-    //  - delta 1 = corpus 10's token set reordered  -> exact
-    //  - delta 2 adds one token to corpus 10 (jr 10/11 ≈ 0.909) -> near
-    //  - delta 3 is fully inside corpus 20 (cont 1.0, jr 5/21)  -> contained
-    //  - delta 4 shares nothing            -> accepted
-    //  - delta 5 covers 9/10 of corpus 40 AND 50 equally (cont 0.9,
-    //    jr 9/11 < 0.9) -> contained, tie broken to the SMALLER id 40.
-    val corpus = Seq(
-      (10L, "a b c d e f g h i j"),
-      (20L, "p q r s t u v w x y z1 z2 z3 z4 z5 z6 z7 z8 z9 z10 z11"),
-      (40L, "m1 m2 m3 m4 m5 m6 m7 m8 m9 n40"),
-      (50L, "m1 m2 m3 m4 m5 m6 m7 m8 m9 n50"))
-    val delta = Seq(
-      (1L, "j i h g f e d c b a"),
-      (2L, "a b c d e f g h i j kk"),
-      (3L, "p q r s t"),
-      (4L, "zz yy ww"),
-      (5L, "m1 m2 m3 m4 m5 m6 m7 m8 m9 o5"))
-    // Null-text rows: skipped on the corpus side at fit, routed to
-    // 'accepted' on the scoring side — never a throw (the oracle's
-    // md5(NULL)/unnest(NULL) semantics).
-    val model = Dedup.fitCorpusTriage(
-      (corpus :+ (60L, null.asInstanceOf[String])).toDF("doc_id", "text"))
-    val nulled = Dedup.corpusTriageScored(
-        Seq((7L, null.asInstanceOf[String])).toDF("doc_id", "text"), model)
-      .as[(Long, String, Option[Long], Option[Double])].collect()
-    assert(nulled.toSeq === Seq((7L, "accepted", None, None)))
-    val batch = Dedup.corpusTriageScored(delta.toDF("doc_id", "text"), model,
-        threshold = 0.9, containThreshold = 0.8)
-      .as[(Long, String, Option[Long], Option[Double])].collect().sortBy(_._1)
-    assert(batch(0) === ((1L, "exact", Some(10L), Some(1.0d))))
-    assert(batch(1)._2 === "near" && batch(1)._3 === Some(10L) &&
-      batch(1)._4 === Some(math.floor(10.0 / 11.0 * 10000 + 0.5) / 10000))
-    assert(batch(2) === ((3L, "contained", Some(20L), Some(1.0d))))
-    assert(batch(3) === ((4L, "accepted", None, None)))
-    assert(batch(4) === ((5L, "contained", Some(40L), Some(0.9d))),
-      "containment tie must break to the smallest corpus id")
-    // Streaming: the SAME stateless projection over a file stream.
-    val dir = Files.createTempDirectory(Paths.get("target"), "triage-landing")
-    delta.zipWithIndex.foreach { case ((id, t), i) =>
-      Files.writeString(dir.resolve(f"d$i%02d.json"), s"""{"doc_id":$id,"text":"$t"}""")
-    }
-    val stream = spark.readStream.schema("doc_id LONG, text STRING").json(dir.toString)
-    val out = Files.createTempDirectory(Paths.get("target"), "triageout")
-    val q = EventStreams.writeParquetSink(
-      EventStreams.triageScored(stream, model, 0.9, 0.8), s"$out/data", s"$out/ckpt")
-    q.awaitTermination(60000)
-    val streamed = spark.read.parquet(s"$out/data")
-      .as[(Long, String, Option[Long], Option[Double])].collect().sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq, "streaming triage diverged from batch")
-    val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators)
-    assert(st.isEmpty, s"triage must hold no streaming state: ${st.mkString(",")}")
-    // The fit guard is a fail-fast limit probe, not an OOM.
-    val e = intercept[IllegalArgumentException](
-      Dedup.fitCorpusTriage(corpus.toDF("doc_id", "text"), maxPostingMass = 5L))
-    assert(e.getMessage.contains("distinct-token mass"))
   }
 }
